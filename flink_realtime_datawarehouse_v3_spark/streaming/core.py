@@ -146,25 +146,12 @@ def _await_or_raise(q, timeout_s: int) -> None:
 
 
 def run_to_memory(
-    sdf: DataFrame,
-    output_mode: str = "append",
-    timeout_s: int = 600,
-    n_partitions: int | None = None,
+    sdf: DataFrame, output_mode: str = "append", timeout_s: int = 600
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a memory
-    sink; return the sink contents as a batch DataFrame.
-
-    ``n_partitions`` overrides the low replay default (8): the default
-    minimizes per-batch state-store snapshot overhead for MULTI-operator
-    join replays, but a single stateful operator whose per-key work runs
-    in Python (applyInPandasWithState) is bottlenecked on Python-side
-    CPU, which parallelizes exactly as wide as the state partitioning —
-    there, match the partition count to the cores (r12: the debounce
-    replay dropped ~3x by not starving 32 cores with 8 partitions)."""
+    sink; return the sink contents as a batch DataFrame."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    with _StreamShufflePartitions(
-        sdf.sparkSession, **({"n": n_partitions} if n_partitions else {})
-    ):
+    with _StreamShufflePartitions(sdf.sparkSession):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -173,34 +160,7 @@ def run_to_memory(
             .start()
         )
     _await_or_raise(q, timeout_s)
-    if n_partitions:
-        _unload_state_store_providers(sdf.sparkSession)
     return sdf.sparkSession.table(name)
-
-
-def _unload_state_store_providers(spark) -> None:
-    """Synchronously unload every cached state-store provider.
-
-    A WIDENED replay (n_partitions at the core count) leaves that many
-    RocksDB provider instances — native memory + background threads —
-    in the executor's provider cache after the query terminates; the
-    asynchronous maintenance task only evicts them on its next tick, so
-    the replays that follow in a bench lane pay the overhang (r12
-    freeze: untouched 8-partition entries after the widened debounce
-    read up to 2x slower). Safe between replays: every replay uses a
-    fresh checkpoint dir, so nothing reuses a dropped provider — the
-    next query lazily reloads its own. Scoped to WIDENED runs only: an
-    r12 A/B of unloading after EVERY replay read 229.3 s vs 216.7 s
-    over the seven heaviest lane entries (the maintenance-pool restart
-    and cold provider caches cost multi-operator replays more than the
-    overhang saves)."""
-    getattr(
-        getattr(
-            spark._jvm,
-            "org.apache.spark.sql.execution.streaming.state.StateStore$",
-        ),
-        "MODULE$",
-    ).stop()
 
 
 def run_foreach_batch(

@@ -75,11 +75,6 @@ def _topic_db_cached(spark: SparkSession, sf_dir: str, only: list[str]) -> DataF
     return cdc.topic_db_parsed(spark, sf_dir, only=only)
 
 
-# mtime-order stamping lives in core.stamp_file_order (shared with
-# write_stream_input — ONE implementation of the batch-order invariant).
-_stamp_file_order = stamp_file_order
-
-
 def _max_from_footers(path: str, col: str) -> int:
     """Max of ``col`` over the part files just written under ``path``, read
     from the parquet row-group footer statistics — a driver-side metadata
@@ -176,7 +171,7 @@ def _write_replay(
             pad = os.path.join(path, f"zzz-sentinel-{i}-pad{j}.parquet")
             _pad_empty_like(dest, pad)
             sent_files.append(pad)
-    _stamp_file_order(path, sent_files)
+    stamp_file_order(path, sent_files)
     with open(os.path.join(path, "_replay_meta.json"), "w") as f:
         json.dump({"files_per_trigger": fpb}, f)
 
@@ -741,12 +736,9 @@ def stream_order_info_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = keep_latest_stream(s, keys=["id"], order_col="ts").filter(
             F.col("id") != "__sentinel__"
         )
-        # r14: back to the 8-partition replay default. The r12 widening
-        # (156.7 -> 58.0 s then) compensated for one Python call per
-        # order id per batch; the bucketed operator makes Python cheap
-        # and the A/B now reads wide 10.2 vs 8-partition 9.7 s min-of-3
-        # (a wash) — the default also skips the widened-replay
-        # state-store-provider unload the following entries paid for.
+        # The 8-partition replay default is enough: the bucketed
+        # operator makes Python cheap (a widened replay read 10.2 vs
+        # 9.7 s min-of-3, a wash).
         return run_to_memory(out, output_mode="append")
 
 
@@ -1473,10 +1465,6 @@ def stream_value_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = stateful.trailing_window_stream(
             s, timeseries.TRAIL_WINDOW_SEC
         )
-        # NOT widened (r12): isolated A/B read flat (21.8 -> 21.2 s at
-        # sf0.1 — 1.5k keys don't starve 8 partitions) and the in-lane
-        # freeze read 2x WORSE with 32 RocksDB instances; the widening
-        # pays only when the replay is key-bound (see the debounce).
         return run_to_memory(out).filter(F.col("user_id") >= 0)
 
 

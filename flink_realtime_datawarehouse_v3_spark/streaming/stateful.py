@@ -1,37 +1,50 @@
-"""Keyed-state streaming operators (SURVEY.md §2.6) via applyInPandasWithState.
+"""Keyed-state streaming operators (SURVEY.md §2.6) and keyed upsert sinks.
 
-These are the true-streaming twins of the batch window-function forms in
-:mod:`..operators.dedup`; the batch forms are the oracle in stream==batch
-parity tests (tests/test_streaming.py).
+The six keyed operators are the true-streaming twins of the batch
+window-function forms in :mod:`..operators.dedup` and
+:mod:`..operators.timeseries`; the batch forms are the oracle in the
+stream==batch parity tests (tests/test_streaming.py). Each one is a
+per-key transition on top of :func:`_bucketed_keyed_state`:
 
-- :func:`first_per_day_stream` — D1 UV dedup: per-key ValueState of the
-  last emitted date (reference: RT/app/dwd/DwdTrafficUniqueVisitorDetail.java:76-105,
+- :func:`first_per_day_stream` — D1 UV dedup: per-key last emitted date
+  (reference: RT/app/dwd/DwdTrafficUniqueVisitorDetail.java:76-105,
   state TTL 1 day == daily rollover of the date value).
-- :func:`is_new_repair_stream` — P8 new-visitor flag repair: ValueState of
-  the first-visit date, backfilled to "old" for visitors first seen with
+- :func:`is_new_repair_stream` — P8 new-visitor flag repair: the
+  first-visit date, backfilled to "old" for visitors first seen with
   is_new=0 (reference: RT/app/dwd/BaseLogApp.java:76-105).
+- :func:`keep_latest_stream` — D4/W6 keep-latest with a 5 s debounce
+  timer (reference: RT/app/dws/DwsTradePaymentSucWindow.java:85-121).
 - :func:`jump_detect_stream` — D5 CEP bounce detection: pending
-  session-start buffered in state, closed by the next event or a 10 s
-  event-time timeout (reference: RT/app/dwd/DwdTrafficUserJumpDetail.java:73-119;
-  matched ∪ timed-out first events).
-- :func:`upsert_sink` — K3 keyed last-writer-wins sink (upsert-kafka
-  equivalent; reference: RT/utils/MyKafkaUtil.java:112-121) as a
-  foreachBatch parquet MERGE.
+  session start closed by the next event or a 10 s event-time timeout
+  (reference: RT/app/dwd/DwdTrafficUserJumpDetail.java:73-119; matched
+  ∪ timed-out first events).
+- :func:`uv_jump_contrib_stream` — D1 and D5 as one keyed operator for
+  the 3-stream union window job.
+- :func:`trailing_window_stream` — watermark-exact trailing time-window
+  aggregate (the online feature-store shape).
 
-Rows are processed in (ts, tiebreak) order inside each key group and the
-replay harness feeds time-ordered micro-batches, so the state transitions
-see the same event order as the reference's Kafka consumption.
+The sinks: :func:`upsert_sink` — K3 keyed last-writer-wins sink
+(upsert-kafka equivalent; reference: RT/utils/MyKafkaUtil.java:112-121)
+as a foreachBatch parquet MERGE — and its snapshot-isolated twins
+:func:`upsert_sink_snapshot` / :func:`upsert_sink_snapshot_agg` with
+their readers, delete, export and vacuum.
+
+Rows are processed in (ts, tiebreak) order inside each key and the
+replay harness feeds time-ordered micro-batches, so the state
+transitions see the same event order as the reference's Kafka
+consumption.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+import pickle
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -41,59 +54,143 @@ from pyspark.sql.types import (
 )
 
 
-def _sorted_concat(pdfs: Iterator[pd.DataFrame], order: list[str]) -> pd.DataFrame:
-    chunks = [p for p in pdfs]
-    if not chunks:
-        return pd.DataFrame()
-    if len(chunks) == 1:
-        # common case: one Arrow batch per group — skip the concat copy
-        # (r13 optimization round; same sort, same rows)
-        return chunks[0].sort_values(order, kind="mergesort")
-    return pd.concat(chunks).sort_values(order, kind="mergesort")
+def _bucket_fn(cols, keys, order, out_cols, step, due=None, every_key=False):
+    """The per-bucket function of :func:`_bucketed_keyed_state`, kept
+    separate so it can be driven without Spark.
+
+    ``fn(bucket, pdfs, state)`` loads the bucket's pickled
+    ``{key: entry}`` dict, stable-sorts the call's rows by ``order``,
+    and calls ``step(entry, rows, wm, out)`` once per touched key with
+    that key's rows as ``cols`` tuples (``entry`` is None for a new
+    key). ``step`` appends output tuples to ``out`` and returns the new
+    entry, or None to drop the key. When the watermark ``wm`` is
+    positive, each untouched key whose ``due(entry) < wm`` is stepped
+    with no rows — its timer firing (every untouched key when
+    ``every_key``). A timed-out call is that sweep alone. The bucket
+    timer is ``max(wm, min due)`` over entries whose due is not None;
+    an emptied dict removes the state. Without ``due`` the watermark is
+    never read and no timer is set.
+    """
+    by_key = itemgetter(*[cols.index(k) for k in keys])
+    order_is = [cols.index(c) for c in order]
+
+    def nulls_last(row):
+        # pandas' na_position="last": nulls after every value, tied
+        return [(True, 0) if v is None or v != v else (False, v) for v in map(row.__getitem__, order_is)]
+
+    def fires(e, wm):
+        d = due(e)
+        return d is not None and d < wm
+
+    def fn(_bucket, pdfs, state):
+        wm = state.getCurrentWatermarkMs() if due else 0
+        ent = pickle.loads(bytes(state.get[0])) if state.exists else {}
+        out = []
+        touched: dict = {}
+        if not state.hasTimedOut:
+            # plain lists: pandas' per-call overhead (itertuples,
+            # sort_values) would dominate the few rows a bucket gets
+            rows = [r for p in pdfs for r in zip(*[p[c].tolist() for c in cols])]
+            rows.sort(key=nulls_last)  # stable
+            for row in rows:
+                touched.setdefault(by_key(row), []).append(row)
+        swept = []
+        if wm > 0:
+            swept = [
+                k
+                for k, e in ent.items()
+                if k not in touched and (every_key or fires(e, wm))
+            ]
+        for k, rows in [*touched.items(), *((k, ()) for k in swept)]:
+            e = step(ent.get(k), rows, wm, out)
+            if e is None:
+                ent.pop(k, None)
+            else:
+                ent[k] = e
+        if ent:
+            state.update((pickle.dumps(ent),))
+            dues = [d for d in map(due, ent.values()) if d is not None] if due else []
+            if dues:
+                state.setTimeoutTimestamp(max(wm, min(dues)))
+        else:
+            state.remove()
+        if out:
+            yield pd.DataFrame(out, columns=out_cols)
+
+    return fn
+
+
+def _bucketed_keyed_state(
+    df: DataFrame,
+    keys: list[str],
+    n_buckets: int,
+    order: list[str],
+    out_schema: StructType,
+    step,
+    due=None,
+    cols: list[str] | None = None,
+    every_key: bool = False,
+) -> DataFrame:
+    """Keyed state with per-key event-time timers on
+    ``applyInPandasWithState`` — the one place the keyed operators'
+    state and timer scaffolding lives.
+
+    Spark enters Python once per group per micro-batch, so grouping by
+    the key itself pays one Python call and one state-store row per
+    key (~450 k calls for ~150 k order ids over 4 batches). Groups are
+    instead ``n_buckets`` hash buckets ``pmod(xxhash64(keys),
+    n_buckets)``, each holding one pickled dict of per-key entries, and
+    :func:`_bucket_fn` runs each key's ``step`` inside the bucket. The
+    per-key semantics are those of one group per key: the stable sort
+    by ``order`` gives each key its rows in its own sorted order (same
+    tie-breaks), and Spark fires a per-key event-time timer exactly when
+    ``timeout < watermark`` — the strict ``due(entry) < wm`` sweep is
+    that firing predicate, evaluated against the same
+    ``getCurrentWatermarkMs()`` on every call, while the bucket timer at
+    the minimum pending due guarantees a call no later than the earliest
+    key would have fired. Keys touched by data in a call are not swept,
+    as a per-key group with data does not time out.
+
+    ``due`` (entry -> ms, or None for no timer) selects
+    ``EventTimeTimeout``; without it the operator runs ``NoTimeout``.
+    ``cols`` are the columns of the row tuples ``step`` sees (default:
+    the output columns); ``every_key`` steps every untouched key on
+    every call (see :func:`trailing_window_stream`).
+    """
+    out_cols = out_schema.fieldNames()
+    fn = _bucket_fn(cols or out_cols, keys, order, out_cols, step, due, every_key)
+    return (
+        df.withColumn(
+            "__bucket",
+            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)),
+        )
+        .groupBy("__bucket")
+        .applyInPandasWithState(
+            fn,
+            out_schema,
+            StructType([StructField("entries", BinaryType())]),
+            "append",
+            GroupStateTimeout.EventTimeTimeout if due else GroupStateTimeout.NoTimeout,
+        )
+    )
 
 
 def first_per_day_stream(
-    df: DataFrame,
-    key: str = "mid",
-    dt_col: str = "dt",
-    order: list[str] | None = None,
-    n_buckets: int = 256,
+    df: DataFrame, key: str = "mid", dt_col: str = "dt"
 ) -> DataFrame:
-    """Emit each key's first row per calendar day (streaming D1).
+    """Emit each key's first row per calendar day (streaming D1). The
+    entry is the key's last emitted date."""
+    dt_i = df.columns.index(dt_col)
 
-    Bucketed grouping (r14 optimization round, same scheme as
-    :func:`keep_latest_stream`): groups are hash buckets of ``key``; the
-    pickled dict state maps key -> last emitted date. Rows are
-    bucket-sorted stably by ``order`` so each key's subsequence is the
-    per-key sorted order; the per-key last-date transition is unchanged,
-    so the emitted row set is identical.
-    """
-    import pickle
+    def step(last, rows, wm, out):
+        for row in rows:
+            if row[dt_i] != last:
+                out.append(row)
+                last = row[dt_i]
+        return last
 
-    order = order or ["ts", "event_id"]
-    out_schema = df.schema
-    out_cols = [f.name for f in out_schema.fields]
-    state_schema = StructType([StructField("last_dts", BinaryType())])
-
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        pdf = _sorted_concat(pdfs, order)
-        if pdf.empty:
-            return
-        last = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        keep = []
-        for i, (k, row_dt) in enumerate(zip(pdf[key], pdf[dt_col])):
-            if row_dt != last.get(k):
-                keep.append(i)
-                last[k] = row_dt
-        state.update((pickle.dumps(last),))
-        yield pdf[out_cols].iloc[keep]
-
-    return (
-        df.withColumn("__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    return _bucketed_keyed_state(
+        df, [key], 256, ["ts", "event_id"], df.schema, step
     )
 
 
@@ -102,49 +199,26 @@ def is_new_repair_stream(
     key: str = "mid",
     dt_col: str = "dt",
     is_new_col: str = "is_new",
-    order: list[str] | None = None,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Repair the is_new flag with per-key first-visit-date state (P8).
 
-    State holds the first-visit date when the key's first event claimed
-    is_new=1, else the sentinel '' (visitor known old). is_new stays 1 only
-    while raw=1 and the event date equals the stored first-visit date.
-
-    Bucketed grouping (r14 optimization round, same scheme as
-    :func:`keep_latest_stream`): groups are hash buckets of ``key``; the
-    pickled dict state maps key -> first-visit date (or the '' sentinel).
-    The per-key transition below is unchanged.
+    The entry holds the first-visit date when the key's first event
+    claimed is_new=1, else the sentinel '' (visitor known old). is_new
+    stays 1 only while raw=1 and the event date equals the stored
+    first-visit date.
     """
-    import pickle
+    dt_i, new_i = df.columns.index(dt_col), df.columns.index(is_new_col)
 
-    order = order or ["ts", "event_id"]
-    out_schema = df.schema
-    out_cols = [f.name for f in out_schema.fields]
-    state_schema = StructType([StructField("first_dts", BinaryType())])
-
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        pdf = _sorted_concat(pdfs, order)
-        if pdf.empty:
-            return
-        first = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        fixed = []
-        for k, raw, row_dt in zip(pdf[key], pdf[is_new_col], pdf[dt_col]):
-            first_dt = first.get(k)
+    def step(first_dt, rows, wm, out):
+        for row in rows:
             if first_dt is None:
-                first_dt = row_dt if raw == "1" else ""
-                first[k] = first_dt
-            fixed.append("1" if (raw == "1" and row_dt == first_dt) else "0")
-        state.update((pickle.dumps(first),))
-        pdf = pdf[out_cols].assign(**{is_new_col: fixed})
-        yield pdf
+                first_dt = row[dt_i] if row[new_i] == "1" else ""
+            fixed = "1" if row[new_i] == "1" and row[dt_i] == first_dt else "0"
+            out.append((*row[:new_i], fixed, *row[new_i + 1:]))
+        return first_dt
 
-    return (
-        df.withColumn("__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    return _bucketed_keyed_state(
+        df, [key], 256, ["ts", "event_id"], df.schema, step
     )
 
 
@@ -156,7 +230,6 @@ def keep_latest_stream(
     keys: list[str],
     order_col: str,
     watermark_col: str = "rt",
-    n_buckets: int = 2048,
 ) -> DataFrame:
     """D4/W6 keep-LATEST per key with a 5 s debounce timer (reference:
     RT/app/dws/DwsTradePaymentSucWindow.java:85-121,
@@ -164,7 +237,8 @@ def keep_latest_stream(
     a burst anchors a timer 5 s out; rows arriving before it replace the
     buffered row if their ``order_col`` is newer; the timer emits the
     survivor and clears state — absorbing left-join retraction bursts
-    before the row is released downstream.
+    before the row is released downstream. The entry is (buffered row,
+    anchor ms).
 
     The reference's timer is processing-time; here it is EVENT-time
     (timeout at anchor + 5 s, fired by the watermark on
@@ -174,114 +248,35 @@ def keep_latest_stream(
     arrival-proximity IS event-proximity, so event time is the faithful
     bounded mapping — and makes emissions deterministic: one per (key,
     5 s burst), independent of how files split into micro-batches.
-
-    Bucketed grouping (r14 optimization round, guide §4.2/§2.3 "one
-    Python call per key per batch is the API floor — so group by fewer
-    keys"): the operator groups by a deterministic hash BUCKET of the
-    key (``pmod(xxhash64(keys), n_buckets)``) and keeps a dict of
-    per-key (buffered row, anchor) entries inside one pickled state
-    value, instead of one state row + one Python call per key. With
-    ~150 k order ids over 4 micro-batches the per-key form paid ~450 k
-    Python fn calls and state-store puts; the bucketed form pays
-    ``n_buckets`` per batch. Per-KEY semantics are unchanged:
-
-    - rows are bucket-sorted stably by ``order_col``, so each key's
-      subsequence is exactly the per-key sorted order (same tie-breaks);
-    - the per-key burst/anchor/keep-latest transitions below are the
-      r13 per-key loop verbatim;
-    - Spark fires a key's event-time timer when ``timeout < watermark``
-      (strict); the bucket keeps its timer at the MIN pending
-      ``anchor + 5 s`` and, on every call, emits exactly the keys with
-      ``anchor + 5 s < getCurrentWatermarkMs()`` — the same watermark
-      value (eventTimeWatermarkForEviction) the per-key firing predicate
-      used, so every key emits in the same micro-batch with the same
-      buffered row as the per-key form. Parity gates: the TWS
-      row-identity test, the split-invariance test, the anchor-semantics
-      test, and the registry oracle hash.
+    2048 buckets: the debounced order streams carry far more keys than
+    the page-log operators.
     """
-    import pickle
-
     out_schema = df.drop(watermark_col).schema
-    out_cols = [f.name for f in out_schema.fields]
-    oc_i = out_cols.index(order_col)
-    key_is = [out_cols.index(k) for k in keys]
-    state_schema = StructType([StructField("pending", BinaryType())])
+    oc_i = out_schema.fieldNames().index(order_col)
 
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            pending = pickle.loads(bytes(state.get[0]))
-            done, keep = [], {}
-            for k, (best, anchor) in pending.items():
-                if anchor + DEBOUNCE_MS < wm:
-                    done.append(best)
-                else:
-                    keep[k] = (best, anchor)
-            if keep:
-                state.update((pickle.dumps(keep),))
-                state.setTimeoutTimestamp(
-                    max(wm, min(a + DEBOUNCE_MS for _, a in keep.values()))
-                )
-            else:
-                state.remove()
-            if done:
-                yield pd.DataFrame(done, columns=out_cols)
-            return
-        pending = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        rows = []
-        for pdf in pdfs:
-            if len(pdf.index):
-                rows.extend(pdf[out_cols].itertuples(index=False, name=None))
-        done = []
-        touched = set()
-        if rows:
-            rows.sort(key=lambda r: r[oc_i])
-            for row in rows:
-                k = tuple(row[i] for i in key_is)
-                touched.add(k)
-                row_ms = int(row[oc_i]) * 1000
-                ent = pending.get(k)
-                if ent is None:
-                    pending[k] = (row, row_ms)
-                    continue
-                best, anchor = ent
-                if row_ms - anchor > DEBOUNCE_MS:
-                    done.append(best)  # burst closed in-stream
-                    pending[k] = (row, row_ms)
-                elif row[oc_i] >= best[oc_i]:
-                    pending[k] = (row, anchor)
-        if wm > 0 and len(touched) < len(pending):
-            # keys with no data this batch whose per-key timer would have
-            # fired (the per-key form's hasTimedOut call; suppressed here
-            # because the BUCKET received data).
-            for k in list(pending):
-                if k in touched:
-                    continue
-                best, anchor = pending[k]
-                if anchor + DEBOUNCE_MS < wm:
-                    done.append(best)
-                    del pending[k]
-        if pending:
-            state.update((pickle.dumps(pending),))
-            state.setTimeoutTimestamp(
-                max(wm, min(a + DEBOUNCE_MS for _, a in pending.values()))
-            )
-        else:
-            state.remove()
-        if done:
-            yield pd.DataFrame(done, columns=out_cols)
+    def step(ent, rows, wm, out):
+        if not rows:  # the debounce timer fired
+            out.append(ent[0])
+            return None
+        for row in rows:
+            row_ms = int(row[oc_i]) * 1000
+            if ent is None:
+                ent = (row, row_ms)
+            elif row_ms - ent[1] > DEBOUNCE_MS:
+                out.append(ent[0])  # burst closed in-stream
+                ent = (row, row_ms)
+            elif row[oc_i] >= ent[0][oc_i]:
+                ent = (row, ent[1])
+        return ent
 
-    return (
-        df.withWatermark(watermark_col, "2 seconds")
-        .withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)),
-        )
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _bucketed_keyed_state(
+        df.withWatermark(watermark_col, "2 seconds"),
+        keys,
+        2048,
+        [order_col],
+        out_schema,
+        step,
+        due=lambda ent: ent[1] + DEBOUNCE_MS,
     )
 
 
@@ -294,241 +289,185 @@ def jump_detect_stream(
     ts_col: str = "ts",
     last_page_col: str = "last_page_id",
     watermark_col: str = "rt",
-    order: list[str] | None = None,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Bounce detection (D5): a session start (last_page_id IS NULL) is a
     bounce unless a non-session-start event follows within 10 s.
 
-    The pending session start sits in keyed state with an event-time timeout
-    at pending_ts + 10 s; the watermark (driven by ``watermark_col``)
-    closes it when no successor arrives — the CEP ``within(10s)`` timeout
+    The entry is the pending session-start row, with an event-time timer
+    at its ts + 10 s; the watermark (driven by ``watermark_col``) closes
+    it when no successor arrives — the CEP ``within(10s)`` timeout
     side-output of the reference.
-
-    Bucketed grouping (r14 optimization round): same scheme as
-    :func:`keep_latest_stream` — groups are hash BUCKETS of ``key``, the
-    state is a pickled dict of per-key pending rows, the bucket timer
-    sits at the MIN pending ``ts + 10 s``, and on every call keys whose
-    per-key timer would have fired (``ts + 10 s < watermark``, the
-    per-key firing predicate verbatim) emit their pending row. Rows are
-    bucket-sorted stably by ``order`` so each key sees its rows in the
-    per-key order; the per-key transitions are the r13 loop verbatim.
     """
-    import pickle
-
-    order = order or [ts_col, "event_id"]
     out_schema = page.drop(watermark_col).schema
-    out_cols = [f.name for f in out_schema.fields]
-    ts_i = out_cols.index(ts_col)
-    lp_i = out_cols.index(last_page_col)
-    key_i = out_cols.index(key)
-    sort_is = [out_cols.index(c) for c in order]
-    state_schema = StructType([StructField("pending", BinaryType())])
+    cols = out_schema.fieldNames()
+    ts_i, lp_i = cols.index(ts_col), cols.index(last_page_col)
 
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            pending = pickle.loads(bytes(state.get[0]))
-            done, keep = [], {}
-            for k, row in pending.items():
-                if int(row[ts_i]) + JUMP_GAP_MS < wm:
-                    done.append(row)
-                else:
-                    keep[k] = row
-            if keep:
-                state.update((pickle.dumps(keep),))
-                state.setTimeoutTimestamp(
-                    max(wm, min(int(r[ts_i]) + JUMP_GAP_MS for r in keep.values()))
-                )
-            else:
-                state.remove()
-            if done:
-                yield pd.DataFrame(done, columns=out_cols)
-            return
-        pending = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        rows = []
-        for pdf in pdfs:
-            if len(pdf.index):
-                rows.extend(pdf[out_cols].itertuples(index=False, name=None))
-        bounces = []
-        touched = set()
-        if rows:
-            rows.sort(key=lambda r: tuple(r[i] for i in sort_is))
-            for row in rows:
-                k = row[key_i]
-                touched.add(k)
-                is_start = row[lp_i] is None or pd.isna(row[lp_i])
-                p = pending.get(k)
-                if p is not None:
-                    gap = row[ts_i] - p[ts_i]
-                    if gap > JUMP_GAP_MS:
-                        bounces.append(p)  # timed out in-stream
-                        if is_start:
-                            pending[k] = row
-                        else:
-                            del pending[k]
-                    elif is_start:
-                        bounces.append(p)  # matched: start -> start
-                        pending[k] = row
-                    else:
-                        del pending[k]  # successor page: not a bounce
-                elif is_start:
-                    pending[k] = row
-        if wm > 0:
-            for k in list(pending):
-                if k in touched:
-                    continue
-                row = pending[k]
-                if int(row[ts_i]) + JUMP_GAP_MS < wm:
-                    bounces.append(row)
-                    del pending[k]
-        if pending:
-            state.update((pickle.dumps(pending),))
-            state.setTimeoutTimestamp(
-                max(wm, min(int(r[ts_i]) + JUMP_GAP_MS for r in pending.values()))
-            )
-        else:
-            state.remove()
-        if bounces:
-            yield pd.DataFrame(bounces, columns=out_cols)
+    def step(pending, rows, wm, out):
+        if not rows:  # the 10 s timer fired: a bounce
+            out.append(pending)
+            return None
+        for row in rows:
+            is_start = row[lp_i] is None or pd.isna(row[lp_i])
+            if pending is not None and (
+                is_start or row[ts_i] - pending[ts_i] > JUMP_GAP_MS
+            ):
+                out.append(pending)  # start -> start, or timed out in-stream
+            pending = row if is_start else None
+        return pending
 
-    return (
-        page.withWatermark(watermark_col, "2 seconds")
-        .withColumn("__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    return _bucketed_keyed_state(
+        page.withWatermark(watermark_col, "2 seconds"),
+        [key],
+        256,
+        [ts_col, "event_id"],
+        out_schema,
+        step,
+        due=lambda pending: int(pending[ts_i]) + JUMP_GAP_MS,
     )
 
 
-def uv_jump_contrib_stream(
-    page: DataFrame,
-    watermark_col: str = "rt",
-    n_buckets: int = 256,
-) -> DataFrame:
+def uv_jump_contrib_stream(page: DataFrame, watermark_col: str = "rt") -> DataFrame:
     """Combined D1 + D5 keyed operator for the 3-stream union window job:
-    ONE applyInPandasWithState per mid computes both the first-visit-
-    per-day UV flag and CEP bounce detection, emitting rows pre-shaped as
+    ONE keyed state per mid computes both the first-visit-per-day UV
+    flag and CEP bounce detection, emitting rows pre-shaped as
     union contributions ``(vc, ch, ar, is_new, ts, uv, sv, pv, dur,
     uj)`` with uv=1 or uj=1.
 
     The reference runs these as two separate Flink jobs over the same
     topic (RT/app/dwd/DwdTrafficUniqueVisitorDetail.java,
     RT/app/dwd/DwdTrafficUserJumpDetail.java); Spark allows only one
-    applyInPandasWithState per streaming query, and consolidating the two
+    Python stateful operator per streaming query, and consolidating the two
     state machines into one keyed pass is the idiomatic answer anyway:
     one shuffle on mid, one state store, both flags from the same sorted
     scan.
 
-    Bucketed grouping (r14 optimization round, same scheme as
-    :func:`keep_latest_stream`): groups are hash buckets of mid; the
-    pickled dict state maps mid -> [last_uv_dt, pending-5-tuple-or-None].
-    The bucket timer is the MIN pending ``ts + 10 s``; on every call,
-    un-touched keys whose per-key timer would have fired (strict
-    ``< watermark``) emit their bounce contribution and keep their UV
-    date alive — exactly the per-key form's timeout branch. An entry
-    whose parts are both None mirrors the per-key form's kept empty
-    state row.
+    The entry is (last UV date, pending start's (vc, ch, ar, is_new, ts)
+    or None); only a pending start sets a timer. A fired timer emits the
+    bounce and keeps the UV date. An entry whose parts are both None is
+    kept, as the per-key form kept its empty state row.
     """
-    import pickle
-
-    order = ["ts", "event_id"]
-    out_schema = (
-        "vc string, ch string, ar string, is_new string, ts long, "
-        "uv long, sv long, pv long, dur long, uj long"
+    out_schema = StructType(
+        [StructField(c, StringType()) for c in ("vc", "ch", "ar", "is_new")]
+        + [StructField(c, LongType()) for c in ("ts", "uv", "sv", "pv", "dur", "uj")]
     )
-    out_cols = ["vc", "ch", "ar", "is_new", "ts", "uv", "sv", "pv", "dur", "uj"]
-    state_schema = StructType([StructField("pending", BinaryType())])
-    in_cols = ["mid", "vc", "ch", "ar", "is_new", "ts", "event_id", "last_page_id", "dt"]
-    # tuple indexes into in_cols rows
-    MID, VC, CH, AR, ISN, TS, EID, LP, DT = range(9)
+    cols = ["mid", "vc", "ch", "ar", "is_new", "ts", "event_id", "last_page_id", "dt"]
+    VC, TS, LP, DT = 1, 5, 7, 8
 
-    def contrib(p5, uv, uj):
-        # p5 = (vc, ch, ar, is_new, ts)
-        return (*p5, uv, 0, 0, 0, uj)
+    def step(ent, rows, wm, out):
+        last_uv_dt, pend = ent or (None, None)
+        if not rows:  # the 10 s timer fired: a bounce
+            out.append((*pend, 0, 0, 0, 0, 1))
+            return None if last_uv_dt is None else (last_uv_dt, None)
+        for row in rows:
+            is_start = row[LP] is None or pd.isna(row[LP])
+            if is_start and row[DT] != last_uv_dt:
+                out.append((*row[VC:TS + 1], 1, 0, 0, 0, 0))
+                last_uv_dt = row[DT]
+            if pend is not None and (is_start or row[TS] - pend[4] > JUMP_GAP_MS):
+                out.append((*pend, 0, 0, 0, 0, 1))
+            pend = row[VC:TS + 1] if is_start else None
+        return (last_uv_dt, pend)
 
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            ent = pickle.loads(bytes(state.get[0]))
-            out = []
-            for k, (last_uv_dt, pend) in list(ent.items()):
-                if pend is not None and int(pend[4]) + JUMP_GAP_MS < wm:
-                    out.append(contrib(pend, 0, 1))
-                    if last_uv_dt is not None:
-                        ent[k] = (last_uv_dt, None)
-                    else:
-                        del ent[k]
-            _save(state, ent, wm)
-            if out:
-                yield pd.DataFrame(out, columns=out_cols)
-            return
-        ent = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        rows = []
-        for pdf in pdfs:
-            if len(pdf.index):
-                rows.extend(pdf[in_cols].itertuples(index=False, name=None))
-        out = []
-        touched = set()
-        if rows:
-            rows.sort(key=lambda r: (r[TS], r[EID]))
-            for row in rows:
-                k = row[MID]
-                touched.add(k)
-                last_uv_dt, pend = ent.get(k, (None, None))
-                is_start = row[LP] is None or pd.isna(row[LP])
-                if is_start and row[DT] != last_uv_dt:
-                    out.append(contrib(row[VC:TS + 1], 1, 0))
-                    last_uv_dt = row[DT]
-                if pend is not None:
-                    gap = row[TS] - pend[4]
-                    if gap > JUMP_GAP_MS:
-                        out.append(contrib(pend, 0, 1))
-                        pend = row[VC:TS + 1] if is_start else None
-                    elif is_start:
-                        out.append(contrib(pend, 0, 1))
-                        pend = row[VC:TS + 1]
-                    else:
-                        pend = None
-                elif is_start:
-                    pend = row[VC:TS + 1]
-                ent[k] = (last_uv_dt, pend)
-        if wm > 0:
-            for k, (last_uv_dt, pend) in list(ent.items()):
-                if k in touched or pend is None:
-                    continue
-                if int(pend[4]) + JUMP_GAP_MS < wm:
-                    out.append(contrib(pend, 0, 1))
-                    if last_uv_dt is not None:
-                        ent[k] = (last_uv_dt, None)
-                    else:
-                        del ent[k]
-        _save(state, ent, wm)
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
+    return _bucketed_keyed_state(
+        page.withWatermark(watermark_col, "2 seconds"),
+        ["mid"],
+        256,
+        ["ts", "event_id"],
+        out_schema,
+        step,
+        due=lambda ent: None if ent[1] is None else int(ent[1][4]) + JUMP_GAP_MS,
+        cols=cols,
+    )
 
-    def _save(state, ent, wm):
-        if not ent:
-            if state.exists:
-                state.remove()
-            return
-        state.update((pickle.dumps(ent),))
-        timers = [
-            int(pend[4]) + JUMP_GAP_MS
-            for _, pend in ent.values()
-            if pend is not None
+
+def _trunc_div(s: int, n: int) -> int:
+    """Integer division truncating toward zero (Spark DIV / DuckDB //
+    semantics; Python's // floors, which differs for negative sums)."""
+    q = abs(s) // n
+    return -q if s < 0 else q
+
+
+def trailing_window_stream(
+    df: DataFrame,
+    window_sec: int,
+    key: str = "user_id",
+    ts_col: str = "ts_s",
+    val_col: str = "v_micro",
+    watermark_col: str = "rt",
+) -> DataFrame:
+    """Watermark-correct ONLINE trailing time-window aggregate — the
+    feature-store shape ("user's count/sum/mean over the last hour")
+    as a keyed-state streaming operator with EXACT batch-RANGE-frame
+    semantics:
+
+    an event is emitted only once the watermark passes its timestamp,
+    so every frame member (peers at the same second included — RANGE
+    semantics) has provably arrived; the emitted aggregate therefore
+    equals the batch ``value_trailing_window`` row-for-row, and the
+    registry entry shares the batch entry's SQL oracle.
+
+    The entry is two bounded buffers: ``hist`` — (ts, v) pairs inside
+    the trailing window of any future event (pruned to ``watermark -
+    window_sec`` on every evaluation) — and ``pend`` — rows newer than
+    the watermark (bounded by one batch span plus the watermark delay).
+    The per-key timer sits past the newest pending ts, flushing keys
+    that receive no further batches, and once nothing is pending at
+    ``last_ts + window_sec`` — the idle-TTL that self-cleans idle keys,
+    so state tracks the ACTIVE key set, not the historical one.
+
+    Unlike the other keyed operators, every call evaluates EVERY key in
+    the bucket (``every_key``), not only due keys: a row's RANGE frame is
+    complete the moment the watermark passes its timestamp (any later
+    arrival with ts <= the row's ts would be dropped as late), so
+    evaluating early emits the same rows with the same aggregates, and
+    it keeps each row's emission in the micro-batch it has always been
+    emitted in.
+    """
+    out_fields = [f for f in df.schema.fields if f.name != watermark_col]
+    out_schema = StructType(
+        out_fields
+        + [
+            StructField("trail_n", LongType()),
+            StructField("trail_sum_micro", LongType()),
+            StructField("trail_avg_micro", LongType()),
         ]
-        if timers:
-            state.setTimeoutTimestamp(max(wm, min(timers)))
+    )
+    cols = [f.name for f in out_fields]
+    ts_i, v_i = cols.index(ts_col), cols.index(val_col)
 
-    return (
-        page.withWatermark(watermark_col, "2 seconds")
-        .withColumn("__bucket", F.pmod(F.xxhash64(F.col("mid")), F.lit(n_buckets)))
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    def step(ent, rows, wm, out):
+        hist, pend = ent or ([], [])
+        pend = sorted([*pend, *rows], key=lambda r: (r[ts_i], str(r)))
+        wm_s = wm // 1000
+        ready = [r for r in pend if r[ts_i] < wm_s]
+        if ready:
+            pend = pend[len(ready):]
+            hist = hist + [(r[ts_i], r[v_i]) for r in ready]
+            for r in ready:
+                lo = r[ts_i] - window_sec
+                frame = [v for t, v in hist if lo <= t <= r[ts_i]]
+                out.append(
+                    (*r, len(frame), sum(frame), _trunc_div(sum(frame), len(frame)))
+                )
+        hist = [tv for tv in hist if tv[0] >= wm_s - window_sec]
+        return (hist, pend) if pend or hist else None
+
+    def due(ent):
+        hist, pend = ent
+        if pend:
+            return (max(r[ts_i] for r in pend) + 1) * 1000
+        return (max(t for t, _ in hist) + window_sec + 1) * 1000
+
+    return _bucketed_keyed_state(
+        df.withWatermark(watermark_col, "2 seconds"),
+        [key],
+        256,
+        [ts_col],
+        out_schema,
+        step,
+        due=due,
+        cols=cols,
+        every_key=True,
     )
 
 
@@ -1449,142 +1388,6 @@ def _vacuum_locked(path: str, retain_versions: int, grace_s: float) -> list[str]
     return removed
 
 
-def _trunc_div(s: int, n: int) -> int:
-    """Integer division truncating toward zero (Spark DIV / DuckDB //
-    semantics; Python's // floors, which differs for negative sums)."""
-    q = abs(s) // n
-    return -q if s < 0 else q
-
-
-def trailing_window_stream(
-    df: DataFrame,
-    window_sec: int,
-    key: str = "user_id",
-    ts_col: str = "ts_s",
-    val_col: str = "v_micro",
-    watermark_col: str = "rt",
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Watermark-correct ONLINE trailing time-window aggregate — the
-    feature-store shape ("user's count/sum/mean over the last hour")
-    as a keyed-state streaming operator with EXACT batch-RANGE-frame
-    semantics:
-
-    an event is emitted only once the watermark passes its timestamp,
-    so every frame member (peers at the same second included — RANGE
-    semantics) has provably arrived; the emitted aggregate therefore
-    equals the batch ``value_trailing_window`` row-for-row, and the
-    registry entry shares the batch entry's SQL oracle.
-
-    State per key is two bounded buffers: ``hist`` — (ts, v) pairs
-    inside the trailing window of any future event (pruned to
-    ``watermark - window_sec`` on every call) — and ``pend`` — full
-    rows newer than the watermark (bounded by one batch span plus the
-    watermark delay). An event-time timeout set past the newest pending
-    ts flushes keys that receive no further batches, and a final
-    timeout at ``last_ts + window_sec`` self-cleans idle keys' state —
-    the idle-TTL a 100 TB deployment needs so state tracks the ACTIVE
-    key set, not the historical one.
-
-    Bucketed grouping (r14 optimization round, same scheme as
-    :func:`keep_latest_stream`): groups are hash buckets of ``key``; the
-    pickled dict state maps key -> [hist, pend]. A bucket call processes
-    EVERY key in the bucket with the current watermark — safe because
-    emission readiness (``ts < watermark``) and the emitted frame are
-    functions of (arrived rows, watermark) alone: a row's RANGE frame is
-    complete the moment the watermark passes its timestamp (any later
-    arrival with ts <= the row's ts would be dropped as late), so
-    processing a key earlier than its per-key timer would have fired
-    emits the same rows with the same aggregates. The bucket timer is
-    the MIN of the per-key timers (max pending ts + 1, or the idle-TTL
-    ``max hist ts + window + 1``).
-    """
-    import pickle
-
-    out_fields = [f for f in df.schema.fields if f.name != watermark_col]
-    out_schema = StructType(
-        list(out_fields)
-        + [
-            StructField("trail_n", LongType()),
-            StructField("trail_sum_micro", LongType()),
-            StructField("trail_avg_micro", LongType()),
-        ]
-    )
-    out_cols = [f.name for f in out_fields]
-    state_schema = StructType([StructField("pending", BinaryType())])
-
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        ent = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        if not state.hasTimedOut:
-            pdf = _sorted_concat(pdfs, [ts_col])
-            if not pdf.empty:
-                for rec in pdf[out_cols].to_dict("records"):
-                    rec = {
-                        k: (v.item() if hasattr(v, "item") else v)
-                        for k, v in rec.items()
-                    }
-                    e = ent.get(rec[key])
-                    if e is None:
-                        ent[rec[key]] = e = [[], []]
-                    e[1].append(rec)
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        out = []
-        drop = []
-        for k, (hist, pend) in ent.items():
-            pend.sort(key=lambda r: (r[ts_col], str(r)))
-            ready = [r for r in pend if r[ts_col] < wm_s]
-            pend = [r for r in pend if r[ts_col] >= wm_s]
-            if ready:
-                values = hist + [[r[ts_col], r[val_col]] for r in ready]
-                for r in ready:
-                    lo = r[ts_col] - window_sec
-                    frame = [v for t, v in values if lo <= t <= r[ts_col]]
-                    row = dict(r)
-                    row["trail_n"] = len(frame)
-                    row["trail_sum_micro"] = sum(frame)
-                    row["trail_avg_micro"] = _trunc_div(sum(frame), len(frame))
-                    out.append(row)
-                hist = [tv for tv in values if tv[0] >= wm_s - window_sec]
-            else:
-                hist = [tv for tv in hist if tv[0] >= wm_s - window_sec]
-            if pend or hist:
-                ent[k] = [hist, pend]
-            else:
-                drop.append(k)
-        for k in drop:
-            del ent[k]
-        if ent:
-            state.update((pickle.dumps(ent),))
-            tmr = min(
-                (max(r[ts_col] for r in p) + 1)
-                if p
-                else (max(t for t, _ in h) + window_sec + 1)
-                for h, p in ent.values()
-            )
-            state.setTimeoutTimestamp(
-                max(state.getCurrentWatermarkMs(), tmr * 1000)
-            )
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out)[[f.name for f in out_schema.fields]]
-
-    return (
-        df.withWatermark(watermark_col, "2 seconds")
-        .withColumn(
-            "__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-        )
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 def read_upsert_snapshot_lookup(
     spark,
     path: str,
@@ -1646,162 +1449,3 @@ def read_upsert_snapshot_lookup(
         c = F.col(k) == F.lit(v)
         cond = c if cond is None else cond & c
     return df.filter(cond).drop("__bucket")
-
-
-def first_per_day_stream_tws(
-    df: "DataFrame",
-    key: str = "mid",
-    dt_col: str = "dt",
-    order: list[str] | None = None,
-) -> "DataFrame":
-    """D1 first-visit-per-day dedup on ``transformWithStateInPandas`` —
-    Spark 4's arbitrary-stateful-processing API and the forward path for
-    every operator this module implements on the older
-    ``applyInPandasWithState`` (named state variables, native timers,
-    per-state TTL instead of one blob + one query-wide timeout). Same
-    semantics as :func:`first_per_day_stream`; the pytest gate proves
-    the two APIs emit identical rows over the same replay, so migrating
-    an operator is a mechanical swap, not a semantics review.
-
-    State here is ONE ValueState holding the key's last-seen date — the
-    same single-cell bound as the old form (RocksDB-backed, keyed by
-    the dedup key), so the 100 TB posture is unchanged.
-
-    Runtime dependency: the transformWithState state-server protocol
-    speaks protobuf between the JVM and the Python worker; environments
-    without ``google.protobuf`` (this sandbox) fail at stream start with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — the parity gate
-    (test_transform_with_state_matches_apply_in_pandas_with_state)
-    importorskips on it. Any real cluster ships protobuf.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    order = order or ["ts", "event_id"]
-    out_schema = df.schema
-
-    class FirstPerDay(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_dt", "last_dt string")
-
-        def handleInputRows(self, key_, rows, timerValues):
-            pdf = _sorted_concat(rows, order)
-            if pdf.empty:
-                return
-            last_dt = self._last.get()[0] if self._last.exists() else None
-            keep = []
-            for i, row_dt in enumerate(pdf[dt_col]):
-                if row_dt != last_dt:
-                    keep.append(i)
-                    last_dt = row_dt
-            self._last.update((last_dt,))
-            yield pdf.iloc[keep]
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key).transformWithStateInPandas(
-        FirstPerDay(), out_schema, "append", "None"
-    )
-
-
-def keep_latest_stream_tws(
-    df: "DataFrame",
-    keys: list[str],
-    order_col: str,
-    watermark_col: str = "rt",
-) -> "DataFrame":
-    """D4/W6 keep-latest + 5 s debounce on ``transformWithStateInPandas``
-    — the JVM-managed-state port of :func:`keep_latest_stream` (reference
-    timers: RT/app/dws/DwsTradePaymentSucWindow.java:102,
-    RT/app/dws/DwsTradeProvinceOrderWindow.java:102-103) and the
-    scale-path answer to the replay lane's one `weak`: the old API holds
-    state as one JSON blob and re-enters Python for every (key,
-    micro-batch) pair through a query-wide timeout mode, while this form
-    keeps the buffered row in a typed ValueState and fires NATIVE
-    per-key event-time timers (``handle.registerTimer``), so state
-    bookkeeping stays JVM-side and Python is entered only for keys with
-    actual input rows or an expired timer.
-
-    Semantics are identical to :func:`keep_latest_stream` by
-    construction (same anchor/burst/emit rules; the parity gate
-    ``test_keep_latest_tws_matches_apply_in_pandas_with_state`` proves
-    row-identical output over the same replay). Timer rules mirrored:
-    the FIRST row of a burst anchors a timer at ``anchor + 5 s``; newer
-    rows inside the window replace the buffered row without moving the
-    timer; a row past the window closes the burst in-stream, emits the
-    survivor, and re-anchors (deleting the stale timer so the old
-    firing cannot double-emit).
-
-    Runtime dependency: protobuf (the transformWithState state-server
-    protocol) — absent in this sandbox, present on any real cluster;
-    the parity test importorskips exactly like the D1 port above.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    out_schema = df.drop(watermark_col).schema
-    out_cols = [f.name for f in out_schema.fields]
-    state_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in out_schema.fields
-    )
-
-    class KeepLatestDebounce(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._best = handle.getValueState("best", state_ddl)
-            self._anchor = handle.getValueState("anchor", "anchor_ms long")
-
-        def handleInputRows(self, key_, rows, timerValues: TimerValues):
-            pdf = _sorted_concat(rows, [order_col])
-            if pdf.empty:
-                return
-            best = anchor = None
-            if self._anchor.exists():
-                anchor = self._anchor.get()[0]
-                best = dict(zip(out_cols, self._best.get()))
-            done = []
-            for row in pdf[out_cols].to_dict("records"):
-                row_ms = int(row[order_col]) * 1000
-                if best is None:
-                    best, anchor = row, row_ms
-                    self._handle.registerTimer(anchor + DEBOUNCE_MS)
-                elif row_ms - anchor > DEBOUNCE_MS:
-                    done.append(best)  # burst closed in-stream
-                    self._handle.deleteTimer(anchor + DEBOUNCE_MS)
-                    best, anchor = row, row_ms
-                    self._handle.registerTimer(anchor + DEBOUNCE_MS)
-                elif row[order_col] >= best[order_col]:
-                    best = row  # replace inside the window; timer stays
-            self._best.update(tuple(best[c] for c in out_cols))
-            self._anchor.update((anchor,))
-            if done:
-                yield pd.DataFrame(done)[out_cols]
-
-        def handleExpiredTimer(
-            self, key_, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            if self._anchor.exists():
-                # a re-anchor deletes its stale timer, so any firing
-                # timer IS the live burst's — emit and clear.
-                best = dict(zip(out_cols, self._best.get()))
-                self._best.clear()
-                self._anchor.clear()
-                yield pd.DataFrame([best])[out_cols]
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.withWatermark(watermark_col, "2 seconds")
-        .groupBy(*keys)
-        .transformWithStateInPandas(
-            KeepLatestDebounce(), out_schema, "append", "EventTime"
-        )
-    )

@@ -14,13 +14,16 @@ from __future__ import annotations
 import glob
 import json
 import re
+from pathlib import Path
 
 from flink_realtime_datawarehouse_v3_spark import api
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _proven_before_window_round() -> set[str]:
     proven: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if m is None or int(m.group(1)) >= api._WINDOW_ROUND:
             continue

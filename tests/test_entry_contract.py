@@ -7,11 +7,14 @@ verify skill; this pins the contract surface itself.)"""
 from __future__ import annotations
 
 import importlib.util
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _load():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", REPO / "__spark_entry__.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -22,6 +22,7 @@ closed so a regression that turns a dim join into SMJ fails loudly).
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import pytest
 
@@ -375,7 +376,7 @@ def test_plan_fingerprints_stable(plans):
 
     from flink_realtime_datawarehouse_v3_spark import planfp
 
-    with open("/root/repo/PLAN_FP_BASELINE.json") as f:
+    with open(Path(__file__).resolve().parents[1] / "PLAN_FP_BASELINE.json") as f:
         base = json.load(f)["fingerprints"]
     got = {n: planfp.fingerprint_plan_string(p) for n, p in plans.items()}
     changed = sorted(

@@ -278,6 +278,27 @@ def test_late_rows_dropped_by_watermark(spark):
         ), "late duplicates leaked into closed windows"
 
 
+def _split_invariant_emissions(spark, df, sentinels, op, n_files):
+    """Sorted emissions of ``op`` over ``df`` replayed as ``n_files``
+    micro-batches plus the trailing ``sentinels``; ``op`` derives its
+    event-time column and drops the sentinel rows."""
+    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
+        TempStreamDir,
+        read_stream,
+        run_to_memory,
+    )
+
+    with TempStreamDir() as d:
+        sp._write_replay(
+            df, d.sub("in"), order_by=["ts"], sentinels=sentinels, n_files=n_files
+        )
+        out = op(read_stream(spark, d.sub("in")))
+        return sorted(
+            tuple("" if v is None else str(v) for v in r)
+            for r in run_to_memory(out, output_mode="append").collect()
+        )
+
+
 def test_debounce_emissions_split_invariant(spark):
     """The D4 debounce's oracle registration rests on determinism: the
     emission multiset must not depend on how the replay splits into
@@ -285,15 +306,6 @@ def test_debounce_emissions_split_invariant(spark):
     from pyspark.sql import functions as F
 
     from flink_realtime_datawarehouse_v3_spark.sources import cdc
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-        run_to_memory,
-    )
-    from flink_realtime_datawarehouse_v3_spark.streaming.pipelines import (
-        _write_replay,
-    )
-    from flink_realtime_datawarehouse_v3_spark.streaming import pipelines as sp_mod
     from flink_realtime_datawarehouse_v3_spark.streaming.stateful import (
         keep_latest_stream,
     )
@@ -312,26 +324,41 @@ def test_debounce_emissions_split_invariant(spark):
         for dt in (3600, 7200)
     ]
 
-    def run(n_files):
-        saved = sp_mod.N_FILES
-        sp_mod.N_FILES = n_files
-        try:
-            with TempStreamDir() as d:
-                _write_replay(flat, d.sub("in"), order_by=["ts"], sentinels=sents)
-                s = read_stream(spark, d.sub("in")).withColumn(
-                    "rt", F.to_timestamp(F.from_unixtime("ts"))
-                )
-                out = keep_latest_stream(s, keys=["id"], order_col="ts").filter(
-                    F.col("id") != "__sentinel__"
-                )
-                return sorted(
-                    tuple("" if v is None else str(v) for v in r)
-                    for r in run_to_memory(out, output_mode="append").collect()
-                )
-        finally:
-            sp_mod.N_FILES = saved
+    def op(s):
+        s = s.withColumn("rt", F.to_timestamp(F.from_unixtime("ts")))
+        return keep_latest_stream(s, keys=["id"], order_col="ts").filter(
+            F.col("id") != "__sentinel__"
+        )
 
-    assert run(2) == run(6)
+    assert _split_invariant_emissions(spark, flat, sents, op, 2) == (
+        _split_invariant_emissions(spark, flat, sents, op, 6)
+    )
+
+
+def test_jump_emissions_split_invariant(spark):
+    """The D5 bounce detector's timer sweep must not depend on how the
+    replay splits into micro-batches either: the same page log plus its
+    flush sentinels, replayed as 2 files and as 6, emits the same
+    bounces (some by in-stream closure, the rest by the event-time timer
+    sweep)."""
+    from pyspark.sql import functions as F
+
+    from flink_realtime_datawarehouse_v3_spark.operators.windows import rt_from_ms
+    from flink_realtime_datawarehouse_v3_spark.streaming.stateful import (
+        jump_detect_stream,
+    )
+
+    page = sp._page_log(spark, SF_SMOKE)
+    mx = page.agg(F.max("ts")).collect()[0][0]
+    sents = [sp._page_sentinel(page, mx, hours=h) for h in (1, 2)]
+
+    def op(s):
+        return jump_detect_stream(s.withColumn("rt", rt_from_ms(F.col("ts")))).filter(
+            F.col("mid") != "__sentinel__"
+        )
+
+    two = _split_invariant_emissions(spark, page, sents, op, 2)
+    assert two and two == _split_invariant_emissions(spark, page, sents, op, 6)
 
 
 def test_debounce_anchor_semantics_typed_state(spark, tmp_path):
@@ -456,6 +483,7 @@ def test_dim_router_dynamic_column_add(spark):
         TempStreamDir,
         read_stream,
         run_foreach_batch,
+        stamp_file_order,
     )
     from flink_realtime_datawarehouse_v3_spark.streaming.dim_app import dim_router
 
@@ -494,7 +522,7 @@ def test_dim_router_dynamic_column_add(spark):
             dest = os.path.join(in_dir, f"b{i}.parquet")
             os.replace(src, dest)
             files.append(dest)
-        sp._stamp_file_order(in_dir, files)
+        stamp_file_order(in_dir, files)
         s = read_stream(spark, in_dir)
         out_dir = d.sub("dims")
         run_foreach_batch(
@@ -1524,111 +1552,6 @@ def test_statestore_reader_inspects_checkpointed_state(spark, tmp_path):
         .count()
     )
     assert len(state) * 5 < n_orders, (len(state), n_orders)
-
-
-def test_transform_with_state_matches_apply_in_pandas_with_state(spark):
-    """API migration gate: the D1 first-visit dedup ported to Spark 4's
-    transformWithStateInPandas must emit exactly the rows of the
-    applyInPandasWithState form over the same replay (and both equal
-    the batch D1 entry) — migrating operators to the new API (named
-    state vars, native timers, per-state TTL) is a mechanical swap, not
-    a semantics review. Skipped where protobuf is unavailable: the
-    transformWithState state-server protocol requires it (this
-    container ships without it; any real cluster has it)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server needs protobuf",
-    )
-    from pyspark.sql import functions as F
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import (
-        pipelines as _p,
-        stateful,
-    )
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-        run_to_memory,
-    )
-
-    page = _p._page_log(spark, SF_SMOKE)
-    outs = []
-    for form in (stateful.first_per_day_stream, stateful.first_per_day_stream_tws):
-        with TempStreamDir() as d:
-            _p._write_replay(page, d.sub("in"), order_by=["ts"])
-            s = (
-                read_stream(spark, d.sub("in"))
-                .filter(F.col("last_page_id").isNull())
-                .withColumn(
-                    "dt",
-                    F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd"),
-                )
-            )
-            out = run_to_memory(
-                form(s, key="mid", dt_col="dt"), output_mode="append"
-            ).drop("dt")
-            outs.append(sorted(map(str, out.collect())))
-    assert outs[0] == outs[1] and len(outs[0]) > 0
-    batch = api.QUERIES["dwd_traffic_unique_visitor_detail"](spark, SF_SMOKE)
-    assert outs[1] == sorted(map(str, batch.collect()))
-
-
-def test_keep_latest_tws_matches_apply_in_pandas_with_state(spark):
-    """API migration gate for D4/W6 (r12): the keep-latest + 5 s debounce
-    ported to transformWithStateInPandas (typed ValueStates + NATIVE
-    per-key event-time timers) must emit exactly the rows of the
-    applyInPandasWithState form over the same replay — the scale path
-    for the streaming lane's one `weak` entry (per-key Python
-    invocations) is a mechanical swap, not a semantics review. Skipped
-    where protobuf is unavailable (the transformWithState state server
-    needs it; this container ships without it, real clusters have it)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server needs protobuf",
-    )
-    from pyspark.sql import functions as F
-
-    from flink_realtime_datawarehouse_v3_spark.sources import cdc
-    from flink_realtime_datawarehouse_v3_spark.streaming import (
-        pipelines as _p,
-        stateful,
-    )
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-        run_to_memory,
-    )
-
-    flat = cdc.topic_db(spark, SF_SMOKE, only=["order_info"]).select(
-        F.col("data").getItem("id").alias("id"),
-        F.col("data").getItem("order_status").alias("order_status"),
-        F.col("ts").cast("long").alias("ts"),
-    )
-
-    def sents(mx: int) -> list:
-        return [
-            spark.createDataFrame(
-                [("__sentinel__", None, mx + dt)],
-                "id string, order_status string, ts long",
-            )
-            for dt in (3600, 7200)
-        ]
-
-    outs = []
-    for form in (stateful.keep_latest_stream, stateful.keep_latest_stream_tws):
-        with TempStreamDir() as d:
-            _p._write_replay(
-                flat, d.sub("in"), order_by=["ts"], sentinels=sents,
-                max_col="ts", n_files=2,
-            )
-            s = read_stream(spark, d.sub("in")).withColumn(
-                "rt", F.to_timestamp(F.from_unixtime("ts"))
-            )
-            out = form(s, keys=["id"], order_col="ts").filter(
-                F.col("id") != "__sentinel__"
-            )
-            outs.append(sorted(map(str, run_to_memory(out).collect())))
-    assert outs[0] == outs[1] and len(outs[0]) > 0
 
 
 def test_pyds_stream_offset_recovery(spark, tmp_path):

@@ -17,13 +17,15 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from flink_realtime_datawarehouse_v3_spark import api, planfp  # noqa: E402
 from flink_realtime_datawarehouse_v3_spark.session import get_spark  # noqa: E402
 
-OUT = "/root/repo/PLAN_FP_BASELINE.json"
+OUT = str(REPO / "PLAN_FP_BASELINE.json")
 
 
 def main() -> None:

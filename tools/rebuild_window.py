@@ -27,13 +27,15 @@ import json
 import os
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 # Let api.py import even when just-registered entries are not yet in the
 # order lists — the whole point of this tool is to regenerate them.
 os.environ["SPARK_GRAFT_ALLOW_ORDER_DRIFT"] = "1"
 
-API_PATH = "/root/repo/flink_realtime_datawarehouse_v3_spark/registry/driver_order.py"
+API_PATH = str(REPO / "flink_realtime_datawarehouse_v3_spark/registry/driver_order.py")
 N_SLOTS = 50
 N_ROWS_ONLY_ROTATIONS = 3
 
@@ -41,7 +43,7 @@ N_ROWS_ONLY_ROTATIONS = 3
 def history() -> tuple[dict, dict]:
     last_green: dict[str, int] = {}
     executed: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", path).group(1))
         for n, r in json.load(open(path)).items():
             if r.get("hash_match") is True:
