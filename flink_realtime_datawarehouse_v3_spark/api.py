@@ -24,7 +24,6 @@ from .registry._core import (  # noqa: F401
     QUERIES,
     QueryFn,
     _MATERIALIZED,
-    _MVCC_DEMO,
     _cdc,
     _memo_df,
     register,

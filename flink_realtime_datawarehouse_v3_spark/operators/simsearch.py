@@ -18,27 +18,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Session-scoped memo for trained index artifacts (centroid lists, PQ
-# codebooks): plain Python values keyed by the INPUT PLAN's semanticHash
-# plus every training parameter, so a hit is provably the same
-# deterministic computation. ivf_topk / ivfpq_topk / semdedup share the
-# coarse quantizer; pq_topk / ivfpq_topk share codebooks — without the
+from ..session import get_or_build, session_table
+
+# Session table (:mod:`..session`) for trained index artifacts (centroid
+# lists, PQ codebooks): plain Python values keyed by the INPUT PLAN's
+# semanticHash plus every training parameter, so a hit is provably the
+# same deterministic computation. ivf_topk / ivfpq_topk / semdedup share
+# the coarse quantizer; pq_topk / ivfpq_topk share codebooks — without the
 # memo each entry repays the sample-collect + Lloyd fit.
-# api.reset_session_caches() clears it between sweeps.
-_ARTIFACTS: dict = {}
+_ARTIFACTS: dict = session_table()
 
 
 def _artifact(spark, df: DataFrame, tag: str, params: tuple, build):
-    # applicationId is unique per context (a CPython id() can be reused
-    # after a context is garbage-collected). Inputs are assumed immutable
-    # per session — semanticHash covers the PLAN, not file contents —
-    # which api.reset_session_caches() re-establishes between sweeps.
-    key = (spark.sparkContext.applicationId, df.semanticHash(), tag, params)
-    val = _ARTIFACTS.get(key)
-    if val is None:
-        val = build()
-        _ARTIFACTS[key] = val
-    return val
+    # Inputs are assumed immutable per session — semanticHash covers the
+    # PLAN, not file contents — which a session-table reset re-establishes
+    # between sweeps.
+    return get_or_build(_ARTIFACTS, spark, (df.semanticHash(), tag, params), build)
+
 
 def _dvec(c: Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))

@@ -1344,10 +1344,9 @@ def fit_model(docs: DataFrame, cache_key: tuple = ()) -> tuple[list[int], int]:
     one bounded 2-row agg, midpoint floored from exact-integer inputs so
     Python, Spark and DuckDB produce the identical integer.
 
-    Collects are <= FT_BUCKETS rows + 2 rows; memoized per
-    (applicationId, plan, params) via the simsearch artifact cache, so
-    the fit + score entries in one session pay the fit once. Cleared by
-    api.reset_session_caches()."""
+    Collects are <= FT_BUCKETS rows + 2 rows; memoized per (session,
+    plan, params) in the simsearch artifact session table, so the fit +
+    score entries in one session pay the fit once."""
     from . import simsearch
 
     def build() -> tuple[list[int], int]:

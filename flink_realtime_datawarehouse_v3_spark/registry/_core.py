@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import oracle
 from ..plans import dwd_simple, dwd_trade
+from ..session import get_or_build, reset_session_tables, session_table
 from ..sources import cdc, dic
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -59,53 +60,23 @@ def _cdc(spark: SparkSession, sf_dir: str, only: list[str]) -> DataFrame:
 # DWD job (e.g. dwd_trade_order_detail_0105, RT/app/dws/DwsTradeUserSpuOrderWindow.java:69-71)
 # — it never recomputes the upstream join. Re-deriving the wide order row
 # per query would be both slower and architecturally unfaithful.
-_MATERIALIZED: dict[tuple[int, str, str], DataFrame] = {}
+_MATERIALIZED: dict[tuple, DataFrame] = session_table(DataFrame.unpersist)
 
 
 def _memo_df(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
-    key = (*cdc.ctx_key(spark), name, sf_dir)
-    df = _MATERIALIZED.get(key)
-    if df is None:
-        df = build().persist()
-        _MATERIALIZED[key] = df
-    return df
+    return get_or_build(_MATERIALIZED, spark, (name, sf_dir), lambda: build().persist())
 
 
 def reset_session_caches() -> None:
-    """Unpersist and forget every session-scoped memo (DWD facts, the
-    per-branch ODS parse cache, the bucketed fact tables).
+    """Release and forget every session-scoped resource (see
+    :func:`..session.reset_session_tables`).
 
     The memos model topics/tables that pre-exist a job run, so within one
     driver sweep they are correct to keep; a LONG-LIVED session iterating
     over multiple SF dirs would otherwise accumulate persisted DataFrames
     without bound. Call between sweeps (tools/check_all.py does, between
     SF dirs)."""
-    from ..sources import bucketed as _bucketed
-    from ..sources import cdc as _cdc
-
-    for df in _MATERIALIZED.values():
-        df.unpersist()
-    _MATERIALIZED.clear()
-    for df in _cdc._ODS_CACHE.values():
-        df.unpersist()
-    _cdc._ODS_CACHE.clear()
-    from ..sources import logs as _logs
-
-    for df in _logs._RAW_LOG_CACHE.values():
-        df.unpersist()
-    _logs._RAW_LOG_CACHE.clear()
-    _bucketed._READY.clear()
-    from ..operators import simsearch as _ss
-
-    _ss._ARTIFACTS.clear()
-    _MVCC_DEMO.clear()  # shared export demo table: rebuild per sweep
-    # The iterative operators (cluster closure, PageRank) localCheckpoint
-    # per round; those checkpointed RDDs stay persisted until Python drops
-    # the references and the ContextCleaner runs. Force the collection so
-    # a long-lived sweep session doesn't carry them across SF dirs.
-    import gc
-
-    gc.collect()
+    reset_session_tables()
 
 
 def unpersist_orphans() -> int:
@@ -119,9 +90,7 @@ def unpersist_orphans() -> int:
     between SF dirs, right after :func:`reset_session_caches`; mid-
     session callers (the pytest plans fixture) must NOT. Returns the
     number of RDDs dropped."""
-    from pyspark.sql import SparkSession as _S
-
-    spark = _S.getActiveSession()
+    spark = SparkSession.getActiveSession()
     if spark is None:
         return 0
     dropped = 0
@@ -129,9 +98,3 @@ def unpersist_orphans() -> int:
         jrdd.unpersist()
         dropped += 1
     return dropped
-
-
-
-# sf -> shared MVCC export demo-table path (per session); lives here
-# because reset_session_caches() clears it. Populated by m09_audit_pyds.
-_MVCC_DEMO: dict[str, str] = {}

@@ -8,10 +8,10 @@ verify it.
 
 from __future__ import annotations
 
+from ..session import get_or_build, session_table
 from ._core import (  # noqa: F401
     DataFrame,
     SparkSession,
-    _MVCC_DEMO,
     cdc,
     oracle,
     register,
@@ -108,6 +108,10 @@ register(
 
 
 
+# (session, sf) -> shared MVCC export demo-table path
+_MVCC_DEMO: dict[tuple, str] = session_table()
+
+
 def _mvcc_demo_table(spark: SparkSession, sf: str) -> str:
     """The order_info changelog MERGEd through the snapshot-isolated
     sink in three deterministic ts%3 batches — built ONCE per (sf,
@@ -123,29 +127,30 @@ def _mvcc_demo_table(spark: SparkSession, sf: str) -> str:
 
     from ..streaming import stateful as _st
 
-    if sf in _MVCC_DEMO:
-        return _MVCC_DEMO[sf]
-    base = _tmp_sink_path("mvcc_demo", sf)
-    shutil.rmtree(base, ignore_errors=True)
-    tbl = _os2.path.join(base, "tbl")
-    _os2.makedirs(tbl)
-    # r13 optimization round (guide §1.2, same argument as the streaming
-    # replays' _topic_db_cached): serve the order_info envelope from the
-    # session's per-branch ODS parse cache instead of re-deriving the CDC
-    # builder per touch — the builders emit only insert/update envelopes
-    # and the JSON round-trip is lossless, so the rows are identical
-    # (proven by this entry's value-hash gate).
-    flat = cdc.topic_db_parsed(spark, sf, only=["order_info"]).select(
-        F.col("data").getItem("id").alias("id"),
-        F.col("data").getItem("order_status").alias("order_status"),
-        F.col("data").getItem("operate_time").alias("operate_time"),
-        F.col("ts").cast("long").alias("ts"),
-    )
-    fn = _st.upsert_sink_snapshot(["id"], "ts", tbl)
-    for k in range(3):
-        fn(flat.filter(F.col("ts") % 3 == k), k)
-    _MVCC_DEMO[sf] = tbl
-    return tbl
+    def build() -> str:
+        base = _tmp_sink_path("mvcc_demo", sf)
+        shutil.rmtree(base, ignore_errors=True)
+        tbl = _os2.path.join(base, "tbl")
+        _os2.makedirs(tbl)
+        # r13 optimization round (guide §1.2, same argument as the
+        # streaming replays' ODS-served input): serve the order_info
+        # envelope from the session's per-branch ODS parse cache instead
+        # of re-deriving the CDC builder per touch — the builders emit
+        # only insert/update envelopes and the JSON round-trip is
+        # lossless, so the rows are identical (proven by this entry's
+        # value-hash gate).
+        flat = cdc.topic_db_parsed(spark, sf, only=["order_info"]).select(
+            F.col("data").getItem("id").alias("id"),
+            F.col("data").getItem("order_status").alias("order_status"),
+            F.col("data").getItem("operate_time").alias("operate_time"),
+            F.col("ts").cast("long").alias("ts"),
+        )
+        fn = _st.upsert_sink_snapshot(["id"], "ts", tbl)
+        for k in range(3):
+            fn(flat.filter(F.col("ts") % 3 == k), k)
+        return tbl
+
+    return get_or_build(_MVCC_DEMO, spark, (sf,), build)
 
 
 def _mvcc_export_roundtrip(spark: SparkSession, sf: str) -> DataFrame:

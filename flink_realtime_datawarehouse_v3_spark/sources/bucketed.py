@@ -18,16 +18,30 @@ metastore. ``tests/test_plans.py`` pins the no-Exchange plan shape.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import cdc, tables
+from ..session import get_or_build, session_table
+from . import tables
 
 N_BUCKETS = 8
 
-_READY: dict[tuple[int, str], tuple[str, str]] = {}
+
+def _drop(ready: tuple[str, str, str]) -> None:
+    """Release hook: drop both tables and remove their directory."""
+    *names, base = ready
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+    shutil.rmtree(base, ignore_errors=True)
+
+
+# (session, sf_dir) -> (detail table, info table, their directory)
+_READY: dict[tuple, tuple[str, str, str]] = session_table(_drop)
 
 
 def _tag(sf_dir: str) -> str:
@@ -38,9 +52,10 @@ def order_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Create (once per session+sf) the bucketed order facts; return the
     two table names: (detail side, info side), both bucketed N_BUCKETS by
     ``order_key``."""
-    key = (*cdc.ctx_key(spark), sf_dir)
-    if key in _READY:
-        return _READY[key]
+    return get_or_build(_READY, spark, (sf_dir,), lambda: _write_tables(spark, sf_dir))[:2]
+
+
+def _write_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     tag = _tag(sf_dir)
     od_name, oi_name = f"bkt_order_detail_{tag}", f"bkt_order_info_{tag}"
     base = tempfile.mkdtemp(prefix=f"spark_bucketed_{tag}_")
@@ -75,8 +90,7 @@ def order_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .option("path", os.path.join(base, name))
             .saveAsTable(name)
         )
-    _READY[key] = (od_name, oi_name)
-    return _READY[key]
+    return od_name, oi_name, base
 
 
 def province_revenue_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import cdc, tables
+from ..session import get_or_build, session_table
+from . import tables
 
 WORDS = ["spark", "flink", "kafka", "hudi", "iceberg", "delta", "doris", "paimon"]
 
@@ -149,7 +150,7 @@ def _actions() -> Column:
     )
 
 
-_RAW_LOG_CACHE: dict[tuple, DataFrame] = {}
+_RAW_LOG_CACHE: dict[tuple, DataFrame] = session_table(DataFrame.unpersist)
 
 
 def topic_log_json_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,15 +161,13 @@ def topic_log_json_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis + ``to_json`` render (~2.7 s at sf0.1) was redundant work
     (r13 optimization round, guide §1.2). Consumers: the repaired-log
     memo build, the dirty-log complement, and the streaming base-log
-    replay writer. Cleared by ``api.reset_session_caches``; pre-warmed
-    (and the cost reported) by bench.py's warm loop."""
-    key = (*cdc.ctx_key(spark), sf_dir)
-    cached = _RAW_LOG_CACHE.get(key)
-    if cached is None:
+    replay writer. A session table (:mod:`..session`); pre-warmed (and
+    the cost reported) by bench.py's warm loop."""
+    def build() -> DataFrame:
         par = spark.sparkContext.defaultParallelism
-        cached = topic_log_json(spark, sf_dir).repartition(par).persist()
-        _RAW_LOG_CACHE[key] = cached
-    return cached
+        return topic_log_json(spark, sf_dir).repartition(par).persist()
+
+    return get_or_build(_RAW_LOG_CACHE, spark, (sf_dir,), build)
 
 
 def topic_log_json(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -153,16 +153,16 @@ class MockEventsDataSource(DataSource):
         return _MockStreamReader(self.options)
 
 
-from . import cdc  # noqa: E402
+from ..session import get_or_build, session_table  # noqa: E402
 
-_REGISTERED: set = set()
+# (session, "reader"|"writer") -> None: the data sources registered so far
+_REGISTERED: dict = session_table()
 
 
 def ensure_registered(spark) -> None:
-    key = cdc.ctx_key(spark)
-    if key not in _REGISTERED:
-        spark.dataSource.register(MockEventsDataSource)
-        _REGISTERED.add(key)
+    get_or_build(
+        _REGISTERED, spark, ("reader",), lambda: spark.dataSource.register(MockEventsDataSource)
+    )
 
 
 # --- Writer half of the connector surface -----------------------------------
@@ -263,7 +263,6 @@ class JsonlCommitDataSource(DataSource):
 
 
 def ensure_writer_registered(spark) -> None:
-    key = ("w", *cdc.ctx_key(spark))
-    if key not in _REGISTERED:
-        spark.dataSource.register(JsonlCommitDataSource)
-        _REGISTERED.add(key)
+    get_or_build(
+        _REGISTERED, spark, ("writer",), lambda: spark.dataSource.register(JsonlCommitDataSource)
+    )

@@ -4,18 +4,21 @@ The reference's jobs consume unbounded Kafka topics; the driver's data is
 finite parquet. The replay harness makes a faithful finite stream out of
 any batch DataFrame:
 
-- :func:`write_stream_input` materializes a batch DataFrame as ``n_files``
-  time-ordered parquet files;
-- :func:`read_stream` re-reads them with ``maxFilesPerTrigger=1``, so each
-  file becomes its own micro-batch — state, watermarks and timers advance
+- ``pipelines._write_replay`` materializes a batch DataFrame as ``n_files``
+  time-ordered micro-batch groups of parquet files, with
+  :func:`stamp_file_order` pinning the file order;
+- :func:`read_stream` re-reads them one group per trigger, so each group
+  becomes its own micro-batch — state, watermarks and timers advance
   across real micro-batch boundaries exactly as they would on Kafka;
-- a ``sentinel`` row far past the last event time can be appended as the
-  final file, advancing the watermark so that closing windows / timers
+- ``sentinel`` rows far past the last event time can be appended as the
+  final batches, advancing the watermark so that closing windows / timers
   flush before ``availableNow`` terminates (Flink's job-end watermark+Long.MAX
   flush does the same on bounded input).
 
 Runners execute a streaming DataFrame to a memory sink or through
-``foreachBatch`` and block until completion.
+``foreachBatch`` and block until completion. The memory sink's temp view
+is dropped as soon as its result is resolved, so no sink outlives the
+DataFrame that reads it.
 """
 
 from __future__ import annotations
@@ -27,33 +30,6 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def write_stream_input(
-    df: DataFrame, path: str, n_files: int = 4, order_by: list[str] | None = None
-) -> str:
-    """Materialize ``df`` as ``n_files`` parquet files under ``path``.
-
-    With ``order_by`` (typically the event-time column) rows are range-split
-    into time-contiguous files, so replaying file-per-batch preserves
-    coarse event-time order across batches — the Kafka-ish arrival pattern
-    the reference's state TTLs assume.
-
-    The file-stream source orders files by MODIFICATION TIME, which for a
-    parallel parquet write is task-completion order — effectively random
-    (caught in round 9: a 4-file replay fed batches last-range-first, so
-    a day-ordered stateful op saw day regressions at every boundary).
-    Each part file's mtime is therefore re-stamped strictly increasing in
-    range order, pinning batch order == event-time order.
-    """
-    if order_by:
-        df = df.repartitionByRange(n_files, *[F.col(c) for c in order_by])
-    else:
-        df = df.repartition(n_files)
-    df.write.mode("overwrite").parquet(path)
-    stamp_file_order(path)
-    return path
 
 
 def stamp_file_order(path: str, extra_files: list[str] | None = None) -> None:
@@ -62,8 +38,7 @@ def stamp_file_order(path: str, extra_files: list[str] | None = None) -> None:
     file-stream source picks files up in (mtime, path) order and a
     parallel write finishes tasks in RANDOM order, so without the
     re-stamp a replay can feed batches last-range-first — the round-9
-    batch-order bug. One shared implementation: the replay harness in
-    pipelines.py and :func:`write_stream_input` both call this."""
+    batch-order bug."""
     import glob as _glob
 
     files = sorted(_glob.glob(os.path.join(path, "part-*.parquet")))
@@ -76,8 +51,8 @@ def stamp_file_order(path: str, extra_files: list[str] | None = None) -> None:
 def read_stream(
     spark: SparkSession, path: str, schema=None, files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Re-read a :func:`write_stream_input` directory as a file stream, one
-    micro-batch per ``files_per_trigger`` files.
+    """Re-read a replay directory as a file stream, one micro-batch per
+    ``files_per_trigger`` files.
 
     ``files_per_trigger=None`` (default) honors the ``_replay_meta.json``
     marker the parallel replay writer leaves beside the part files (the
@@ -149,7 +124,11 @@ def run_to_memory(
     sdf: DataFrame, output_mode: str = "append", timeout_s: int = 600
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a memory
-    sink; return the sink contents as a batch DataFrame."""
+    sink; return the sink contents as a batch DataFrame.
+
+    The sink's temp view is dropped once resolved: the returned frame
+    keeps the sink's plan and reads the same rows, and the sink's memory
+    goes with that frame instead of living for the whole session."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     with _StreamShufflePartitions(sdf.sparkSession):
         q = (
@@ -160,7 +139,9 @@ def run_to_memory(
             .start()
         )
     _await_or_raise(q, timeout_s)
-    return sdf.sparkSession.table(name)
+    result = sdf.sparkSession.table(name)
+    sdf.sparkSession.catalog.dropTempView(name)
+    return result
 
 
 def run_foreach_batch(

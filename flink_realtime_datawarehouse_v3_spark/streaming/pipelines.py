@@ -57,24 +57,6 @@ from .dim_app import dim_router, read_dim_table
 N_FILES = 4
 
 
-def _topic_db_cached(spark: SparkSession, sf_dir: str, only: list[str]) -> DataFrame:
-    """Structured topic rows for replay INPUT, served from the session's
-    per-branch ODS parse cache (:func:`..sources.cdc.topic_db_parsed`).
-
-    r13 optimization round (guide §1.2 "don't compute things twice"):
-    replay writers previously re-derived ``cdc.topic_db`` from the base
-    parquet per entry — and ``repartitionByRange``'s boundary-sampling
-    pass re-computed that derivation a SECOND time before the write even
-    started. The ODS cache already holds the identical rows (parsed,
-    in-memory columnar, pre-warmed by bench.py's ods_warm loop — exactly
-    the "topics already exist when the job starts" posture the batch lane
-    uses). Row-identity: the builders emit only insert/update envelopes,
-    and the ODS JSON round-trip is lossless for the envelope
-    (``parse(to_json(x)) == x`` field-by-field); the parsed union's extra
-    dirty branch is empty after the P1 filter."""
-    return cdc.topic_db_parsed(spark, sf_dir, only=only)
-
-
 def _max_from_footers(path: str, col: str) -> int:
     """Max of ``col`` over the part files just written under ``path``, read
     from the parquet row-group footer statistics — a driver-side metadata
@@ -482,7 +464,7 @@ def stream_order_info_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3 keyed upsert sink: order_info changelog MERGEd to one row per id
     (last writer wins)."""
     with TempStreamDir() as d:
-        structured = _topic_db_cached(spark, sf_dir, ["order_info"])
+        structured = cdc.topic_db_parsed(spark, sf_dir, ["order_info"])
         flat = structured.select(
             F.col("data").getItem("id").alias("id"),
             F.col("data").getItem("order_status").alias("order_status"),
@@ -508,7 +490,7 @@ def stream_order_info_upsert_snapshot(
     import os
 
     with TempStreamDir() as d:
-        structured = _topic_db_cached(spark, sf_dir, ["order_info"])
+        structured = cdc.topic_db_parsed(spark, sf_dir, ["order_info"])
         flat = structured.select(
             F.col("data").getItem("id").alias("id"),
             F.col("data").getItem("order_status").alias("order_status"),
@@ -588,7 +570,7 @@ def stream_order_pre_process(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import dic
 
     with TempStreamDir() as d:
-        structured = _topic_db_cached(spark, sf_dir, _PRE_TABLES).withColumn(
+        structured = cdc.topic_db_parsed(spark, sf_dir, _PRE_TABLES).withColumn(
             "__order", F.col("ts").cast("long")
         )
         # n_files=2: fewer real-data micro-batches for the heaviest
@@ -680,7 +662,7 @@ def stream_pay_detail_suc(spark: SparkSession, sf_dir: str) -> DataFrame:
     with TempStreamDir() as d:
         od_batch = QUERIES["dwd_trade_order_detail"](spark, sf_dir)
         _write_replay(od_batch, d.sub("od"), order_by=["create_time"])
-        pi_raw = _topic_db_cached(spark, sf_dir, ["payment_info"]).select(
+        pi_raw = cdc.topic_db_parsed(spark, sf_dir, ["payment_info"]).select(
             F.to_json(
                 F.struct("database", "table", "type", "data", "old", "ts")
             ).alias("value")
@@ -708,7 +690,7 @@ def stream_order_info_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stateful import keep_latest_stream
 
     with TempStreamDir() as d:
-        flat = _topic_db_cached(spark, sf_dir, ["order_info"]).select(
+        flat = cdc.topic_db_parsed(spark, sf_dir, ["order_info"]).select(
             F.col("data").getItem("id").alias("id"),
             F.col("data").getItem("order_status").alias("order_status"),
             F.col("data").getItem("operate_time").alias("operate_time"),
@@ -800,7 +782,7 @@ def stream_dim_app(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # order across micro-batches (the JSON parse path is exercised by
         # stream_favor_add; ts is a fixed-width epoch-seconds string, so
         # string range-partitioning preserves numeric order).
-        structured = _topic_db_cached(
+        structured = cdc.topic_db_parsed(
             spark, sf_dir, [c.source_table for c in DIM_CONFIG]
         )
         _write_replay(structured, d.sub("in"), order_by=["ts"])
@@ -996,7 +978,7 @@ def stream_dim_coupon_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cfg = DIM_CONFIG[1]
     with TempStreamDir() as d:
-        structured = _topic_db_cached(spark, sf_dir, [cfg.source_table])
+        structured = cdc.topic_db_parsed(spark, sf_dir, [cfg.source_table])
         _write_replay(structured, d.sub("in"), order_by=["ts"])
         s = read_stream(spark, d.sub("in"))
         out_dir = d.sub("dims")
@@ -1074,7 +1056,7 @@ def stream_dim_user_info_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1, v2 = USER_INFO_EVOLUTION
     t_switch = v2.effective_ts
     with TempStreamDir() as d:
-        structured = _topic_db_cached(spark, sf_dir, ["user_info"])
+        structured = cdc.topic_db_parsed(spark, sf_dir, ["user_info"])
         early = structured.filter(F.col("ts").cast("long") < t_switch)
         late = structured.filter(F.col("ts").cast("long") >= t_switch)
         # Early era as the N_FILES range files; the late era rides the
@@ -1146,7 +1128,7 @@ def stream_activity_coupon_full_outer(spark: SparkSession, sf_dir: str) -> DataF
         )
 
     with TempStreamDir() as dirs:
-        raw = _topic_db_cached(spark, sf_dir, tables_).withColumn(
+        raw = cdc.topic_db_parsed(spark, sf_dir, tables_).withColumn(
             "__order", F.col("ts").cast("long")
         )
         _write_replay(

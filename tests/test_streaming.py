@@ -373,7 +373,6 @@ def test_debounce_anchor_semantics_typed_state(spark, tmp_path):
     from flink_realtime_datawarehouse_v3_spark.streaming.core import (
         read_stream,
         run_to_memory,
-        write_stream_input,
     )
     from flink_realtime_datawarehouse_v3_spark.streaming.stateful import (
         keep_latest_stream,
@@ -397,7 +396,7 @@ def test_debounce_anchor_semantics_typed_state(spark, tmp_path):
         [("__sentinel__", None, None, base + 7200)],
         "id string, order_status string, operate_time string, ts long",
     )
-    write_stream_input(df.union(sent), str(tmp_path / "in"), n_files=2, order_by=["ts"])
+    sp._write_replay(df.union(sent), str(tmp_path / "in"), order_by=["ts"], n_files=2)
     s = read_stream(spark, str(tmp_path / "in")).withColumn(
         "rt", F.to_timestamp(F.from_unixtime("ts"))
     )
@@ -413,6 +412,31 @@ def test_debounce_anchor_semantics_typed_state(spark, tmp_path):
         ("a", None, "op3", base + 3),   # burst1 survivor (latest of 0,3)
         ("a", "s6", None, base + 6),    # burst2 opened by the +6s row
         ("b", None, None, base + 1),
+    ]
+
+
+def test_run_to_memory_leaves_no_sink_table(spark, tmp_path):
+    """run_to_memory drops its memory-sink view once the result is
+    resolved, in append and complete mode; the returned frames keep
+    reading the whole result after a collection."""
+    import gc
+
+    from flink_realtime_datawarehouse_v3_spark.streaming import core
+
+    path = str(tmp_path / "in")
+    spark.range(20).withColumn("k", F.col("id") % 3).write.parquet(path)
+    appended = core.run_to_memory(core.read_stream(spark, path))
+    counted = core.run_to_memory(
+        core.read_stream(spark, path).groupBy("k").count(), output_mode="complete"
+    )
+    gc.collect()
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")] == []
+    assert sorted((r.id, r.k) for r in appended.collect()) == [(i, i % 3) for i in range(20)]
+    assert appended.filter(F.col("k") == 0).count() == 7
+    assert sorted(map(tuple, counted.toPandas().itertuples(index=False))) == [
+        (0, 7),
+        (1, 7),
+        (2, 6),
     ]
 
 
@@ -736,7 +760,7 @@ def test_rocksdb_state_store_active(spark, tmp_path):
         ],
         "mid string, dt string, ts long, event_id string",
     )
-    core.write_stream_input(df, str(tmp_path / "in"), n_files=3, order_by=["ts"])
+    sp._write_replay(df, str(tmp_path / "in"), order_by=["ts"], n_files=3)
     s = core.read_stream(spark, str(tmp_path / "in"))
     out = stateful.first_per_day_stream(s)
     q = (
@@ -883,7 +907,7 @@ def test_stateful_hot_key_bounded_state(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "mid string, dt string, ts long, event_id string"
     )
-    core.write_stream_input(df, str(tmp_path / "in"), n_files=4, order_by=["ts"])
+    sp._write_replay(df, str(tmp_path / "in"), order_by=["ts"], n_files=4)
     s = core.read_stream(spark, str(tmp_path / "in"))
     # This gate asserts the state ROW COUNT via the numRowsTotal metric,
     # which RocksDB only maintains under trackTotalNumberOfRows — the
@@ -1036,25 +1060,18 @@ def test_trailing_window_stream_randomized(spark, tmp_path, seed):
     ).withColumn("trail_avg_micro", F.expr("trail_sum_micro DIV trail_n"))
 
     path = str(tmp_path / "in")
-    core.write_stream_input(df, path, n_files=5, order_by=["ts_s"])
     # trailing sentinel batches flush the final frames (ts far future)
     sent = spark.createDataFrame(
         [(-1, -1, 1_001_000 + k * 1000, 0) for k in range(2)],
         "user_id long, event_id long, ts_s long, v_micro long",
     )
-    import glob
-    import os
-
-    for k, row_df in enumerate(
-        [sent.filter(F.col("ts_s") == 1_001_000 + j * 1000) for j in range(2)]
-    ):
-        tmp = str(tmp_path / f"sent{k}")
-        row_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        (src,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dest = os.path.join(path, f"zzz-sentinel-{k}.parquet")
-        os.replace(src, dest)
-        ts = os.path.getmtime(sorted(glob.glob(path + "/part-*"))[-1]) + 20 * (k + 1)
-        os.utime(dest, (ts, ts))
+    sp._write_replay(
+        df,
+        path,
+        order_by=["ts_s"],
+        sentinels=[sent.filter(F.col("ts_s") == 1_001_000 + j * 1000) for j in range(2)],
+        n_files=5,
+    )
 
     s = core.read_stream(spark, path).withColumn(
         "rt", F.timestamp_seconds(F.col("ts_s"))

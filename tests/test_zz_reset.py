@@ -4,7 +4,10 @@ only add wall time)."""
 
 from __future__ import annotations
 
-from flink_realtime_datawarehouse_v3_spark import api
+import os
+
+from flink_realtime_datawarehouse_v3_spark import api, session
+from flink_realtime_datawarehouse_v3_spark.operators import simsearch
 from flink_realtime_datawarehouse_v3_spark.sources import bucketed, cdc
 
 from .conftest import SF_SMOKE
@@ -12,8 +15,10 @@ from .conftest import SF_SMOKE
 
 def test_reset_session_caches_unpersists_everything(spark):
     """A long-lived session sweeping multiple SF dirs must not accumulate
-    persisted DataFrames: after reset, zero memo entries remain and zero
-    RDDs stay persisted; the next query call re-warms from scratch."""
+    persisted DataFrames: after reset, every session table (iterated from
+    the registry, so a table declared later cannot escape the reset) is
+    empty, the bucketed tables' directory is gone and zero RDDs stay
+    persisted; the next query call re-warms from scratch."""
     def persisted_ids() -> set[int]:
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
@@ -22,22 +27,21 @@ def test_reset_session_caches_unpersists_everything(spark):
     # absolute zero.
     baseline = persisted_ids()
 
-    from flink_realtime_datawarehouse_v3_spark.operators import simsearch
-
-    # Warm at least one memo of each kind (incl. the artifact memo the
-    # ANN/BPE fits share).
+    # Warm at least one entry of each kind (incl. the artifact memo the
+    # ANN/BPE fits share and the bucketed fact tables).
     api.QUERIES["dwd_trade_order_detail"](spark, SF_SMOKE).count()
     api.QUERIES["text_token_stats"](spark, SF_SMOKE).count()
     api.QUERIES["join_bucketed_colocated"](spark, SF_SMOKE).count()
     api.QUERIES["simsearch_ivf_topk"](spark, SF_SMOKE).count()
     assert api._MATERIALIZED and cdc._ODS_CACHE and bucketed._READY
     assert simsearch._ARTIFACTS
+    bucket_dirs = [base for *_, base in bucketed._READY.values()]
+    assert all(os.path.isdir(d) for d in bucket_dirs)
 
     api.reset_session_caches()
-    assert not api._MATERIALIZED
-    assert not cdc._ODS_CACHE
-    assert not bucketed._READY
-    assert not simsearch._ARTIFACTS
+    for table, _ in session._TABLES:
+        assert not table, f"reset left session-table entries: {list(table)[:3]}"
+    assert not any(os.path.exists(d) for d in bucket_dirs), "bucketed dir left behind"
     assert persisted_ids() <= baseline, "reset left memo RDDs persisted"
 
     # And the surface still works after a reset (re-warms cleanly).
