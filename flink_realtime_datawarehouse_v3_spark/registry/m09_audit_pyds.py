@@ -113,9 +113,9 @@ _MVCC_DEMO: dict[tuple, str] = session_table()
 
 
 def _mvcc_demo_table(spark: SparkSession, sf: str) -> str:
-    """The order_info changelog MERGEd through the snapshot-isolated
-    sink in three deterministic ts%3 batches — built ONCE per (sf,
-    session) like the ODS branch caches, shared by both export entries
+    """The order_info changelog MERGEd through the upsert sink in three
+    deterministic ts%3 batches — built ONCE per (sf, session) like the
+    ODS branch caches, shared by both export entries
     (bench attributes the build to the first toucher; any deterministic
     batch split works because keep-latest orders on (ts, batch) and a
     given id's CDC events have distinct ts in this corpus). Returns the
@@ -125,13 +125,12 @@ def _mvcc_demo_table(spark: SparkSession, sf: str) -> str:
 
     from pyspark.sql import functions as F
 
-    from ..streaming import stateful as _st
+    from ..streaming import upsert_table
 
     def build() -> str:
         base = _tmp_sink_path("mvcc_demo", sf)
         shutil.rmtree(base, ignore_errors=True)
         tbl = _os2.path.join(base, "tbl")
-        _os2.makedirs(tbl)
         # r13 optimization round (guide §1.2, same argument as the
         # streaming replays' ODS-served input): serve the order_info
         # envelope from the session's per-branch ODS parse cache instead
@@ -145,7 +144,7 @@ def _mvcc_demo_table(spark: SparkSession, sf: str) -> str:
             F.col("data").getItem("operate_time").alias("operate_time"),
             F.col("ts").cast("long").alias("ts"),
         )
-        fn = _st.upsert_sink_snapshot(["id"], "ts", tbl)
+        fn = upsert_table.upsert_sink(["id"], "ts", tbl)
         for k in range(3):
             fn(flat.filter(F.col("ts") % 3 == k), k)
         return tbl
@@ -164,12 +163,12 @@ def _mvcc_export_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import os as _os2
     import shutil
 
-    from ..streaming import stateful as _st
+    from ..streaming import upsert_table
 
     tbl = _mvcc_demo_table(spark, sf)
     exp = _os2.path.join(_tmp_sink_path("mvcc_export", sf), "export")
     shutil.rmtree(exp, ignore_errors=True)
-    _st.export_upsert_snapshot(spark, tbl, exp)
+    upsert_table.export_upsert_snapshot(spark, tbl, exp)
     return spark.read.parquet(exp)
 
 
@@ -187,12 +186,14 @@ def _mvcc_zonemap_scan(spark: SparkSession, sf: str) -> DataFrame:
     import os as _os2
     import shutil
 
-    from ..streaming import stateful as _st
+    from ..streaming import upsert_table
 
     tbl = _mvcc_demo_table(spark, sf)
     exp = _os2.path.join(_tmp_sink_path("mvcc_zonemap", sf), "export")
     shutil.rmtree(exp, ignore_errors=True)
-    man = _st.export_upsert_snapshot(spark, tbl, exp, sort_by="ts", n_files=8)
+    man = upsert_table.export_upsert_snapshot(
+        spark, tbl, exp, sort_by="ts", n_files=8
+    )
     # bounds from the manifest's own zone maps (bounded driver
     # artifact: <= n_files pairs) — integer arithmetic mirrored in the
     # oracle's min/max subquery
@@ -200,7 +201,7 @@ def _mvcc_zonemap_scan(spark: SparkSession, sf: str) -> DataFrame:
     mn = min(r[0] for r in spans)
     mx = max(r[1] for r in spans)
     lo, hi = mn + (mx - mn) // 4, mn + (mx - mn) // 2
-    return _st.read_export_pruned(spark, exp, "ts", lo, hi)
+    return upsert_table.read_export_pruned(spark, exp, "ts", lo, hi)
 
 
 register(

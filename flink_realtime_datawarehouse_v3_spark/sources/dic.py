@@ -5,10 +5,15 @@ Reference: RT/utils/MysqlUtil.java:10-35 — a MySQL JDBC lookup table
 with a 10-row/1 h lookup cache, joined ``FOR SYSTEM_TIME AS OF`` everywhere
 (RT/app/dwd/DwdTradeCartAdd.java:88-89 etc.).
 
-In the Spark rebuild it is a tiny inline DataFrame that Catalyst broadcasts;
-the lookup-join machinery (cache, async) is unnecessary because a broadcast
-hash join against a <1 KB dim is strictly cheaper. At 100 TB the dim is still
-tiny, so this remains a broadcast join — no shuffle ever.
+In the Spark rebuild it is a tiny inline DataFrame built with
+``spark.createDataFrame(list)``. In classic PySpark that is a pickled Python
+RDD (``Scan ExistingRDD``) with no size statistics, so Catalyst does NOT
+broadcast it in a static plan: every ``base_dic`` join plans as a
+SortMergeJoin with a shuffle. Batch queries can get a broadcast only when AQE
+re-plans at runtime; streaming micro-batches never do, and each one re-runs
+Python workers to unpickle the rows. A relation Catalyst can size (e.g. a
+SQL ``VALUES`` list) would plan the intended broadcast hash join; that fix
+is ROADMAP direction 3, still to be measured op by op.
 """
 
 from __future__ import annotations

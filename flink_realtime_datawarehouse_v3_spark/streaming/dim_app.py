@@ -9,11 +9,17 @@ the batch's routed slice (keyed last-writer-wins, replacing Phoenix
 UPSERT + Redis invalidation, RT/app/func/DimSinkFunction.java:28-50).
 
 Every MERGE here is BUCKET-SCOPED: dim tables are stored partitioned by
-``__bucket = hash(pk) % N`` and a micro-batch reads + rewrites only the
-buckets its keys hash into (dynamic partitionOverwriteMode) — merge cost
-per batch tracks the batch's key footprint, not table size, the shape a
-Phoenix UPSERT actually has (region-server point writes, never a table
+``__bucket = hash(pk) % N`` (the bucketing of :mod:`.upsert_table`) and a
+micro-batch reads + rewrites only the buckets its keys hash into — merge
+cost per batch tracks the batch's key footprint, not table size, the shape
+a Phoenix UPSERT actually has (region-server point writes, never a table
 rewrite).
+
+Unlike the upsert table, these tables rewrite their bucket dirs IN PLACE
+(dynamic partitionOverwriteMode) instead of committing a manifest over
+immutable generations, so a reader that lists a touched bucket during the
+overwrite can see it torn. The contract is single writer, read between
+commits.
 """
 
 from __future__ import annotations
@@ -26,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import keep_latest
 from ..plans.dim import DIM_CONFIG, TableProcess
-from .stateful import N_UPSERT_BUCKETS, bucket_of
+from .upsert_table import N_UPSERT_BUCKETS, bucket_of
 
 
 def _touched_buckets(df: DataFrame) -> list[int]:

@@ -44,7 +44,7 @@ from ..operators import timeseries
 from ..operators.windows import rt_from_ms
 from ..plans import dwd_simple
 from ..sources import cdc, logs
-from . import stateful
+from . import stateful, upsert_table
 from .core import (
     TempStreamDir,
     read_stream,
@@ -474,37 +474,8 @@ def stream_order_info_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         _write_replay(flat, d.sub("in"), order_by=["ts"])
         s = read_stream(spark, d.sub("in"))
         out_path = d.sub("sink")
-        run_foreach_batch(s, stateful.upsert_sink(["id"], "ts", out_path))
-        return stateful.read_upsert_table(spark, out_path).localCheckpoint()
-
-
-def stream_order_info_upsert_snapshot(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """K3 keyed upsert through the SNAPSHOT-ISOLATED sink (atomic
-    manifest-swap commit; see :func:`..streaming.stateful.
-    upsert_sink_snapshot`): same changelog, same MERGE semantics, same
-    oracle as :func:`stream_order_info_upsert` — the entry proves the
-    MVCC commit protocol preserves last-writer-wins row-for-row across
-    a multi-batch replay."""
-    import os
-
-    with TempStreamDir() as d:
-        structured = cdc.topic_db_parsed(spark, sf_dir, ["order_info"])
-        flat = structured.select(
-            F.col("data").getItem("id").alias("id"),
-            F.col("data").getItem("order_status").alias("order_status"),
-            F.col("data").getItem("operate_time").alias("operate_time"),
-            F.col("ts").cast("long").alias("ts"),
-        )
-        _write_replay(flat, d.sub("in"), order_by=["ts"])
-        s = read_stream(spark, d.sub("in"))
-        out_path = d.sub("snap_sink")
-        os.makedirs(out_path, exist_ok=True)
-        run_foreach_batch(
-            s, stateful.upsert_sink_snapshot(["id"], "ts", out_path)
-        )
-        return stateful.read_upsert_snapshot(spark, out_path).localCheckpoint()
+        run_foreach_batch(s, upsert_table.upsert_sink(["id"], "ts", out_path))
+        return upsert_table.read_upsert_table(spark, out_path).localCheckpoint()
 
 
 _PRE_TABLES = [
@@ -1194,7 +1165,7 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The count-min sketch maintained ONLINE (r11): events replayed in
     micro-batches; each batch explodes to its d (row_i, bucket)
     increments and the ADDITIVE MERGE sink
-    (:func:`..streaming.stateful.upsert_sink_snapshot_agg`) folds them
+    (:func:`..streaming.upsert_table.upsert_sink_agg`) folds them
     into the persistent counter table — counter = counter + inc through
     the MVCC commit protocol with idempotent batch replay. Counters are
     additive, so the streamed table equals the one-pass batch build
@@ -1203,11 +1174,8 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production shape: sketch maintained on ingest, queried offline.
     State beyond the counter table itself: one integer (last_batch) in
     the manifest."""
-    import os
-
     from ..operators import analytics
     from ..sources import tables
-    from . import stateful
 
     e = tables.load(spark, sf_dir, "events").select(
         "user_id", F.unix_millis(F.col("ts")).alias("ts_ms")
@@ -1221,14 +1189,10 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rb.row_i"), F.col("rb.bucket"), F.lit(1).alias("counter")
         )
         sink = d.sub("cms")
-        os.makedirs(sink, exist_ok=True)
         run_foreach_batch(
-            inc,
-            stateful.upsert_sink_snapshot_agg(
-                ["row_i", "bucket"], ["counter"], sink
-            ),
+            inc, upsert_table.upsert_sink_agg(["row_i", "bucket"], ["counter"], sink)
         )
-        counters = stateful.read_upsert_snapshot(spark, sink)
+        counters = upsert_table.read_upsert_table(spark, sink)
         counts = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
         return analytics.cms_estimate_topk(
             counts, counters, analytics.CMS_TOP_K

@@ -128,18 +128,18 @@ def test_bucket_of_deterministic_and_ranged(spark):
     and repeated evaluation), and keys spread over more than one bucket."""
     from pyspark.sql import functions as F
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     df = spark.range(500).select(F.col("id").cast("string").alias("k"))
-    a = {r.k: r.b for r in df.select("k", stateful.bucket_of(["k"]).alias("b")).collect()}
+    a = {r.k: r.b for r in df.select("k", upsert_table.bucket_of(["k"]).alias("b")).collect()}
     b = {
         r.k: r.b
         for r in df.repartition(7)
-        .select("k", stateful.bucket_of(["k"]).alias("b"))
+        .select("k", upsert_table.bucket_of(["k"]).alias("b"))
         .collect()
     }
     assert a == b
-    assert all(0 <= v < stateful.N_UPSERT_BUCKETS for v in a.values())
+    assert all(0 <= v < upsert_table.N_UPSERT_BUCKETS for v in a.values())
     assert len(set(a.values())) > 1
 
 
@@ -230,7 +230,7 @@ def test_zonemap_candidates_never_skip_needed_file(files, lo, span):
     stats (empty) must always be kept; files outside the range may be
     kept (file-granular maps overapproximate) but boundary-disjoint
     ones must be skipped."""
-    from flink_realtime_datawarehouse_v3_spark.streaming.stateful import (
+    from flink_realtime_datawarehouse_v3_spark.streaming.upsert_table import (
         zonemap_candidates,
     )
 

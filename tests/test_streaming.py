@@ -32,6 +32,14 @@ def _same(stream_df, batch_df, name):
     assert not bad, f"{name}: first mismatches {bad[:3]}"
 
 
+def _manifest(path):
+    """bucket -> generation dir in an upsert table's committed manifest."""
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
+
+    doc = upsert_table._read_manifest_doc(path)
+    return {int(k): v for k, v in doc.get("buckets", {}).items()}
+
+
 def test_stream_favor_add(spark):
     stream = sp.stream_favor_add(spark, SF_SMOKE)
     batch = api.QUERIES["dwd_interaction_favor_add"](spark, SF_SMOKE)
@@ -149,18 +157,14 @@ def test_stream_multimodal_dhash(spark):
     _same(stream, batch, "multimodal_dhash")
 
 
-def test_stream_order_info_upsert_snapshot(spark):
-    """The snapshot-isolated (manifest-swap) sink must reproduce the
-    plain upsert's last-writer-wins table row-for-row."""
-    stream = sp.stream_order_info_upsert_snapshot(spark, SF_SMOKE)
-    flat = cdc.topic_db(spark, SF_SMOKE, only=["order_info"]).select(
-        F.col("data").getItem("id").alias("id"),
-        F.col("data").getItem("order_status").alias("order_status"),
-        F.col("data").getItem("operate_time").alias("operate_time"),
-        F.col("ts").cast("long").alias("ts"),
+def test_stream_order_info_upsert_snapshot():
+    """Both upsert entry names run the one upsert program, whose
+    last-writer-wins output test_stream_order_info_upsert checks
+    row-for-row (the sink has one commit protocol)."""
+    assert api.QUERIES["streaming_order_info_upsert_snapshot"] is (
+        sp.stream_order_info_upsert
     )
-    batch = keep_latest(flat, ["id"], ["ts"])
-    _same(stream, batch, "order_info_upsert_snapshot")
+    assert api.QUERIES["streaming_order_info_upsert"] is sp.stream_order_info_upsert
 
 
 def test_stream_order_pre_process(spark):
@@ -662,18 +666,20 @@ def test_stream_norm_stats(spark):
     _same(stream, batch, "norm_stats")
 
 
-def test_upsert_sink_untouched_buckets_byte_identical(spark, tmp_path):
-    """The bucketed MERGE contract: a micro-batch rewrites ONLY the
-    bucket partition dirs its keys hash into — every file in every other
-    bucket dir survives byte-identical (same path, same content), proving
-    per-batch merge IO is O(touched buckets), not O(table)."""
+def test_upsert_sink_untouched_buckets_byte_identical(spark, tmp_path, monkeypatch):
+    """The bucketed MERGE contract: a micro-batch writes a new generation
+    for ONLY the bucket its keys hash into — every file already on disk
+    survives byte-identical (same path, same content), untouched buckets
+    keep their manifest pointer, and the merge reads only the touched
+    bucket's files, so per-batch merge IO is O(touched buckets), not
+    O(table)."""
     import hashlib
     import os
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "upsert_tbl")
-    fn = stateful.upsert_sink(["id"], "ts", path)
+    fn = upsert_table.upsert_sink(["id"], "ts", path)
     df1 = spark.createDataFrame(
         [(i, f"v{i}", 10) for i in range(64)], "id int, val string, ts long"
     )
@@ -682,7 +688,7 @@ def test_upsert_sink_untouched_buckets_byte_identical(spark, tmp_path):
     buckets = {
         r.id: r.b
         for r in df1.select(
-            "id", stateful.bucket_of(["id"]).alias("b")
+            "id", upsert_table.bucket_of(["id"]).alias("b")
         ).collect()
     }
     assert len(set(buckets.values())) > 1, "need >1 bucket for the test"
@@ -699,24 +705,45 @@ def test_upsert_sink_untouched_buckets_byte_identical(spark, tmp_path):
                 out[fp] = hashlib.md5(open(fp, "rb").read()).hexdigest()
         return out
 
+    # the merge's current-table read: spy on every bucket read so the
+    # files it can reach are known
+    merge_reads = []
+    orig_read = upsert_table._read_buckets
+
+    def spy(spark_, path_, manifest, bs):
+        df = orig_read(spark_, path_, manifest, bs)
+        merge_reads.append(df)
+        return df
+
     before = snap()
+    m_before = _manifest(path)
     df2 = spark.createDataFrame(
         [(i, "upd", 99) for i in upd_ids], "id int, val string, ts long"
     )
+    monkeypatch.setattr(upsert_table, "_read_buckets", spy)
     fn(df2, 1)
+    monkeypatch.setattr(upsert_table, "_read_buckets", orig_read)
     after = snap()
 
     touched_dir = f"__bucket={target}"
-    untouched_before = {
-        fp: h for fp, h in before.items() if touched_dir not in fp
+    assert len(before) > len([fp for fp in before if touched_dir in fp]), (
+        "every bucket touched — test is vacuous"
+    )
+    for fp, h in before.items():
+        assert after.get(fp) == h, f"committed file changed: {fp}"
+    new_files = set(after) - set(before)
+    assert new_files and all(
+        os.path.join("gen-1", touched_dir) in fp for fp in new_files
+    ), new_files
+    m_after = _manifest(path)
+    assert m_after[target] == "gen-1"
+    assert {b: g for b, g in m_after.items() if b != target} == {
+        b: g for b, g in m_before.items() if b != target
     }
-    assert untouched_before, "every bucket touched — test is vacuous"
-    for fp, h in untouched_before.items():
-        assert after.get(fp) == h, f"untouched bucket file changed: {fp}"
 
     rows = {
         r.id: (r.val, r.ts)
-        for r in stateful.read_upsert_table(spark, path).collect()
+        for r in upsert_table.read_upsert_table(spark, path).collect()
     }
     assert len(rows) == 64
     for i in upd_ids:
@@ -724,20 +751,12 @@ def test_upsert_sink_untouched_buckets_byte_identical(spark, tmp_path):
     missed = next(i for i in range(64) if i not in upd_ids)
     assert rows[missed] == (f"v{missed}", 10)
 
-    # READ-side pruning: the merge's current-table read (bucket filter on
-    # the partition column) must touch only files under the touched
-    # bucket dir — partition pruning, not a post-scan filter.
-    from pyspark.sql import functions as F
-
-    files = {
-        r[0]
-        for r in spark.read.parquet(path)
-        .filter(F.col("__bucket").isin([target]))
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    }
-    assert files and all(touched_dir in f for f in files), files
+    # READ-side pruning: the merge read only files under the touched
+    # bucket dir of the generation the manifest named for it.
+    files = {f for df in merge_reads for f in df.inputFiles()}
+    assert files and all(
+        os.path.join(m_before[target], touched_dir) in f for f in files
+    ), files
 
 
 def test_rocksdb_state_store_active(spark, tmp_path):
@@ -800,10 +819,10 @@ def test_upsert_sink_redelivery_idempotent(spark, tmp_path):
     between sink write and offset commit) must leave the table
     byte-level equal in content: the merge keys on (order_col, __gen)
     which are both pure functions of the delivered batch."""
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "tbl")
-    fn = stateful.upsert_sink(["id"], "ts", path)
+    fn = upsert_table.upsert_sink(["id"], "ts", path)
     b0 = spark.createDataFrame(
         [(i, f"v{i}", 10) for i in range(20)], "id int, val string, ts long"
     )
@@ -813,11 +832,11 @@ def test_upsert_sink_redelivery_idempotent(spark, tmp_path):
     fn(b0, 0)
     fn(b1, 1)
     before = sorted(
-        tuple(r) for r in stateful.read_upsert_table(spark, path).collect()
+        tuple(r) for r in upsert_table.read_upsert_table(spark, path).collect()
     )
     fn(b1, 1)  # redelivery of the last committed batch
     after = sorted(
-        tuple(r) for r in stateful.read_upsert_table(spark, path).collect()
+        tuple(r) for r in upsert_table.read_upsert_table(spark, path).collect()
     )
     assert before == after
 
@@ -830,42 +849,48 @@ def test_stream_multimodal_decode(spark):
     _same(stream, batch, "multimodal_decode")
 
 
-def test_upsert_reader_during_inflight_rewrite(spark, tmp_path):
-    """Pins the documented read-isolation gap of the bucketed overwrite
-    (see upsert_sink docstring): a reader that catches a touched bucket
-    mid-commit sees a TORN read — that bucket's rows missing — never an
-    error and never damage to other buckets. Simulated by emptying one
-    bucket dir (the delete-before-swap instant of the dynamic
-    overwrite); the contract at 100 TB is single-writer +
-    read-between-commits, or Delta/Iceberg MERGE INTO for MVCC reads
-    over the same __bucket layout."""
-    import glob
+def test_upsert_reader_during_inflight_rewrite(spark, tmp_path, monkeypatch):
+    """No torn read: a reader that runs while a commit is in flight —
+    the new generation dir fully written, the manifest not yet swapped —
+    sees the whole old snapshot (all 64 rows, old values), never a
+    missing, duplicated or mixed-generation bucket. After the swap it
+    sees the whole new snapshot."""
     import os
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "upsert_tbl")
-    fn = stateful.upsert_sink(["id"], "ts", path)
-    df1 = spark.createDataFrame(
-        [(i, f"v{i}", 10) for i in range(64)], "id int, val string, ts long"
+    fn = upsert_table.upsert_sink(["id"], "ts", path)
+    old = {(i, f"v{i}", 10) for i in range(64)}
+    fn(spark.createDataFrame(list(old), "id int, val string, ts long"), 0)
+
+    real_acquire = upsert_table._acquire_commit_lock
+    inflight = {}
+
+    def read_before_swap(p, timeout_s=30.0):
+        # gen-1 is on disk; the manifest still names gen-0 everywhere
+        inflight["gen_written"] = os.path.isdir(os.path.join(path, "gen-1"))
+        inflight["rows"] = {
+            (r.id, r.val, r.ts)
+            for r in upsert_table.read_upsert_table(spark, path).collect()
+        }
+        return real_acquire(p, timeout_s)
+
+    monkeypatch.setattr(
+        upsert_table, "_acquire_commit_lock", read_before_swap
     )
-    fn(df1, 0)
-    full = stateful.read_upsert_table(spark, path)
-    assert full.count() == 64
-
-    # simulate the in-flight commit instant: one touched bucket dir has
-    # been cleared but its replacement files are not visible yet
-    victim = sorted(glob.glob(os.path.join(path, "__bucket=*")))[0]
-    n_victim = spark.read.parquet(victim).count()
-    assert n_victim > 0
-    for f in glob.glob(os.path.join(victim, "*")):
-        os.remove(f)
-
-    torn = stateful.read_upsert_table(spark, path)
-    rows = torn.collect()  # must not raise
-    assert len(rows) == 64 - n_victim  # torn: victim bucket absent
-    # other buckets unperturbed: every surviving id reads back intact
-    assert all(r.val == f"v{r.id}" for r in rows)
+    fn(
+        spark.createDataFrame(
+            [(i, "new", 20) for i in range(64)], "id int, val string, ts long"
+        ),
+        1,
+    )
+    assert inflight["gen_written"]
+    assert inflight["rows"] == old
+    assert {
+        (r.id, r.val, r.ts)
+        for r in upsert_table.read_upsert_table(spark, path).collect()
+    } == {(i, "new", 20) for i in range(64)}
 
 
 def test_stateful_hot_key_bounded_state(spark, tmp_path):
@@ -960,24 +985,23 @@ def test_upsert_snapshot_sink_mvcc(spark, tmp_path):
     Pins: (1) merge correctness across batches, (2) a pre-commit reader
     (old manifest) sees the prior snapshot exactly even after the new
     generation's files land, (3) untouched buckets keep their manifest
-    pointer (zero IO), (4) vacuum drops only unreferenced generations."""
+    pointer (zero IO), (4) every generation dir on disk is referenced."""
     import json
     import os
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "snap_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
+    fn = upsert_table.upsert_sink(["id"], "ts", path)
 
     df1 = spark.createDataFrame(
         [(i, f"v{i}", 10) for i in range(64)], "id int, val string, ts long"
     )
     fn(df1, 0)
     snap1 = {(r.id, r.val, r.ts) for r in
-             stateful.read_upsert_snapshot(spark, path).collect()}
+             upsert_table.read_upsert_table(spark, path).collect()}
     assert snap1 == {(i, f"v{i}", 10) for i in range(64)}
-    manifest_v1 = open(os.path.join(path, stateful.MANIFEST_NAME)).read()
+    manifest_v1 = open(os.path.join(path, upsert_table.MANIFEST_NAME)).read()
 
     # batch 2: update 3 keys (newer ts) + one stale row that must lose
     df2 = spark.createDataFrame(
@@ -986,7 +1010,7 @@ def test_upsert_snapshot_sink_mvcc(spark, tmp_path):
     )
     fn(df2, 1)
     snap2 = {(r.id, r.val, r.ts) for r in
-             stateful.read_upsert_snapshot(spark, path).collect()}
+             upsert_table.read_upsert_table(spark, path).collect()}
     want2 = {(i, f"v{i}", 10) for i in range(64) if i not in (1, 2, 3)} | {
         (1, "new1", 20), (2, "new2", 20), (3, "new3", 20)
     }
@@ -994,9 +1018,9 @@ def test_upsert_snapshot_sink_mvcc(spark, tmp_path):
 
     # untouched buckets keep their generation pointer (zero rewrite IO)
     m1 = {int(k): v for k, v in json.loads(manifest_v1)["buckets"].items()}
-    m2 = stateful._read_manifest(path)
+    m2 = _manifest(path)
     touched = {r[0] for r in df2.select(
-        stateful.bucket_of(["id"])).distinct().collect()}
+        upsert_table.bucket_of(["id"])).distinct().collect()}
     for b, gen in m1.items():
         if b not in touched:
             assert m2[b] == gen, f"untouched bucket {b} repointed"
@@ -1005,20 +1029,20 @@ def test_upsert_snapshot_sink_mvcc(spark, tmp_path):
     # MVCC: restore the v1 manifest (a reader that resolved it pre-commit)
     # -> the OLD snapshot reads back exactly; gen-1 files on disk are
     # invisible to it.
-    cur = open(os.path.join(path, stateful.MANIFEST_NAME)).read()
-    with open(os.path.join(path, stateful.MANIFEST_NAME), "w") as f:
+    cur = open(os.path.join(path, upsert_table.MANIFEST_NAME)).read()
+    with open(os.path.join(path, upsert_table.MANIFEST_NAME), "w") as f:
         f.write(manifest_v1)
     assert {(r.id, r.val, r.ts) for r in
-            stateful.read_upsert_snapshot(spark, path).collect()} == snap1
-    with open(os.path.join(path, stateful.MANIFEST_NAME), "w") as f:
+            upsert_table.read_upsert_table(spark, path).collect()} == snap1
+    with open(os.path.join(path, upsert_table.MANIFEST_NAME), "w") as f:
         f.write(cur)
 
-    # vacuum: nothing referenced is dropped; the table still reads whole
-    removed = stateful.vacuum_upsert_snapshot(path, grace_s=0)
-    live = set(stateful._read_manifest(path).values())
-    assert live & set(removed) == set()
+    # no orphan: both commits won, so the manifest references every
+    # generation dir on disk; the table still reads whole
+    gens = {d for d in os.listdir(path) if d.startswith("gen-")}
+    assert set(_manifest(path).values()) == gens == {"gen-0", "gen-1"}
     assert {(r.id, r.val, r.ts) for r in
-            stateful.read_upsert_snapshot(spark, path).collect()} == snap2
+            upsert_table.read_upsert_table(spark, path).collect()} == snap2
 
 
 @pytest.mark.parametrize("seed", [7, 23, 91])
@@ -1103,16 +1127,15 @@ def test_upsert_snapshot_two_writer_race(spark, tmp_path, monkeypatch):
     fresh snapshot, so the final table contains BOTH writers' updates
     (B's disjoint-bucket row survives A's commit; the key both touched
     resolves by order_col). Also pins: the loser's abandoned generation
-    dir is unreferenced and vacuumable, the commit lock is released, and
+    dir is unreferenced by the manifest, the commit lock is released, and
     the manifest version counts every commit."""
     import os
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "race_tbl")
-    os.makedirs(path)
-    fn_a = stateful.upsert_sink_snapshot(["id"], "ts", path)
-    fn_b = stateful.upsert_sink_snapshot(["id"], "ts", path)
+    fn_a = upsert_table.upsert_sink(["id"], "ts", path)
+    fn_b = upsert_table.upsert_sink(["id"], "ts", path)
 
     base = spark.createDataFrame(
         [(i, f"v{i}", 10) for i in range(64)], "id int, val string, ts long"
@@ -1127,7 +1150,7 @@ def test_upsert_snapshot_two_writer_race(spark, tmp_path, monkeypatch):
         [(1, "a1", 30), (9, "a9", 30)], "id int, val string, ts long"
     )
 
-    real_acquire = stateful._acquire_commit_lock
+    real_acquire = upsert_table._acquire_commit_lock
     injected = {"done": False}
 
     def acquire_with_interleaved_commit(p, timeout_s=30.0):
@@ -1141,12 +1164,12 @@ def test_upsert_snapshot_two_writer_race(spark, tmp_path, monkeypatch):
         return real_acquire(p, timeout_s)
 
     monkeypatch.setattr(
-        stateful, "_acquire_commit_lock", acquire_with_interleaved_commit
+        upsert_table, "_acquire_commit_lock", acquire_with_interleaved_commit
     )
     fn_a(df_a, 2)
 
     got = {(r.id, r.val, r.ts) for r in
-           stateful.read_upsert_snapshot(spark, path).collect()}
+           upsert_table.read_upsert_table(spark, path).collect()}
     want = {(i, f"v{i}", 10) for i in range(64) if i not in (1, 5, 9)} | {
         (1, "a1", 30),   # both touched it; A's is newer by order_col
         (5, "b5", 20),   # B-only bucket: MUST survive A's commit
@@ -1154,15 +1177,14 @@ def test_upsert_snapshot_two_writer_race(spark, tmp_path, monkeypatch):
     }
     assert got == want, f"lost update: {sorted(want - got)[:5]}"
 
-    _, version = stateful._read_manifest_versioned(path)
+    version = upsert_table._read_manifest_doc(path)["version"]
     assert version == 3  # base + B + A's retried commit
-    assert not os.path.exists(os.path.join(path, stateful.COMMIT_LOCK_NAME))
-    # A's first (conflicted) attempt left gen-2 orphaned; vacuum drops it
-    # and only it, and the snapshot reads back identically afterwards.
-    removed = stateful.vacuum_upsert_snapshot(path, grace_s=0)
-    assert removed == ["gen-2"], removed
-    assert {(r.id, r.val, r.ts) for r in
-            stateful.read_upsert_snapshot(spark, path).collect()} == want
+    assert not os.path.exists(os.path.join(path, upsert_table.COMMIT_LOCK_NAME))
+    # A's first (conflicted) attempt left gen-2 orphaned on disk: the
+    # manifest references A's retry (gen-2-r1) instead, never gen-2.
+    live = set(_manifest(path).values())
+    assert os.path.isdir(os.path.join(path, "gen-2"))
+    assert "gen-2" not in live and "gen-2-r1" in live, live
 
 
 def test_stateful_restart_under_rescaled_shuffle_partitions(spark):
@@ -1250,110 +1272,6 @@ def test_stateful_restart_under_rescaled_shuffle_partitions(spark):
         assert len(state_parts) == 8, sorted(state_parts)
 
 
-def test_upsert_snapshot_time_travel_and_retention(spark, tmp_path):
-    """Time travel over the MVCC sink: every commit archives its
-    manifest (generation dirs are immutable, so an old manifest IS the
-    old table) — read_upsert_snapshot(version=N) must reproduce the
-    table exactly as of commit N. Retention: vacuum keeps the last
-    ``retain_versions`` snapshots readable, drops generations referenced
-    only by older ones, and a past-retention read raises a clear error
-    instead of returning a half-vacuumed table."""
-    import os
-
-    import pytest as _pytest
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
-
-    path = str(tmp_path / "tt_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
-
-    def snap(version=None):
-        return {
-            (r.id, r.val, r.ts)
-            for r in stateful.read_upsert_snapshot(spark, path, version).collect()
-        }
-
-    base = {(i, f"v{i}", 10) for i in range(16)}
-    fn(spark.createDataFrame(list(base), "id int, val string, ts long"), 0)
-    want = {1: set(base)}
-    for commit, ts in [(2, 20), (3, 30), (4, 40)]:
-        fn(
-            spark.createDataFrame(
-                [(1, f"u{ts}", ts)], "id int, val string, ts long"
-            ),
-            commit - 1,
-        )
-        want[commit] = {r for r in want[commit - 1] if r[0] != 1} | {
-            (1, f"u{ts}", ts)
-        }
-    for v in (1, 2, 3, 4):
-        assert snap(version=v) == want[v], f"version {v} drifted"
-    assert snap() == want[4]
-
-    removed = stateful.vacuum_upsert_snapshot(path, retain_versions=2, grace_s=0)
-    assert removed == ["gen-1"], removed  # referenced only by v2
-    assert snap(version=3) == want[3]  # retained snapshot intact
-    assert snap(version=4) == want[4]
-    assert snap() == want[4]
-    with _pytest.raises(ValueError, match="not available"):
-        snap(version=2)
-
-
-def test_upsert_snapshot_point_lookup_reads_one_bucket(spark, tmp_path):
-    """Serving-path point lookup on the MVCC table: the exact row comes
-    back for a written key (current and time-traveled), an unwritten key
-    yields an empty frame, and — the property the read exists for — the
-    scan touches files from exactly ONE __bucket directory, not the
-    table (inputFiles is the IO the plan can reach)."""
-    import os
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
-
-    path = str(tmp_path / "kv_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
-    fn(
-        spark.createDataFrame(
-            [(i, f"v{i}", 10) for i in range(64)], "id int, val string, ts long"
-        ),
-        0,
-    )
-    fn(
-        spark.createDataFrame([(5, "new5", 20)], "id int, val string, ts long"),
-        1,
-    )
-
-    hit = stateful.read_upsert_snapshot_lookup(spark, path, ["id"], [5])
-    assert [(r.id, r.val, r.ts) for r in hit.collect()] == [(5, "new5", 20)]
-    old = stateful.read_upsert_snapshot_lookup(spark, path, ["id"], [5], version=1)
-    assert [(r.id, r.val, r.ts) for r in old.collect()] == [(5, "v5", 10)]
-    miss = stateful.read_upsert_snapshot_lookup(spark, path, ["id"], [99999])
-    assert miss.count() == 0
-
-    # a key whose BUCKET was never written (single-row table -> most
-    # buckets absent from the manifest) must come back as an empty frame
-    # in the TABLE schema, not an error or a schema-less placeholder
-    sparse = str(tmp_path / "sparse_tbl")
-    os.makedirs(sparse)
-    stateful.upsert_sink_snapshot(["id"], "ts", sparse)(
-        spark.createDataFrame([(1, "only", 1)], "id int, val string, ts long"), 0
-    )
-    for probe in range(2, 40):
-        res = stateful.read_upsert_snapshot_lookup(spark, sparse, ["id"], [probe])
-        assert res.count() == 0
-        assert set(res.columns) == {"id", "val", "ts"}
-
-    buckets_touched = {
-        f.split("__bucket=")[1].split("/")[0]
-        for f in hit.inputFiles()
-        if "__bucket=" in f
-    }
-    assert len(buckets_touched) == 1, buckets_touched
-    full = stateful.read_upsert_snapshot(spark, path)
-    assert len(hit.inputFiles()) < len(full.inputFiles())
-
-
 def test_stream_er_resolve(spark):
     """Resolve-on-arrival == batch blocked ER: the stream-static
     blocking joins + keyed complete-mode min must reproduce the batch
@@ -1378,16 +1296,11 @@ def test_upsert_snapshot_schema_evolution(spark, tmp_path):
     NEW column. The merge unions old and new schemas
     (allowMissingColumns), the new generation carries the wide schema,
     and the reader merges schemas across generations — old rows surface
-    the new column as NULL. Time travel keeps the contract versioned:
-    the pre-evolution snapshot reads back WITHOUT the new column (an
-    old manifest is the old table, schema included)."""
-    import os
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    the new column as NULL."""
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "evolve_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
+    fn = upsert_table.upsert_sink(["id"], "ts", path)
 
     fn(
         spark.createDataFrame(
@@ -1403,20 +1316,13 @@ def test_upsert_snapshot_schema_evolution(spark, tmp_path):
         1,
     )  # v2: adds region
 
-    now = stateful.read_upsert_snapshot(spark, path)
+    now = upsert_table.read_upsert_table(spark, path)
     assert "region" in now.columns
     got = {(r.id, r.val, r.ts, r.region) for r in now.collect()}
     assert got == {
         (1, "a", 10, None),   # pre-evolution row: new column is NULL
         (2, "b2", 20, "emea"),
         (3, "c", 20, "apac"),
-    }
-
-    v1 = stateful.read_upsert_snapshot(spark, path, version=1)
-    assert "region" not in v1.columns
-    assert {(r.id, r.val, r.ts) for r in v1.collect()} == {
-        (1, "a", 10),
-        (2, "b", 10),
     }
 
 
@@ -1704,258 +1610,22 @@ def test_pyds_stream_writer_commits_per_batch(spark, tmp_path):
     assert back.select("event_id").distinct().count() == 800
 
 
-def test_upsert_snapshot_delete_and_purge(spark, tmp_path):
-    """Right-to-be-forgotten on the MVCC table: keyed DELETE commits a
-    new version through the same CAS section as the MERGE (O(touched
-    buckets), snapshot-consistent); TIME TRAVEL still reproduces the
-    pre-delete snapshot — the compliance nuance — until retention
-    vacuum drops it, after which the pre-delete versions raise and the
-    erased rows are unreachable from any readable version."""
-    import os
-
-    import pytest as _pytest
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
-
-    path = str(tmp_path / "gdpr_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
-    base = spark.createDataFrame(
-        [(i, f"v{i}", 10) for i in range(40)], "id int, val string, ts long"
-    )
-    fn(base, 0)  # version 1
-
-    gone = spark.createDataFrame([(3,), (17,), (9999,)], "id long")
-    n = stateful.delete_from_upsert_snapshot(
-        spark, path, ["id"], gone
-    )  # bigint probe vs int column: must cast, and 9999 never existed
-    assert n == 2
-
-    now = {r.id for r in stateful.read_upsert_snapshot(spark, path).collect()}
-    assert 3 not in now and 17 not in now and len(now) == 38
-    # pre-delete snapshot still reproducible (delete is a new version)
-    v1 = {
-        r.id
-        for r in stateful.read_upsert_snapshot(spark, path, version=1).collect()
-    }
-    assert 3 in v1 and 17 in v1 and len(v1) == 40
-    # true erasure: vacuum retention drops the pre-delete version
-    stateful.vacuum_upsert_snapshot(path, retain_versions=1, grace_s=0)
-    with _pytest.raises(ValueError):
-        stateful.read_upsert_snapshot(spark, path, version=1)
-    still = {r.id for r in stateful.read_upsert_snapshot(spark, path).collect()}
-    assert still == now  # live snapshot untouched by the purge
-
-
-def test_upsert_snapshot_delete_empties_bucket(spark, tmp_path):
-    """r12 regression (advisor, medium): a DELETE that removes EVERY row
-    of a touched bucket must DROP that bucket's manifest pointer, not
-    repoint it — partitionBy writes no __bucket=N subdir for an empty
-    bucket, so the old repoint left the manifest referencing a
-    nonexistent path and every subsequent read raised PATH_NOT_FOUND.
-    Pins: read-after-emptying works, the pointer is gone, a later
-    upsert revives the bucket, and full-table erasure reads as None."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
-
-    path = str(tmp_path / "empty_bucket_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
-    base = spark.createDataFrame(
-        [(i, f"v{i}", 10) for i in range(64)], "id int, val string, ts long"
-    )
-    fn(base, 0)  # version 1
-
-    # every id that hashes into one chosen bucket — delete them ALL
-    assign = base.select(
-        "id", stateful.bucket_of(["id"]).alias("__bucket")
-    ).collect()
-    target = assign[0]["__bucket"]
-    victims = [r.id for r in assign if r["__bucket"] == target]
-    assert victims  # sanity: the bucket is non-empty
-    n = stateful.delete_from_upsert_snapshot(
-        spark,
-        path,
-        ["id"],
-        spark.createDataFrame([(i,) for i in victims], "id int"),
-    )
-    assert n == len(victims)
-
-    # the emptied bucket's pointer is GONE (not dangling at a missing dir)
-    manifest, _ = stateful._read_manifest_versioned(path)
-    assert target not in manifest
-    # and the read that used to raise PATH_NOT_FOUND returns exact rows
-    live = {r.id for r in stateful.read_upsert_snapshot(spark, path).collect()}
-    assert live == set(range(64)) - set(victims)
-
-    # a later upsert revives the bucket
-    fn(
-        spark.createDataFrame(
-            [(victims[0], "back", 20)], "id int, val string, ts long"
-        ),
-        1,
-    )
-    manifest2, _ = stateful._read_manifest_versioned(path)
-    assert target in manifest2
-    after = stateful.read_upsert_snapshot(spark, path)
-    assert after.filter(F.col("id") == victims[0]).count() == 1
-
-    # full-table erasure: manifest empties out, reader reports no table
-    n_all = stateful.delete_from_upsert_snapshot(
-        spark,
-        path,
-        ["id"],
-        spark.createDataFrame([(i,) for i in range(64)], "id int"),
-    )
-    assert n_all == 64 - len(victims) + 1
-    assert stateful.read_upsert_snapshot(spark, path) is None
-    # and the empty table still accepts a fresh write
-    fn(
-        spark.createDataFrame([(1, "new", 30)], "id int, val string, ts long"),
-        2,
-    )
-    assert stateful.read_upsert_snapshot(spark, path).count() == 1
-
-
-def test_upsert_snapshot_double_delete_preserves_generations(
-    spark, tmp_path, monkeypatch
-):
-    """r11 regression (advisor, high): every DELETE must commit a FRESH
-    immutable generation dir. Before the fix, the constant 'del' tag made
-    a second delete mode=overwrite the first delete's gen dir while
-    archived manifests still referenced it — buckets touched by delete #1
-    but not delete #2 lost their data and time travel silently returned
-    wrong rows. Pins: distinct gen dirs per delete, the intermediate
-    version reproduced exactly, and O(touched) IO — the delete path reads
-    ONLY the buckets the probe keys hash into, never the whole table
-    (verdict r10 #1: the old accounting added two full-table counts)."""
-    import os
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
-
-    path = str(tmp_path / "dd_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
-    fn(
-        spark.createDataFrame(
-            [(i, f"v{i}", 10) for i in range(64)], "id int, val string, ts long"
-        ),
-        0,
-    )  # version 1: 64 keys cover many buckets
-
-    read_calls: list[set] = []
-    orig = stateful._read_buckets
-
-    def spy(spark_, path_, manifest, buckets):
-        read_calls.append(set(buckets))
-        return orig(spark_, path_, manifest, buckets)
-
-    monkeypatch.setattr(stateful, "_read_buckets", spy)
-    n1 = stateful.delete_from_upsert_snapshot(
-        spark, path, ["id"], spark.createDataFrame([(3,)], "id int")
-    )  # version 2
-    monkeypatch.setattr(stateful, "_read_buckets", orig)
-    assert n1 == 1
-    # O(touched) pin: a 1-key probe touches exactly 1 bucket; every
-    # _read_buckets call during the delete asked for that bucket only,
-    # while the table itself spans many buckets.
-    manifest, _ = stateful._read_manifest_versioned(path)
-    assert len(manifest) > 4
-    assert read_calls and all(len(bs) == 1 for bs in read_calls), read_calls
-
-    n2 = stateful.delete_from_upsert_snapshot(
-        spark, path, ["id"], spark.createDataFrame([(17,)], "id int")
-    )  # version 3
-    assert n2 == 1
-
-    # the two deletes committed DISTINCT generation dirs
-    del_gens = {g for g in os.listdir(path) if g.startswith("gen-del-")}
-    assert len(del_gens) == 2, sorted(os.listdir(path))
-
-    # time travel: v2 (after delete #1, before delete #2) is intact —
-    # the overwrite bug made exactly this snapshot lose rows
-    v2 = {
-        r.id
-        for r in stateful.read_upsert_snapshot(spark, path, version=2).collect()
-    }
-    assert v2 == set(range(64)) - {3}
-    live = {r.id for r in stateful.read_upsert_snapshot(spark, path).collect()}
-    assert live == set(range(64)) - {3, 17}
-
-
-def test_vacuum_reader_lease(spark, tmp_path):
-    """r11 (verdict #3): the vacuum reader lease. A reader that resolved
-    a retained snapshot keeps its generation dirs for ``grace_s`` after
-    they fall out of retention (tombstone first, purge on a later
-    vacuum); within the lease the read COMPLETES with exact rows, past
-    the lease it RAISES (ignoreMissingFiles=false default) — never a
-    silently partial frame."""
-    import os
-
-    import pytest as _pytest
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
-
-    path = str(tmp_path / "lease_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
-    fn(
-        spark.createDataFrame(
-            [(i, "old", 10) for i in range(20)], "id int, val string, ts long"
-        ),
-        0,
-    )  # version 1 -> gen-0
-    fn(
-        spark.createDataFrame(
-            [(i, "new", 20) for i in range(20)], "id int, val string, ts long"
-        ),
-        1,
-    )  # version 2 -> gen-1 repoints every bucket; gen-0 now v1-only
-
-    # reader resolves v1 while it is still readable (holds the lease)
-    reader_v1 = stateful.read_upsert_snapshot(spark, path, version=1)
-
-    # vacuum past v1's retention with the DEFAULT grace: the v1 manifest
-    # goes away at once (new readers get the clear error) but gen-0 is
-    # only tombstoned — the in-flight reader's files survive the lease.
-    removed = stateful.vacuum_upsert_snapshot(path, retain_versions=1)
-    assert removed == []
-    assert os.path.isdir(os.path.join(path, "gen-0"))
-    with _pytest.raises(ValueError, match="not available"):
-        stateful.read_upsert_snapshot(spark, path, version=1)
-    got = {(r.id, r.val) for r in reader_v1.collect()}  # completes, exact
-    assert got == {(i, "old") for i in range(20)}
-
-    # lease expired (grace_s=0 purges tombstoned dirs now): the stale
-    # reader fails loudly — missing files are an ERROR, not a short read.
-    removed = stateful.vacuum_upsert_snapshot(path, retain_versions=1, grace_s=0)
-    assert "gen-0" in removed
-    with _pytest.raises(Exception, match="(?i)file|path|exist"):
-        reader_v1.collect()
-    live = {(r.id, r.val) for r in stateful.read_upsert_snapshot(spark, path).collect()}
-    assert live == {(i, "new") for i in range(20)}
-
-
 def test_mvcc_export_cross_engine(spark, tmp_path):
     """r11 interop export: a committed MVCC snapshot materialized to
     plain parquet + manifest must be readable by an engine with NO
     knowledge of the manifest resolver (DuckDB here), match the source
-    snapshot exactly, and honor time travel (exporting version=1
-    reproduces the pre-update table). The manifest's row count and file
-    list must describe exactly what landed."""
+    snapshot exactly, and record the snapshot's manifest version. The
+    manifest's row count and file list must describe exactly what
+    landed."""
     import json
     import os
 
     import duckdb
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "exp_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
+    fn = upsert_table.upsert_sink(["id"], "ts", path)
     fn(
         spark.createDataFrame(
             [(i, "old", 10) for i in range(30)], "id int, val string, ts long"
@@ -1971,7 +1641,7 @@ def test_mvcc_export_cross_engine(spark, tmp_path):
     )  # version 2: evens updated
 
     out = str(tmp_path / "export_cur")
-    man = stateful.export_upsert_snapshot(spark, path, out)
+    man = upsert_table.export_upsert_snapshot(spark, path, out)
     assert man["source_version"] == 2 and man["n_rows"] == 30
     assert man["files"] and all(f.endswith(".parquet") for f in man["files"])
     disk = json.load(open(os.path.join(out, "_EXPORT.json")))
@@ -1982,14 +1652,6 @@ def test_mvcc_export_cross_engine(spark, tmp_path):
     ).fetchall()
     want = [(i, "new" if i % 2 == 0 else "old") for i in range(30)]
     assert rows == want
-    # time-travel export: version 1 is the pre-update table
-    out1 = str(tmp_path / "export_v1")
-    man1 = stateful.export_upsert_snapshot(spark, path, out1, version=1)
-    assert man1["source_version"] == 1
-    rows1 = duckdb.sql(
-        f"SELECT DISTINCT val FROM '{out1}/*.parquet'"
-    ).fetchall()
-    assert rows1 == [("old",)]
 
 
 def test_mvcc_export_zone_maps_prune(spark, tmp_path):
@@ -2001,11 +1663,10 @@ def test_mvcc_export_zone_maps_prune(spark, tmp_path):
     import json
     import os
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "zm_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
+    fn = upsert_table.upsert_sink(["id"], "ts", path)
     fn(
         spark.createDataFrame(
             [(i, f"v{i}", 1000 + i) for i in range(400)],
@@ -2014,7 +1675,7 @@ def test_mvcc_export_zone_maps_prune(spark, tmp_path):
         0,
     )
     out = str(tmp_path / "zm_export")
-    man = stateful.export_upsert_snapshot(
+    man = upsert_table.export_upsert_snapshot(
         spark, path, out, sort_by="ts", n_files=4
     )
     zm = man["zone_maps"]["ts"]
@@ -2024,16 +1685,16 @@ def test_mvcc_export_zone_maps_prune(spark, tmp_path):
         assert ahi < blo  # disjoint: sorted layout, honest maps
     # narrow range: strict subset of files, exact rows
     lo, hi = 1050, 1120
-    cand = stateful.zonemap_candidates(man, "ts", lo, hi)
+    cand = upsert_table.zonemap_candidates(man, "ts", lo, hi)
     assert 0 < len(cand) < len(man["files"]), (cand, man["files"])
     got = {
         (r.id, r.ts)
-        for r in stateful.read_export_pruned(spark, out, "ts", lo, hi).collect()
+        for r in upsert_table.read_export_pruned(spark, out, "ts", lo, hi).collect()
     }
     assert got == {(i, 1000 + i) for i in range(50, 121)}
     # out-of-domain range: zero files, empty frame, schema intact
-    assert stateful.zonemap_candidates(man, "ts", 5000, 6000) == []
-    empty = stateful.read_export_pruned(spark, out, "ts", 5000, 6000)
+    assert upsert_table.zonemap_candidates(man, "ts", 5000, 6000) == []
+    empty = upsert_table.read_export_pruned(spark, out, "ts", 5000, 6000)
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == ["id", "val", "ts"]
     # manifest on disk round-trips
@@ -2047,19 +1708,16 @@ def test_upsert_snapshot_agg_sink_additive_and_idempotent(spark, tmp_path):
     watermark making at-least-once redelivery safe — a replayed batch
     id (same or older) is skipped WHOLESALE, never double-added; new
     batch ids keep accumulating."""
-    import os
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "agg_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot_agg(["k"], ["v"], path)
+    fn = upsert_table.upsert_sink_agg(["k"], ["v"], path)
 
     b0 = spark.createDataFrame([(1, 10), (2, 5), (1, 3)], "k int, v long")
     fn(b0, 0)
     snap = lambda: {  # noqa: E731
         r.k: r.v
-        for r in stateful.read_upsert_snapshot(spark, path).collect()
+        for r in upsert_table.read_upsert_table(spark, path).collect()
     }
     assert snap() == {1: 13, 2: 5}
 
@@ -2074,7 +1732,7 @@ def test_upsert_snapshot_agg_sink_additive_and_idempotent(spark, tmp_path):
     fn(b1, 1)  # and a replay of the latest
     assert snap() == {1: 13, 2: 6, 3: 7}
 
-    doc = stateful._read_manifest_doc(path)
+    doc = upsert_table._read_manifest_doc(path)
     assert doc["last_batch"] == 1 and doc["version"] == 2
 
 
@@ -2087,17 +1745,16 @@ def test_agg_sink_duplicate_batch_race_applies_once(spark, tmp_path, monkeypatch
     on the re-read: the increment lands exactly once."""
     import os
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "agg_race_tbl")
-    os.makedirs(path)
-    fn_a = stateful.upsert_sink_snapshot_agg(["k"], ["v"], path)
-    fn_b = stateful.upsert_sink_snapshot_agg(["k"], ["v"], path)
+    fn_a = upsert_table.upsert_sink_agg(["k"], ["v"], path)
+    fn_b = upsert_table.upsert_sink_agg(["k"], ["v"], path)
 
     fn_a(spark.createDataFrame([(1, 10)], "k int, v long"), 0)
     dup = spark.createDataFrame([(1, 7)], "k int, v long")
 
-    real_acquire = stateful._acquire_commit_lock
+    real_acquire = upsert_table._acquire_commit_lock
     injected = {"done": False}
 
     def acquire_with_duplicate_commit(p, timeout_s=30.0):
@@ -2107,36 +1764,34 @@ def test_agg_sink_duplicate_batch_race_applies_once(spark, tmp_path, monkeypatch
         return real_acquire(p, timeout_s)
 
     monkeypatch.setattr(
-        stateful, "_acquire_commit_lock", acquire_with_duplicate_commit
+        upsert_table, "_acquire_commit_lock", acquire_with_duplicate_commit
     )
     fn_a(dup, 1)  # racing duplicate of the SAME batch
-    monkeypatch.setattr(stateful, "_acquire_commit_lock", real_acquire)
+    monkeypatch.setattr(upsert_table, "_acquire_commit_lock", real_acquire)
 
     snap = {
         r.k: r.v
-        for r in stateful.read_upsert_snapshot(spark, path).collect()
+        for r in upsert_table.read_upsert_table(spark, path).collect()
     }
     assert snap == {1: 17}, f"duplicate batch double-applied: {snap}"
-    doc = stateful._read_manifest_doc(path)
+    doc = upsert_table._read_manifest_doc(path)
     assert doc["last_batch"] == 1 and doc["version"] == 2
-    assert not os.path.exists(os.path.join(path, stateful.COMMIT_LOCK_NAME))
+    assert not os.path.exists(os.path.join(path, upsert_table.COMMIT_LOCK_NAME))
 
 
 def test_lww_sink_replay_never_overwrites_committed_generation(spark, tmp_path):
     """Crash-recovery replay of an ALREADY-COMMITTED foreachBatch id
     (at-least-once delivery: sink committed, stream commit-log entry
-    lost) must not rewrite gen-{id} in place — archived manifests and
-    mid-scan readers still reference it. The replay's re-merge goes to
-    a fresh suffixed generation and commits by manifest repoint; the
-    original dir stays byte-identical and time travel to the
-    pre-replay version is unperturbed."""
+    lost) must not rewrite gen-{id} in place — mid-scan readers may
+    still resolve it. The replay's re-merge goes to a fresh suffixed
+    generation and commits by manifest repoint; the original dir stays
+    byte-identical and the table reads back unchanged."""
     import os
 
-    from flink_realtime_datawarehouse_v3_spark.streaming import stateful
+    from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
 
     path = str(tmp_path / "replay_tbl")
-    os.makedirs(path)
-    fn = stateful.upsert_sink_snapshot(["id"], "ts", path)
+    fn = upsert_table.upsert_sink(["id"], "ts", path)
     b0 = spark.createDataFrame(
         [(i, f"v{i}", 10) for i in range(20)], "id int, val string, ts long"
     )
@@ -2155,16 +1810,10 @@ def test_lww_sink_replay_never_overwrites_committed_generation(spark, tmp_path):
     gens = [g for g in os.listdir(path) if g.startswith("gen-0")]
     assert len(gens) == 2 and any("-rp" in g for g in gens), gens
     # replay re-commits (LWW re-merge is content-idempotent): version 2,
-    # table unchanged, v1 time travel intact
-    _, v = stateful._read_manifest_versioned(path)
-    assert v == 2
+    # table unchanged
+    assert upsert_table._read_manifest_doc(path)["version"] == 2
     live = {
         (r.id, r.val)
-        for r in stateful.read_upsert_snapshot(spark, path).collect()
+        for r in upsert_table.read_upsert_table(spark, path).collect()
     }
     assert live == {(i, f"v{i}") for i in range(20)}
-    v1 = {
-        (r.id, r.val)
-        for r in stateful.read_upsert_snapshot(spark, path, version=1).collect()
-    }
-    assert v1 == live
