@@ -5,6 +5,14 @@ tumbling window -> field-wise sums / exact count-distinct -> stt/edt
 stamping; trade jobs add broadcast star joins against the dims
 (SURVEY.md J11 — replacing the reference's async Redis/Phoenix chain).
 
+The keyword windows and the union window are split into stages that
+their streaming twins (``streaming/pipelines.py``) call too: a words
+stage (:func:`source_keyword_words`, :func:`cjk_keyword_words`) and the
+one 10 s count stage :func:`keyword_window_counts`; the page shaping
+:func:`vc_page_rows` and the window sums :func:`vc_window_sums`. A twin
+puts its watermark between the stages; the batch entry composes them
+directly, so both run the same query body.
+
 The reference's emit-time ``ts`` (System.currentTimeMillis) is omitted —
 nondeterministic, excluded from hashes (FIXTURES.md F5).
 
@@ -45,10 +53,9 @@ def _dec(c: Column) -> Column:
 # --- traffic -----------------------------------------------------------------
 
 
-def traffic_source_keyword_page_view_window(
-    page: DataFrame, segmenter=None
-) -> DataFrame:
-    """A1 + U1: tokenize search keywords, count per word per 10 s window.
+def source_keyword_words(page: DataFrame, segmenter=None) -> DataFrame:
+    """Words stage of A1 + U1: search keywords tokenized to ``(word, rt)``
+    rows, one per token.
 
     Reference: RT/app/dws/DwsTrafficSourceKeywordPageViewWindow.java:57-89.
     Divergence (documented): the reference filters ``last_page_id='search'``
@@ -69,33 +76,20 @@ def traffic_source_keyword_page_view_window(
         & (F.col("item_type") == "keyword")
         & F.col("item").isNotNull()
     ).select("item", rt_from_ms(F.col("ts")).alias("rt"))
-    words = filtered.select(
-        F.explode(tok(F.col("item"))).alias("word"), "rt"
-    )
-    return tumble(words, F.col("rt"), "word").agg(
-        F.count(F.lit(1)).alias("keyword_count")
-    ).select(
-        F.lit("search").alias("source"),
-        *stt_edt(),
-        F.col("word").alias("keyword"),
-        "keyword_count",
-    )
+    return filtered.select(F.explode(tok(F.col("item"))).alias("word"), "rt")
 
 
-def traffic_keyword_cjk_window(page: DataFrame) -> DataFrame:
-    """U1 with the CJK segmenter plugged in: the keyword window over
-    Chinese search phrases, dictionary FMM segmentation (IK-Analyzer's
-    core mechanism, RT/utils/KeywordUtil.java:18-37) via the Arrow-batched
-    plug point.
+def cjk_keyword_words(page: DataFrame) -> DataFrame:
+    """Words stage of U1 with the CJK segmenter plugged in: dictionary FMM
+    segmentation (IK-Analyzer's core mechanism,
+    RT/utils/KeywordUtil.java:18-37) via the Arrow-batched plug point.
 
     The synthetic log carries latin keywords, so the search rows are
     deterministically mapped onto the bundled CJK phrase list
     (``ts % len(CJK_PHRASES)``) — the oracle applies the same mapping and
     segments with a recursive longest-dictionary-prefix CTE, so the
     segmentation itself is independently recomputed, not hard-coded.
-
-    Scale: the UDF is Arrow-batched and purely per-row; everything else is
-    the same explode -> tumble -> hash-agg shape as the latin window.
+    The UDF is Arrow-batched and purely per-row.
     """
     from ..functions.tokenize import CJK_PHRASES, segment_cjk_pandas_udf
 
@@ -111,19 +105,80 @@ def traffic_keyword_cjk_window(page: DataFrame) -> DataFrame:
         ).alias("item"),
         rt_from_ms(F.col("ts")).alias("rt"),
     )
-    words = filtered.select(
+    return filtered.select(
         F.explode(segment_cjk_pandas_udf(F.col("item"))).alias("word"), "rt"
     )
-    return (
-        tumble(words, F.col("rt"), "word")
-        .agg(F.count(F.lit(1)).alias("keyword_count"))
-        .select(
-            F.lit("search").alias("source"),
-            *stt_edt(),
-            F.col("word").alias("keyword"),
-            "keyword_count",
-        )
+
+
+def keyword_window_counts(words: DataFrame) -> DataFrame:
+    """Count stage shared by both keyword windows: ``(word, rt)`` rows
+    counted per word per 10 s tumbling window, stamped stt/edt.
+
+    The batch entries compose a words stage with this one directly; the
+    streaming twins put their watermark on ``rt`` between the two, so
+    stream and batch run one query body."""
+    return tumble(words, F.col("rt"), "word").agg(
+        F.count(F.lit(1)).alias("keyword_count")
+    ).select(
+        F.lit("search").alias("source"),
+        *stt_edt(),
+        F.col("word").alias("keyword"),
+        "keyword_count",
     )
+
+
+def traffic_source_keyword_page_view_window(
+    page: DataFrame, segmenter=None
+) -> DataFrame:
+    """A1 + U1: tokenize search keywords, count per word per 10 s window."""
+    return keyword_window_counts(source_keyword_words(page, segmenter))
+
+
+def traffic_keyword_cjk_window(page: DataFrame) -> DataFrame:
+    """U1 with the CJK segmenter: the keyword window over Chinese search
+    phrases."""
+    return keyword_window_counts(cjk_keyword_words(page))
+
+
+VC_KEYS = ["vc", "ch", "ar", "is_new"]
+
+
+def _vc_rows(df: DataFrame, uv_v, sv: Column, pv_v, dur: Column, uj_v) -> DataFrame:
+    return df.select(
+        *VC_KEYS,
+        rt_from_ms(F.col("ts")).alias("rt"),
+        F.lit(uv_v).cast("long").alias("uv"),
+        sv.cast("long").alias("sv"),
+        F.lit(pv_v).cast("long").alias("pv"),
+        dur.cast("long").alias("dur"),
+        F.lit(uj_v).cast("long").alias("uj"),
+    )
+
+
+def vc_page_rows(page: DataFrame) -> DataFrame:
+    """The page branch of the union window, shaped as contribution rows
+    ``(vc, ch, ar, is_new, rt, uv, sv, pv, dur, uj)``: pv=1, sv=1 on a
+    session start, dur=during_time."""
+    return _vc_rows(
+        page,
+        0,
+        F.when(F.col("last_page_id").isNull(), 1).otherwise(0),
+        1,
+        F.col("during_time"),
+        0,
+    )
+
+
+def vc_window_sums(contrib: DataFrame) -> DataFrame:
+    """Sum the union's contribution rows per (vc, ch, ar, is_new) per 10 s
+    window; shared by the batch entry and its streaming twin."""
+    return tumble(contrib, F.col("rt"), *VC_KEYS).agg(
+        F.sum("uv").alias("uv_ct"),
+        F.sum("sv").alias("sv_ct"),
+        F.sum("pv").alias("pv_ct"),
+        F.sum("dur").alias("dur_sum"),
+        F.sum("uj").alias("uj_ct"),
+    ).select(*stt_edt(), *VC_KEYS, "uv_ct", "sv_ct", "pv_ct", "dur_sum", "uj_ct")
 
 
 def traffic_vc_ch_ar_is_new_page_view_window(
@@ -135,39 +190,12 @@ def traffic_vc_ch_ar_is_new_page_view_window(
     (page -> pv/sv/dur, UV topic -> uv_ct, jump topic -> uj_ct, union,
     keyed 10 s window, field-wise sums).
     """
-    keys = ["vc", "ch", "ar", "is_new"]
-
-    def shape(df: DataFrame, uv_v, sv: Column, pv_v, dur: Column, uj_v) -> DataFrame:
-        return df.select(
-            *keys,
-            rt_from_ms(F.col("ts")).alias("rt"),
-            F.lit(uv_v).cast("long").alias("uv"),
-            sv.cast("long").alias("sv"),
-            F.lit(pv_v).cast("long").alias("pv"),
-            dur.cast("long").alias("dur"),
-            F.lit(uj_v).cast("long").alias("uj"),
-        )
-
     z = F.lit(0)
-    unioned = (
-        shape(
-            page,
-            0,
-            F.when(F.col("last_page_id").isNull(), 1).otherwise(0),
-            1,
-            F.col("during_time"),
-            0,
-        )
-        .unionByName(shape(uv, 1, z, 0, z, 0))
-        .unionByName(shape(jump, 0, z, 0, z, 1))
+    return vc_window_sums(
+        vc_page_rows(page)
+        .unionByName(_vc_rows(uv, 1, z, 0, z, 0))
+        .unionByName(_vc_rows(jump, 0, z, 0, z, 1))
     )
-    return tumble(unioned, F.col("rt"), *keys).agg(
-        F.sum("uv").alias("uv_ct"),
-        F.sum("sv").alias("sv_ct"),
-        F.sum("pv").alias("pv_ct"),
-        F.sum("dur").alias("dur_sum"),
-        F.sum("uj").alias("uj_ct"),
-    ).select(*stt_edt(), *keys, "uv_ct", "sv_ct", "pv_ct", "dur_sum", "uj_ct")
 
 
 def traffic_page_view_window(page: DataFrame) -> DataFrame:

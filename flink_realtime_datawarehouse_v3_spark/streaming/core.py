@@ -2,18 +2,25 @@
 
 The reference's jobs consume unbounded Kafka topics; the driver's data is
 finite parquet. The replay harness makes a faithful finite stream out of
-any batch DataFrame:
+any batch DataFrame, and this module owns its directory format (the part
+files, the flush-wave files and ``_replay_meta.json``) on both sides:
 
-- ``pipelines._write_replay`` materializes a batch DataFrame as ``n_files``
-  time-ordered micro-batch groups of parquet files, with
-  :func:`stamp_file_order` pinning the file order;
-- :func:`read_stream` re-reads them one group per trigger, so each group
-  becomes its own micro-batch — state, watermarks and timers advance
-  across real micro-batch boundaries exactly as they would on Kafka;
-- ``sentinel`` rows far past the last event time can be appended as the
-  final batches, advancing the watermark so that closing windows / timers
-  flush before ``availableNow`` terminates (Flink's job-end watermark+Long.MAX
-  flush does the same on bounded input).
+- :func:`_write_replay` writes a batch DataFrame as ``n_files``
+  time-ordered micro-batch groups of parquet files, then one file per
+  trailing wave, and records the trigger chunking in ``_replay_meta.json``;
+  :func:`stamp_file_order` pins the file order;
+- :func:`read_stream` re-reads the directory one group per trigger, so
+  each group becomes its own micro-batch: state, watermarks and timers
+  advance across real micro-batch boundaries exactly as they would on
+  Kafka.
+
+One flush protocol serves every event-time twin: two sentinel waves at
+the fixed times :data:`FLUSH_TIMES_S`, past every fixture's event time,
+advance the watermark so closing windows and timers flush before
+``availableNow`` terminates (Flink's job-end Long.MAX watermark does the
+same on bounded input). Twins drop the sentinels' own output by its
+window time (anything at or after :data:`FLUSH_EPOCH_S`) or by their
+sentinel key.
 
 Runners execute a streaming DataFrame to a memory sink or through
 ``foreachBatch`` and block until completion. The memory sink's temp view
@@ -23,6 +30,8 @@ DataFrame that reads it.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 import tempfile
@@ -30,6 +39,17 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+N_FILES = 4  # real-data micro-batches per replay
+REPLAY_META = "_replay_meta.json"
+
+# 2100-01-01 00:00:00 UTC, past the largest event time of every fixture.
+# The two flush waves sit 1 h and 2 h after it: the watermark computed
+# from wave k takes effect in batch k+1, so wave 1's batch closes every
+# real window/timer and wave 2's batch emits them.
+FLUSH_EPOCH_S = 4_102_444_800
+FLUSH_TIMES_S = (FLUSH_EPOCH_S + 3600, FLUSH_EPOCH_S + 7200)
 
 
 def stamp_file_order(path: str, extra_files: list[str] | None = None) -> None:
@@ -37,15 +57,72 @@ def stamp_file_order(path: str, extra_files: list[str] | None = None) -> None:
     order (then ``extra_files``, e.g. sentinel batches, after them). The
     file-stream source picks files up in (mtime, path) order and a
     parallel write finishes tasks in RANDOM order, so without the
-    re-stamp a replay can feed batches last-range-first — the round-9
-    batch-order bug."""
-    import glob as _glob
-
-    files = sorted(_glob.glob(os.path.join(path, "part-*.parquet")))
+    re-stamp a replay can feed batches last-range-first."""
+    files = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
     files.extend(extra_files or [])
     base = 1_600_000_000  # fixed epoch: deterministic across runs
     for i, f in enumerate(files):
         os.utime(f, (base + i * 10, base + i * 10))
+
+
+def _pad_empty_like(src_file: str, dest: str) -> None:
+    """Write a ZERO-ROW parquet file with ``src_file``'s schema (a pyarrow
+    footer-only write, no Spark job)."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(pq.ParquetFile(src_file).read().slice(0, 0), dest)
+
+
+def _write_replay(
+    df: DataFrame,
+    path: str,
+    order_by: list[str] | None,
+    sentinels: list[DataFrame] | None = None,
+    n_files: int = N_FILES,
+) -> None:
+    """Write ``df`` to ``path`` as a replay directory: ``n_files``
+    time-range micro-batch groups, then one micro-batch per frame in
+    ``sentinels`` (the flush waves, or any trailing file such as late
+    data or a second era), in list order.
+
+    Each group holds ``files_per_trigger`` (``fpb``) range-contiguous
+    part files, so the write job runs ``n_files * fpb`` tasks instead of
+    ``n_files``; ``fpb`` goes into ``_replay_meta.json`` for
+    :func:`read_stream`, which reads one group per trigger. Batch
+    boundaries in event time and the batch count are the same as with
+    one file per batch, which is what ``fpb == 1`` gives when
+    ``SPARK_GRAFT_CPUS`` <= ``n_files``. Each trailing frame is one file
+    padded with ``fpb - 1`` zero-row files to a full trigger chunk, so
+    the chunked reader never merges two waves into one batch.
+    """
+    par = df.sparkSession.sparkContext.defaultParallelism
+    fpb = max(1, min(8, par // n_files))
+    total = n_files * fpb
+    if order_by:
+        df = df.repartitionByRange(total, *[F.col(c) for c in order_by])
+    else:
+        df = df.repartition(total)
+    df.write.mode("overwrite").parquet(path)
+    sent_files = []
+    for i, sdf in enumerate(sentinels or []):
+        tmp = f"{path}__sent{i}"
+        # repartition(1), NOT coalesce(1): a coalesced single task over a
+        # parallelized local relation inherits its parent's preferred
+        # locations and waits through the scheduler's locality ladder,
+        # measured 5.8 s per 1-row sentinel vs 0.7 s through the
+        # 1-partition shuffle.
+        sdf.repartition(1).write.mode("overwrite").parquet(tmp)
+        (src,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+        dest = os.path.join(path, f"zzz-sentinel-{i}.parquet")
+        os.replace(src, dest)
+        sent_files.append(dest)
+        for j in range(fpb - 1):
+            pad = os.path.join(path, f"zzz-sentinel-{i}-pad{j}.parquet")
+            _pad_empty_like(dest, pad)
+            sent_files.append(pad)
+    stamp_file_order(path, sent_files)
+    with open(os.path.join(path, REPLAY_META), "w") as f:
+        json.dump({"files_per_trigger": fpb}, f)
 
 
 def read_stream(
@@ -54,17 +131,13 @@ def read_stream(
     """Re-read a replay directory as a file stream, one micro-batch per
     ``files_per_trigger`` files.
 
-    ``files_per_trigger=None`` (default) honors the ``_replay_meta.json``
-    marker the parallel replay writer leaves beside the part files (the
-    writer decides the trigger chunking that reproduces its intended
-    micro-batch boundaries — see ``pipelines._write_replay``), falling
-    back to the classic one-file-per-batch replay."""
+    ``files_per_trigger=None`` (default) takes the chunking
+    :func:`_write_replay` recorded in ``_replay_meta.json``, falling back
+    to one file per batch for a directory without it."""
     if files_per_trigger is None:
-        meta = os.path.join(path, "_replay_meta.json")
+        meta = os.path.join(path, REPLAY_META)
         files_per_trigger = 1
         if os.path.exists(meta):
-            import json
-
             with open(meta) as f:
                 files_per_trigger = int(json.load(f)["files_per_trigger"])
     if schema is None:

@@ -1,161 +1,44 @@
-"""End-to-end streaming runs of representative pipelines (stream==batch).
+"""End-to-end streaming twins of the batch pipelines (stream==batch).
 
 Each runner replays the synthesized topic through the file-stream harness
 (:mod:`.core`), applies the pipeline under ``trigger(availableNow=True)``,
 and returns the streamed result as a batch DataFrame for comparison against
-the batch pipeline (tests/test_streaming.py).
+the batch pipeline (tests/test_streaming.py). Where the batch entry is
+split into stages, the twin calls the same stages and puts its watermark
+between them, so both run one query body.
 
-Pipelines covered (one per SURVEY.md streaming mechanism):
-- stateless DWD filter (P1/P3/P4)            -> stream_favor_add
-- watermark + 10 s tumbling window agg (A1)  -> stream_keyword_window
-- keyed-state UV dedup (D1/W4)               -> stream_unique_visitor
-- keyed-state CEP bounce w/ timeout (D5/W10) -> stream_jump_detail
-- keyed upsert sink (K3)                     -> stream_order_info_upsert
-- checkpointed sink kill+resume (K2/W11)     -> stream_checkpoint_recovery
-- broadcast-config DIM routing (J10/P6/K5)   -> stream_dim_app
-- stream-stream join, inner + 2 bounded left
-  + stream-static dic lookup (J1/J2/J3/W5)   -> stream_order_pre_process
-- 3-way payment join over two independent
-  streams (J5)                               -> stream_pay_detail_suc
-- session windows (gap-merge, append mode)   -> stream_sessionize
-- continuous 1-min rollup w/ min_by/max_by   -> stream_time_rollup
-- hopping (sliding) windows, append mode     -> stream_hop_window
-- incremental SCD2 history maintenance       -> stream_dim_coupon_scd2
-- late-data discard, hash-gated (W12)        -> stream_keyword_window_late
-- runtime schema evolution, config flip live -> stream_dim_user_info_evolve
-- COMPLETE-mode running aggregation         -> stream_value_histogram
-- stream-stream FULL OUTER join, banded     -> stream_activity_coupon_full_outer
-- CJK dictionary-FMM segmenter in-window    -> stream_keyword_cjk_window
-- COMPLETE-mode global ORDER BY / LIMIT     -> stream_type_counts_top
-- ingestion-time dedup vs static base       -> stream_dedup_incremental
+:mod:`..registry.m11_streaming` lists every twin under its registry name,
+paired with the batch entry whose oracle it shares.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokenize
 from ..operators import timeseries
 from ..operators.windows import rt_from_ms
-from ..plans import dwd_simple
-from ..sources import cdc, logs
+from ..plans import dwd_simple, dws
+from ..sources import cdc, logs, tables
 from . import stateful, upsert_table
 from .core import (
+    FLUSH_EPOCH_S,
+    FLUSH_TIMES_S,
+    N_FILES,
     TempStreamDir,
+    _write_replay,
     read_stream,
     run_foreach_batch,
     run_to_memory,
-    stamp_file_order,
 )
 from .dim_app import dim_router, read_dim_table
 
-N_FILES = 4
-
-
-def _max_from_footers(path: str, col: str) -> int:
-    """Max of ``col`` over the part files just written under ``path``, read
-    from the parquet row-group footer statistics — a driver-side metadata
-    scan (a few KB per file), replacing the full-input ``agg(max).collect``
-    Spark job each replay previously paid for its sentinel timestamps."""
-    import pyarrow.parquet as pq
-
-    mx = None
-    for f in glob.glob(os.path.join(path, "part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(col)
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is not None and st.has_min_max:
-                mx = st.max if mx is None else max(mx, st.max)
-    if mx is None:
-        raise ValueError(f"no footer statistics for column {col!r} under {path}")
-    return mx
-
-
-def _pad_empty_like(src_file: str, dest: str) -> None:
-    """Write a ZERO-ROW parquet file with ``src_file``'s schema (a pyarrow
-    footer-only write — no Spark job). Pads fill a sentinel's trigger
-    chunk so the sentinel still gets a micro-batch of its own when the
-    replay reads >1 file per trigger (see :func:`_write_replay`)."""
-    import pyarrow.parquet as pq
-
-    t = pq.ParquetFile(src_file).read()
-    pq.write_table(t.slice(0, 0), dest)
-
-
-def _write_replay(
-    df: DataFrame,
-    path: str,
-    order_by: list[str] | None,
-    sentinels=None,
-    max_col: str | None = None,
-    n_files: int = N_FILES,
-) -> None:
-    """Write ``df`` as ``n_files`` time-range MICRO-BATCH GROUPS of parquet
-    files (+ optional sentinel rows, each as its own trailing micro-batch).
-
-    Write parallelism (r13 optimization round, guide §2.6/§6): the batch
-    count contract is ``n_files`` micro-batches, but writing exactly
-    ``n_files`` part files pins the input-write job to that many tasks —
-    measured 36.5 s of streaming_order_pre_process's 142 s at sf0.1 on
-    local[32] with 2 write tasks. Instead the replay writes
-    ``n_files * files_per_trigger`` range-contiguous files (full-width
-    write job) and records ``files_per_trigger`` in a ``_replay_meta.json``
-    marker that :func:`..core.read_stream` picks up, so each trigger
-    consumes one contiguous range GROUP — identical batch boundaries in
-    event time, identical batch count, wider write and scan. With
-    ``SPARK_GRAFT_CPUS`` <= ``n_files`` (the driver's low-core scaling
-    bench) this degrades to exactly the old one-file-per-batch layout.
-
-    Two trailing sentinels are the bounded-input flush protocol: the
-    watermark computed from sentinel k only takes effect in batch k+1, so
-    the first sentinel's batch closes every real-data window/timer and the
-    second's batch emits them before availableNow terminates. Each
-    sentinel file is padded with zero-row files to a full trigger chunk so
-    the chunked reader never merges two sentinels into one batch.
-
-    ``sentinels`` is either a list of DataFrames or a callable
-    ``max_value -> list[DataFrame]``; the callable form gets the max of
-    ``max_col`` from the written files' footer stats, so sentinel
-    construction costs no extra input scan.
-    """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    fpb = max(1, min(8, par // n_files))  # files per micro-batch group
-    total = n_files * fpb
-    if order_by:
-        df = df.repartitionByRange(total, *[F.col(c) for c in order_by])
-    else:
-        df = df.repartition(total)
-    df.write.mode("overwrite").parquet(path)
-    if callable(sentinels):
-        sentinels = sentinels(_max_from_footers(path, max_col))
-    sent_files = []
-    for i, sdf in enumerate(sentinels or []):
-        tmp = f"{path}__sent{i}"
-        # repartition(1), NOT coalesce(1): a coalesced single task over a
-        # parallelized local relation inherits 32 parent preferred
-        # locations and sits through the scheduler's locality-wait ladder
-        # — measured 5.8 s PER 1-ROW SENTINEL vs 0.7 s through the
-        # 1-partition shuffle (r13 optimization round, guide §7.4
-        # "scheduler delay"). Two sentinels per replay made this ~11 s of
-        # invisible per-entry overhead across the streaming lane.
-        sdf.repartition(1).write.mode("overwrite").parquet(tmp)
-        (src,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dest = os.path.join(path, f"zzz-sentinel-{i}.parquet")
-        os.replace(src, dest)
-        sent_files.append(dest)
-        for j in range(fpb - 1):
-            pad = os.path.join(path, f"zzz-sentinel-{i}-pad{j}.parquet")
-            _pad_empty_like(dest, pad)
-            sent_files.append(pad)
-    stamp_file_order(path, sent_files)
-    with open(os.path.join(path, "_replay_meta.json"), "w") as f:
-        json.dump({"files_per_trigger": fpb}, f)
+# Output at or after the flush epoch belongs to the flush waves.
+_FLUSH_MS = FLUSH_EPOCH_S * 1000
+_FLUSH_STT = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(FLUSH_EPOCH_S))
 
 
 def stream_favor_add(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,18 +63,18 @@ def _page_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 SENTINEL_WORD = "zzsentinelflush"
 
 
-def _page_sentinel(page: DataFrame, mx: int, hours: int = 1) -> DataFrame:
-    """One synthetic heartbeat page event ``hours`` past ``mx`` (the
-    stream's max event time, from the replay files' footer stats): pushes
-    the watermark over every open window/timer (Flink's end-of-input
+def _page_sentinels(page: DataFrame) -> list[DataFrame]:
+    """The two flush waves of a page-log replay: one heartbeat page event
+    at each of :data:`.core.FLUSH_TIMES_S` (Flink's end-of-input
     Long.MAX watermark flush, for bounded replay).
 
     The row is shaped to SURVIVE the pipelines' filters (search page with a
     sentinel keyword): Catalyst pushes deterministic filters below the
     EventTimeWatermark operator, so a row that a filter drops never advances
-    the watermark. Consumers drop the sentinel on the output side.
+    the watermark. Consumers drop the sentinel's output by window time or
+    by its ``__sentinel__`` mid.
     """
-    return (
+    row = (
         page.limit(1)
         .select(
             *[
@@ -201,111 +84,67 @@ def _page_sentinel(page: DataFrame, mx: int, hours: int = 1) -> DataFrame:
                 for f in page.schema.fields
             ]
         )
-        .withColumn("ts", F.lit(mx + hours * 3600 * 1000).cast("long"))
         .withColumn("mid", F.lit("__sentinel__"))
         .withColumn("page_id", F.lit("search"))
         .withColumn("item_type", F.lit("keyword"))
         .withColumn("item", F.lit(SENTINEL_WORD))
     )
+    return [row.withColumn("ts", F.lit(t * 1000).cast("long")) for t in FLUSH_TIMES_S]
+
+
+def _late_page(page: DataFrame) -> DataFrame:
+    """The earliest 50 page events re-sent with renamed mids, so they
+    would inflate the keyword counts if a closed window accepted them."""
+    return (
+        page.orderBy("ts", "event_id")
+        .limit(50)
+        .withColumn("mid", F.concat(F.lit("late_"), F.col("mid")))
+    )
+
+
+def _keyword_twin(
+    spark: SparkSession, sf_dir: str, words_of, late: bool = False
+) -> DataFrame:
+    """The keyword-window twins' one body: the batch words stage
+    ``words_of``, a 2 s watermark on ``rt``, then the batch count stage
+    :func:`..plans.dws.keyword_window_counts` in append mode (windows emit
+    exactly once, on watermark passage). ``late`` replays
+    :func:`_late_page` between the two flush waves."""
+    page = _page_log(spark, sf_dir)
+    first, second = _page_sentinels(page)
+    waves = [first, _late_page(page), second] if late else [first, second]
+    with TempStreamDir() as d:
+        _write_replay(page, d.sub("in"), order_by=["ts"], sentinels=waves)
+        words = words_of(read_stream(spark, d.sub("in"))).withWatermark(
+            "rt", "2 seconds"
+        )
+        out = run_to_memory(dws.keyword_window_counts(words), output_mode="append")
+        return out.filter(F.col("stt") < _FLUSH_STT)
 
 
 def stream_keyword_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 as a native streaming windowed aggregation: watermark 2 s,
-    10 s tumbling count per keyword (append mode — windows emit exactly
-    once, on watermark passage)."""
-    page = _page_log(spark, sf_dir)
-    with TempStreamDir() as d:
-        _write_replay(
-            page,
-            d.sub("in"),
-            order_by=["ts"],
-            sentinels=lambda mx: [
-                _page_sentinel(page, mx, hours=1),
-                _page_sentinel(page, mx, hours=2),
-            ],
-            max_col="ts",
-        )
-        s = read_stream(spark, d.sub("in"))
-        s = s.withColumn("rt", rt_from_ms(F.col("ts"))).withWatermark("rt", "2 seconds")
-        words = s.filter(
-            (F.col("page_id") == "search")
-            & (F.col("item_type") == "keyword")
-            & F.col("item").isNotNull()
-        ).select(F.explode(tokenize(F.col("item"))).alias("word"), "rt")
-        agg = (
-            words.groupBy(F.window("rt", "10 seconds").alias("w"), "word")
-            .agg(F.count(F.lit(1)).alias("keyword_count"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-                F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
-                F.lit("search").alias("source"),
-                F.col("word").alias("keyword"),
-                "keyword_count",
-            )
-        )
-        return run_to_memory(agg, output_mode="append").filter(
-            F.col("keyword") != SENTINEL_WORD
-        )
+    """A1 as a native streaming windowed aggregation: 10 s tumbling count
+    per keyword."""
+    return _keyword_twin(spark, sf_dir, dws.source_keyword_words)
 
 
 def stream_keyword_cjk_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1+A1 with the dictionary-FMM CJK segmenter (an Arrow-batched
     Pandas UDF) running INSIDE the watermarked streaming window — proves
     the segmenter plug point holds under micro-batch execution, not just
-    batch. Same replay/sentinel protocol as stream_keyword_window; the
-    sentinel row keeps its latin marker token (a projection, not a
-    filter, so it still advances the watermark) and is dropped on the
-    output side."""
-    from ..functions.tokenize import CJK_PHRASES, segment_cjk_pandas_udf
+    batch. The sentinel rows are segmented like any search row; their
+    windows fall after the flush epoch and are dropped."""
+    return _keyword_twin(spark, sf_dir, dws.cjk_keyword_words)
 
-    page = _page_log(spark, sf_dir)
-    with TempStreamDir() as d:
-        _write_replay(
-            page,
-            d.sub("in"),
-            order_by=["ts"],
-            sentinels=lambda mx: [
-                _page_sentinel(page, mx, hours=1),
-                _page_sentinel(page, mx, hours=2),
-            ],
-            max_col="ts",
-        )
-        s = read_stream(spark, d.sub("in"))
-        s = s.withColumn("rt", rt_from_ms(F.col("ts"))).withWatermark(
-            "rt", "2 seconds"
-        )
-        phrases = F.array(*[F.lit(p) for p in CJK_PHRASES])
-        toks = F.when(
-            F.col("item") == SENTINEL_WORD, F.array(F.lit(SENTINEL_WORD))
-        ).otherwise(
-            segment_cjk_pandas_udf(
-                F.element_at(
-                    phrases,
-                    (F.col("ts").cast("bigint") % len(CJK_PHRASES) + 1).cast(
-                        "int"
-                    ),
-                )
-            )
-        )
-        words = s.filter(
-            (F.col("page_id") == "search")
-            & (F.col("item_type") == "keyword")
-            & F.col("item").isNotNull()
-        ).select(F.explode(toks).alias("word"), "rt")
-        agg = (
-            words.groupBy(F.window("rt", "10 seconds").alias("w"), "word")
-            .agg(F.count(F.lit(1)).alias("keyword_count"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-                F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
-                F.lit("search").alias("source"),
-                F.col("word").alias("keyword"),
-                "keyword_count",
-            )
-        )
-        return run_to_memory(agg, output_mode="append").filter(
-            F.col("keyword") != SENTINEL_WORD
-        )
+
+def stream_keyword_window_late(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W12 on the driver board: the keyword window replay with LATE
+    duplicates (:func:`_late_page`) in a trailing micro-batch AFTER the
+    first flush wave pushed the watermark past end-of-data. The entry
+    shares the NORMAL batch oracle: the hash can only match if every late
+    row is discarded (the reference has no allowed-lateness or late
+    side-output — default watermark semantics, SURVEY.md W12)."""
+    return _keyword_twin(spark, sf_dir, dws.source_keyword_words, late=True)
 
 
 def stream_unique_visitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,12 +160,10 @@ def stream_unique_visitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = stateful.first_per_day_stream(s, key="mid", dt_col="dt")
-        # r14: back to the 8-partition replay default. The r12 widening
-        # existed because Python ran once per KEY per batch; the bucketed
-        # operator runs once per BUCKET, so the per-batch cost is now the
-        # stateful-stage floor (store open/commit x partitions) and fewer
-        # partitions win: A/B wide-vs-8 at sf0.1 read 5.9 -> 4.2 s
-        # min-of-3 (8 won all three interleaved pairs).
+        # The 8-partition replay default: the bucketed operator's
+        # per-batch cost is the stateful-stage floor (store open/commit x
+        # partitions), so fewer partitions win; an A/B of wide against 8
+        # at sf0.1 read 5.9 -> 4.2 s min-of-3 (8 won all three pairs).
         return run_to_memory(out, output_mode="append").drop("dt")
 
 
@@ -335,22 +172,12 @@ def stream_jump_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     page = _page_log(spark, sf_dir)
     with TempStreamDir() as d:
         _write_replay(
-            page,
-            d.sub("in"),
-            order_by=["ts"],
-            sentinels=lambda mx: [
-                _page_sentinel(page, mx, hours=1),
-                _page_sentinel(page, mx, hours=2),
-            ],
-            max_col="ts",
+            page, d.sub("in"), order_by=["ts"], sentinels=_page_sentinels(page)
         )
         s = read_stream(spark, d.sub("in")).withColumn("rt", rt_from_ms(F.col("ts")))
         out = stateful.jump_detect_stream(s).filter(F.col("mid") != "__sentinel__")
-        # r14: back to the 8-partition replay default (see
-        # stream_unique_visitor) — per-batch decomposition showed a
-        # ~1.2 s stateful-stage floor per batch at 32 partitions once
-        # bucketing removed the per-key Python cost; A/B wide-vs-8 at
-        # sf0.1 read 11.8 -> 9.2 s min-of-3 (8 won all three pairs).
+        # The 8-partition replay default, as in stream_unique_visitor: an
+        # A/B of wide against 8 at sf0.1 read 11.8 -> 9.2 s min-of-3.
         return run_to_memory(out, output_mode="append")
 
 
@@ -358,59 +185,35 @@ def stream_traffic_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 3-stream union window job (A2/A4 + O1 + W1's 14 s watermark,
     RT/app/dws/DwsTrafficVcChArIsNewPageViewWindow.java:60-185) with
     CHAINED stateful operators: one replayed page stream fans into the
-    raw page branch, a D1 first-per-day UV branch
-    (applyInPandasWithState), and a D5 bounce branch (event-time
-    timeout); the shaped union flows through a single 14 s watermark into
-    a keyed 10 s tumbling window (second stateful layer).
+    batch entry's page shaping (:func:`..plans.dws.vc_page_rows`) and one
+    keyed operator emitting the D1 first-per-day UV and D5 bounce
+    contributions; the union flows through a single 14 s watermark into
+    the batch entry's window sums (:func:`..plans.dws.vc_window_sums`).
 
     Sentinel rows must reach every watermark node, so they are NOT
     filtered pre-union (a mid filter would be pushed below the
-    EventTimeWatermark and starve it); their all-null (vc, ch, ar,
-    is_new) key is dropped from the aggregated output instead. Bounce
-    timeout emissions are never late to the window layer: a bounce at
-    event time T flushes once the watermark passes T+10 s, while its
-    window only closes at window_end + 14 s > T + 14 s. Spark allows a
-    single applyInPandasWithState per query, so the UV and bounce state
-    machines run as ONE keyed operator emitting pre-shaped contribution
-    rows (stateful.uv_jump_contrib_stream).
+    EventTimeWatermark and starve it); their windows, after the flush
+    epoch, are dropped from the output. Bounce timeout emissions are
+    never late to the window layer: a bounce at event time T flushes once
+    the watermark passes T+10 s, while its window only closes at
+    window_end + 14 s > T + 14 s. Spark allows a single
+    applyInPandasWithState per query, so the UV and bounce state machines
+    run as ONE keyed operator (stateful.uv_jump_contrib_stream).
     """
-    from ..operators.windows import stt_edt, tumble
-
     page = _page_log(spark, sf_dir)
-    keys = ["vc", "ch", "ar", "is_new"]
-
     with TempStreamDir() as d:
         _write_replay(
-            page,
-            d.sub("in"),
-            order_by=["ts"],
-            sentinels=lambda mx: [
-                _page_sentinel(page, mx, hours=1),
-                _page_sentinel(page, mx, hours=2),
-            ],
-            max_col="ts",
+            page, d.sub("in"), order_by=["ts"], sentinels=_page_sentinels(page)
         )
         s = read_stream(spark, d.sub("in"))
-        stateful_in = s.withColumn("rt", rt_from_ms(F.col("ts"))).withColumn(
-            "dt", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
-        )
-        contrib = stateful.uv_jump_contrib_stream(stateful_in)
-        page_shaped = s.select(
-            *keys,
-            F.col("ts"),
-            F.lit(0).cast("long").alias("uv"),
-            F.when(F.col("last_page_id").isNull(), 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("sv"),
-            F.lit(1).cast("long").alias("pv"),
-            F.col("during_time").cast("long").alias("dur"),
-            F.lit(0).cast("long").alias("uj"),
+        contrib = stateful.uv_jump_contrib_stream(
+            s.withColumn("rt", rt_from_ms(F.col("ts"))).withColumn(
+                "dt", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
+            )
         )
         unioned = (
-            page_shaped.unionByName(contrib)
-            .withColumn("rt", rt_from_ms(F.col("ts")))
-            .drop("ts")
+            dws.vc_page_rows(s)
+            .unionByName(contrib.withColumn("rt", rt_from_ms(F.col("ts"))).drop("ts"))
             .withWatermark("rt", "14 seconds")
         )
         # Spark's static checker rejects ANY stateful op above another
@@ -425,9 +228,8 @@ def stream_traffic_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set(chk, "false")
         # With the check disabled Spark still WARN-logs the full analyzed
         # plan + AnalysisException text from UnsupportedOperationChecker
-        # at every query start — pure noise once the safety argument
-        # above holds, and it pollutes committed sweep logs (r11 verdict
-        # cosmetic #2). Quiet exactly that logger for the run.
+        # at every query start — noise once the safety argument above
+        # holds. Quiet exactly that logger for the run.
         _uoc = "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker"
         _jvm = spark._jvm
         _saved_lvl = _jvm.org.apache.logging.log4j.LogManager.getLogger(
@@ -437,27 +239,13 @@ def stream_traffic_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             _uoc, _jvm.org.apache.logging.log4j.Level.ERROR
         )
         try:
-            agg = (
-                tumble(unioned, F.col("rt"), *keys)
-                .agg(
-                    F.sum("uv").alias("uv_ct"),
-                    F.sum("sv").alias("sv_ct"),
-                    F.sum("pv").alias("pv_ct"),
-                    F.sum("dur").alias("dur_sum"),
-                    F.sum("uj").alias("uj_ct"),
-                )
-                .select(
-                    *stt_edt(), *keys,
-                    "uv_ct", "sv_ct", "pv_ct", "dur_sum", "uj_ct",
-                )
-            )
-            out = run_to_memory(agg, output_mode="append")
+            out = run_to_memory(dws.vc_window_sums(unioned), output_mode="append")
         finally:
             spark.conf.set(chk, saved)
             _jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
                 _uoc, _saved_lvl
             )
-        return out.filter(F.col("vc").isNotNull())
+        return out.filter(F.col("stt") < _FLUSH_STT)
 
 
 def stream_order_info_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,11 +341,7 @@ def stream_order_pre_process(spark: SparkSession, sf_dir: str) -> DataFrame:
             structured,
             d.sub("in"),
             order_by=["__order"],
-            sentinels=lambda mx: [
-                _pre_sentinel(spark, mx + 3600),
-                _pre_sentinel(spark, mx + 7200),
-            ],
-            max_col="__order",
+            sentinels=[_pre_sentinel(spark, t) for t in FLUSH_TIMES_S],
             n_files=2,
         )
         s = read_stream(spark, d.sub("in")).drop("__order")
@@ -658,8 +442,6 @@ def stream_order_info_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     every open timer fires before availableNow terminates; their key is
     filtered here.
     """
-    from .stateful import keep_latest_stream
-
     with TempStreamDir() as d:
         flat = cdc.topic_db_parsed(spark, sf_dir, ["order_info"]).select(
             F.col("data").getItem("id").alias("id"),
@@ -667,26 +449,21 @@ def stream_order_info_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("data").getItem("operate_time").alias("operate_time"),
             F.col("ts").cast("long").alias("ts"),
         )
-        def sents(mx: int) -> list:
-            return [
-                spark.createDataFrame(
-                    [("__sentinel__", None, None, mx + dt)],
-                    "id string, order_status string, operate_time string, ts long",
-                )
-                for dt in (3600, 7200)
-            ]
-
+        sents = [
+            spark.createDataFrame(
+                [("__sentinel__", None, None, t)],
+                "id string, order_status string, operate_time string, ts long",
+            )
+            for t in FLUSH_TIMES_S
+        ]
         # n_files=2 (see stream_order_pre_process; same modest effect):
         # emission grouping per batch varies by design and the parity
         # collapses it; the timer flush rides the sentinels.
-        _write_replay(
-            flat, d.sub("in"), order_by=["ts"], sentinels=sents,
-            max_col="ts", n_files=2,
-        )
+        _write_replay(flat, d.sub("in"), order_by=["ts"], sentinels=sents, n_files=2)
         s = read_stream(spark, d.sub("in")).withColumn(
             "rt", F.to_timestamp(F.from_unixtime("ts"))
         )
-        out = keep_latest_stream(s, keys=["id"], order_col="ts").filter(
+        out = stateful.keep_latest_stream(s, keys=["id"], order_col="ts").filter(
             F.col("id") != "__sentinel__"
         )
         # The 8-partition replay default is enough: the bucketed
@@ -710,8 +487,6 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged — the kill timing affects which code path proves the
     guarantee, never the output.
     """
-    import time
-
     with TempStreamDir() as d:
         raw = cdc.topic_db_json(spark, sf_dir, only=["favor_info"])
         _write_replay(raw, d.sub("in"), order_by=None)
@@ -768,6 +543,29 @@ def stream_dim_app(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         }
 
 
+def _events_twin(spark: SparkSession, e: DataFrame, agg, start_col: str) -> DataFrame:
+    """Replay event rows ``e`` (``ts`` a timestamp) with the two flush
+    waves, run ``agg`` over the stream watermarked 2 s on ``ts`` in append
+    mode, and drop the waves' output by its window start ``start_col``
+    (epoch ms). The wave rows are null but for ``ts``."""
+    waves = [
+        spark.range(1).select(
+            *[
+                F.timestamp_seconds(F.lit(t)).alias("ts")
+                if f.name == "ts"
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in e.schema.fields
+            ]
+        )
+        for t in FLUSH_TIMES_S
+    ]
+    with TempStreamDir() as d:
+        _write_replay(e, d.sub("in"), order_by=["ts"], sentinels=waves)
+        s = read_stream(spark, d.sub("in")).withWatermark("ts", "2 seconds")
+        out = run_to_memory(agg(s), output_mode="append")
+        return out.filter(F.col(start_col) < _FLUSH_MS)
+
+
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows under streaming: watermarked native
     ``session_window`` gap-merge in append mode — each (user, session)
@@ -776,45 +574,13 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-class Flink window type (EventTimeSessionWindows.withGap) under
     Spark's native operator, replayed file-per-micro-batch so sessions
     MERGE across micro-batches (a session spanning two files is held in
-    state until the gap expires, then emitted once).
+    state until the gap expires, then emitted once). The replay carries
+    the batch entry's shaped input (``shape_events``) and the twin runs
+    the batch aggregation ``session_agg``."""
+    from ..operators.sessionize import session_agg, shape_events
 
-    Sentinels: two heartbeat rows 1 h / 2 h past max event time (> GAP)
-    close and flush every real session before availableNow terminates;
-    their synthetic user is dropped on the output side.
-    """
-    from ..operators.sessionize import session_agg
-    from ..sources import tables
-
-    # Epoch-ms longs in the replay files (Spark parquet timestamps are
-    # int96 — no footer min/max for the sentinel derivation); re-typed to
-    # timestamp after the streaming read.
-    e = tables.load(spark, sf_dir, "events").select(
-        "user_id", F.unix_millis(F.col("ts")).alias("ts_ms"), "value"
-    )
-    with TempStreamDir() as d:
-        def sents(mx: int) -> list:
-            return [
-                spark.createDataFrame(
-                    [(-1, mx + h * 3_600_000, 0.0)],
-                    "user_id long, ts_ms long, value double",
-                )
-                for h in (1, 2)
-            ]
-
-        _write_replay(e, d.sub("in"), order_by=["ts_ms"], sentinels=sents, max_col="ts_ms")
-        s = (
-            read_stream(spark, d.sub("in"))
-            .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-            .drop("ts_ms")
-            .withWatermark("ts", "2 seconds")
-        )
-        # Sentinel drop must happen on the MATERIALIZED output: a
-        # grouping-key filter inside the streaming plan is pushed below
-        # EventTimeWatermark and would silently eat the sentinels (same
-        # constraint as _page_sentinel).
-        return run_to_memory(session_agg(s), output_mode="append").filter(
-            F.col("user_id") != -1
-        )
+    e = shape_events(tables.load(spark, sf_dir, "events"))
+    return _events_twin(spark, e, session_agg, "session_start_ms")
 
 
 def stream_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -825,36 +591,14 @@ def stream_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitting each (user, bucket) exactly once on watermark passage.
 
     Shares the batch oracle of ``events_time_rollup`` (window.start ==
-    the arithmetic bucket, both epoch-aligned). Sentinels: two heartbeat
-    rows 1 h / 2 h past max event time advance the watermark so every
-    real bucket flushes before availableNow terminates; the synthetic
-    user is dropped on the materialized output (a grouping-key filter
-    inside the plan would be pushed below EventTimeWatermark and eat the
-    sentinels — same constraint as stream_sessionize).
-    """
-    from ..sources import tables
+    the arithmetic bucket, both epoch-aligned). The twin keeps its own
+    ``window()`` aggregation: append mode needs its grouping to be a
+    window over the watermarked column, and the batch form groups by a
+    bucket computed with floor arithmetic on epoch ms."""
+    e = tables.load(spark, sf_dir, "events").select("user_id", "ts", "value")
 
-    e = tables.load(spark, sf_dir, "events").select(
-        "user_id", F.unix_millis(F.col("ts")).alias("ts_ms"), "value"
-    )
-    with TempStreamDir() as d:
-        def sents(mx: int) -> list:
-            return [
-                spark.createDataFrame(
-                    [(-1, mx + h * 3_600_000, 0.0)],
-                    "user_id long, ts_ms long, value double",
-                )
-                for h in (1, 2)
-            ]
-
-        _write_replay(e, d.sub("in"), order_by=["ts_ms"], sentinels=sents, max_col="ts_ms")
-        s = (
-            read_stream(spark, d.sub("in"))
-            .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-            .drop("ts_ms")
-            .withWatermark("ts", "2 seconds")
-        )
-        agg = (
+    def rollup(s: DataFrame) -> DataFrame:
+        return (
             s.groupBy(F.window("ts", "1 minute").alias("w"), "user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -877,64 +621,19 @@ def stream_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "max_value",
             )
         )
-        return run_to_memory(agg, output_mode="append").filter(
-            F.col("user_id") != -1
-        )
+
+    return _events_twin(spark, e, rollup, "bucket_ms")
 
 
 def stream_hop_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping (sliding) windows live: watermarked 10-min windows sliding
-    by 5 min per event_type, append mode — each pane emits exactly once on
-    watermark passage, and every event lands in window/slide = 2 panes.
-    Shares the batch oracle of ``events_hop_window``.
-
-    Sentinels: two heartbeat rows (event_type ``__sentinel__``) 1 h / 2 h
-    past max event time flush every open pane before availableNow
-    terminates; dropped on the materialized output (not inside the plan —
-    a pre-watermark filter would eat them, same constraint as
-    stream_sessionize)."""
-    from ..sources import tables
-
-    e = tables.load(spark, sf_dir, "events").select(
-        "event_type", F.unix_millis(F.col("ts")).alias("ts_ms"), "value"
-    )
-    with TempStreamDir() as d:
-        def sents(mx: int) -> list:
-            return [
-                spark.createDataFrame(
-                    [("__sentinel__", mx + h * 3_600_000, 0.0)],
-                    "event_type string, ts_ms long, value double",
-                )
-                for h in (1, 2)
-            ]
-
-        _write_replay(e, d.sub("in"), order_by=["ts_ms"], sentinels=sents, max_col="ts_ms")
-        s = (
-            read_stream(spark, d.sub("in"))
-            .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-            .drop("ts_ms")
-            .withWatermark("ts", "2 seconds")
-        )
-        agg = (
-            s.groupBy(
-                F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("value_sum"),
-            )
-            .select(
-                "event_type",
-                F.unix_millis(F.col("w.start")).alias("ws_ms"),
-                "n_events",
-                "value_sum",
-            )
-        )
-        return run_to_memory(agg, output_mode="append").filter(
-            F.col("event_type") != "__sentinel__"
-        )
+    """Hopping (sliding) windows live: the batch
+    :func:`..operators.timeseries.hop_window_counts` (10-min windows
+    sliding by 5 min per event_type) over the watermarked stream in
+    append mode — each pane emits exactly once on watermark passage, and
+    every event lands in window/slide = 2 panes. Shares the batch oracle
+    of ``events_hop_window``."""
+    e = tables.load(spark, sf_dir, "events").select("event_type", "ts", "value")
+    return _events_twin(spark, e, timeseries.hop_window_counts, "ws_ms")
 
 
 def stream_dim_coupon_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -961,56 +660,6 @@ def stream_dim_coupon_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-def stream_keyword_window_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W12 on the driver board: the keyword window replay with LATE
-    duplicates injected — the earliest 50 page events re-sent (mids
-    renamed so they would inflate counts if accepted) in a trailing
-    micro-batch AFTER the first flush sentinel pushed the watermark hours
-    past end-of-data. The entry shares the NORMAL batch oracle: the hash
-    can only match if every late row is discarded (the reference has no
-    allowed-lateness or late side-output — default watermark semantics,
-    SURVEY.md W12)."""
-    page = _page_log(spark, sf_dir)
-    late = (
-        page.orderBy("ts", "event_id")
-        .limit(50)
-        .withColumn("mid", F.concat(F.lit("late_"), F.col("mid")))
-    )
-    with TempStreamDir() as d:
-        _write_replay(
-            page,
-            d.sub("in"),
-            order_by=["ts"],
-            sentinels=lambda mx: [
-                _page_sentinel(page, mx, hours=1),
-                late,
-                _page_sentinel(page, mx, hours=2),
-            ],
-            max_col="ts",
-        )
-        s = read_stream(spark, d.sub("in"))
-        s = s.withColumn("rt", rt_from_ms(F.col("ts"))).withWatermark("rt", "2 seconds")
-        words = s.filter(
-            (F.col("page_id") == "search")
-            & (F.col("item_type") == "keyword")
-            & F.col("item").isNotNull()
-        ).select(F.explode(tokenize(F.col("item"))).alias("word"), "rt")
-        agg = (
-            words.groupBy(F.window("rt", "10 seconds").alias("w"), "word")
-            .agg(F.count(F.lit(1)).alias("keyword_count"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-                F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
-                F.lit("search").alias("source"),
-                F.col("word").alias("keyword"),
-                "keyword_count",
-            )
-        )
-        return run_to_memory(agg, output_mode="append").filter(
-            F.col("keyword") != SENTINEL_WORD
-        )
-
-
 def stream_dim_user_info_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime schema evolution UNDER STREAMING (J10 + the reference's
     checkTable ALTER path, RT/app/func/TableProcessFunction.java:84-106):
@@ -1022,7 +671,6 @@ def stream_dim_user_info_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hash-match the batch era-split oracle
     (``dim_user_info_schema_evolve``)."""
     from ..plans.dim import USER_INFO_EVOLUTION
-    from .dim_app import dim_router
 
     v1, v2 = USER_INFO_EVOLUTION
     t_switch = v2.effective_ts
@@ -1056,7 +704,6 @@ def stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     group, bounded here by the bin space — the production contract for
     complete-mode aggregations (state = O(groups), never O(rows))."""
     from ..operators.profiling import value_histogram
-    from ..sources import tables
 
     e = tables.load(spark, sf_dir, "events").select(
         "event_type", F.unix_millis(F.col("ts")).alias("ts_ms"), "value"
@@ -1090,10 +737,10 @@ def stream_activity_coupon_full_outer(spark: SparkSession, sf_dir: str) -> DataF
     d_col = F.col("data")
     tables_ = ["order_detail_activity", "order_detail_coupon"]
 
-    def _sent(mx: int, h: int) -> DataFrame:
+    def _sent(h: int, ts: int) -> DataFrame:
         return spark.createDataFrame(
             [("gmall", t, "insert", {"order_detail_id": f"__sent_{h}"},
-              None, str(int(mx) + h * 3600)) for t in tables_],
+              None, str(ts)) for t in tables_],
             "database string, `table` string, type string, "
             "data map<string,string>, old map<string,string>, ts string",
         )
@@ -1104,8 +751,7 @@ def stream_activity_coupon_full_outer(spark: SparkSession, sf_dir: str) -> DataF
         )
         _write_replay(
             raw, dirs.sub("in"), order_by=["__order"],
-            sentinels=lambda mx: [_sent(mx, 1), _sent(mx, 2)],
-            max_col="__order",
+            sentinels=[_sent(h, t) for h, t in enumerate(FLUSH_TIMES_S, 1)],
         )
         s = read_stream(spark, dirs.sub("in")).drop("__order")
 
@@ -1150,7 +796,6 @@ def stream_type_counts_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds exactly the batch top-k. State is O(groups) (6 event types),
     never O(rows)."""
     from ..operators.analytics import type_counts_top
-    from ..sources import tables
 
     e = tables.load(spark, sf_dir, "events").select(
         "event_type", F.unix_millis(F.col("ts")).alias("ts_ms")
@@ -1162,7 +807,7 @@ def stream_type_counts_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The count-min sketch maintained ONLINE (r11): events replayed in
+    """The count-min sketch maintained ONLINE: events replayed in
     micro-batches; each batch explodes to its d (row_i, bucket)
     increments and the ADDITIVE MERGE sink
     (:func:`..streaming.upsert_table.upsert_sink_agg`) folds them
@@ -1175,7 +820,6 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     State beyond the counter table itself: one integer (last_batch) in
     the manifest."""
     from ..operators import analytics
-    from ..sources import tables
 
     e = tables.load(spark, sf_dir, "events").select(
         "user_id", F.unix_millis(F.col("ts")).alias("ts_ms")
@@ -1267,7 +911,6 @@ def stream_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, no state store — exactly how a sampling policy runs live.
     stream == batch == oracle (same policy, same hash keep-set)."""
     from ..operators import text_analysis as ta
-    from ..sources import tables
 
     docs = tables.load(spark, sf_dir, "documents")
     # Pin the policy table as a LITERAL: a lazy rates plan would re-run
@@ -1343,8 +986,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle by construction."""
     from ..operators import text_analysis as ta
 
-    from ..sources import tables
-
     docs = tables.load(spark, sf_dir, "documents")
     with TempStreamDir() as d:
         _write_replay(
@@ -1380,11 +1021,9 @@ def stream_value_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass each event's timestamp, so every RANGE-frame member (peers
     included) has arrived and the output equals the batch
     ``events_value_trailing_window`` row-for-row — the registry entry
-    shares the batch SQL oracle. Sentinels: two heartbeat rows 2 h / 4 h
-    past max event time flush the final frames; the synthetic user is
-    dropped from the materialized output."""
-    from ..sources import tables
-
+    shares the batch SQL oracle. The two flush waves flush the final
+    frames; their synthetic user is dropped from the materialized
+    output."""
     e = tables.load(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -1392,19 +1031,14 @@ def stream_value_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 1e6).cast("bigint").alias("v_micro"),
     )
     with TempStreamDir() as d:
-
-        def sents(mx: int) -> list:
-            return [
-                spark.createDataFrame(
-                    [(-1, -1, mx + h * 3600, 0)],
-                    "user_id long, event_id long, ts_s long, v_micro long",
-                )
-                for h in (2, 4)
-            ]
-
-        _write_replay(
-            e, d.sub("in"), order_by=["ts_s"], sentinels=sents, max_col="ts_s"
-        )
+        sents = [
+            spark.createDataFrame(
+                [(-1, -1, t, 0)],
+                "user_id long, event_id long, ts_s long, v_micro long",
+            )
+            for t in FLUSH_TIMES_S
+        ]
+        _write_replay(e, d.sub("in"), order_by=["ts_s"], sentinels=sents)
         s = read_stream(spark, d.sub("in")).withColumn(
             "rt", F.timestamp_seconds(F.col("ts_s"))
         )
@@ -1447,7 +1081,6 @@ def stream_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators import simsearch
-    from ..sources import tables
 
     emb = tables.load(spark, sf_dir, "embeddings")
     cen, assigned = simsearch.ivf_index(emb)
@@ -1487,7 +1120,6 @@ def stream_fasttext_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     == batch == oracle because the model literal and the scoring
     expression are shared verbatim."""
     from ..operators import text_analysis as ta
-    from ..sources import tables
 
     docs = tables.load(spark, sf_dir, "documents")
     model = ta.fit_model(docs)  # offline fit, bounded artifact
@@ -1508,7 +1140,6 @@ def stream_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     never O(rows) — and after availableNow the snapshot equals the batch
     entry exactly (same micro-unit fold, same oracle)."""
     from ..operators import simsearch as ss
-    from ..sources import tables
 
     emb = tables.load(spark, sf_dir, "embeddings")
     with TempStreamDir() as d:
@@ -1534,8 +1165,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     retries look like. Output is the deduped append stream itself;
     oracle = the original events (copies are byte-identical, so
     whichever copy survives, the ROWS equal the originals)."""
-    from ..sources import tables
-
     e = tables.load(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -1565,14 +1194,12 @@ def stream_order_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason a retract aggregate survives 1e9 keys where keep-latest
     carries one state row per key. Snapshot equals the batch entry and
     shares its latest-state-per-id oracle."""
-    from ..plans import dws as dws_plan
-
     with TempStreamDir() as d:
         raw = cdc.topic_db_json(spark, sf_dir, only=["order_info"])
         _write_replay(raw, d.sub("in"), order_by=None)
         ev = cdc.parse_topic_db(read_stream(spark, d.sub("in")))
-        out = dws_plan.order_status_counts_from_deltas(
-            dws_plan.order_status_count_deltas(ev)
+        out = dws.order_status_counts_from_deltas(
+            dws.order_status_count_deltas(ev)
         )
         return run_to_memory(out, output_mode="complete")
 
@@ -1588,7 +1215,6 @@ def stream_er_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-time-windowed, so bounded replay terminates without sentinel
     flush rows."""
     from ..operators import linkage
-    from ..sources import tables
 
     customer = tables.load(spark, sf_dir, "customer")
     variants = linkage.inject_noisy_customers(customer)
@@ -1613,7 +1239,6 @@ def stream_expectation_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Generate after a streaming aggregation is not a supported
     streaming shape — and needn't be: the report is constant-size)."""
     from ..operators.analytics import expectation_agg, expectation_unpivot
-    from ..sources import tables
 
     e = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"

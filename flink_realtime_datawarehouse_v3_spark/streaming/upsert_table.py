@@ -14,8 +14,10 @@ MERGE into a bucketed parquet table with one commit protocol:
   additive sink's ``last_batch``);
 - a commit re-reads the version under an ``O_EXCL`` lock file and, if no
   other commit landed since its merge read the manifest, swaps the
-  manifest with one atomic ``os.replace``. A loser re-merges from the
-  fresh manifest; its generation dir stays on disk, unreferenced.
+  manifest with one atomic ``os.replace``. A loser deletes its own
+  generation dir (no manifest ever named it, so no reader can resolve
+  it) and re-merges from the fresh manifest. Generations a later commit
+  supersedes stay on disk.
 
 Readers resolve the manifest once and read exactly the generation dirs it
 names, so they see either the whole old snapshot or the whole new one.
@@ -32,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time
 from uuid import uuid4
@@ -237,9 +240,10 @@ def _commit_generation_cas(
     have added buckets the first attempt never saw); the result is
     written to a fresh immutable generation dir; then, under the commit
     lock, the manifest is swapped iff its version is unmoved. A loser
-    re-merges from the fresh snapshot; retry exhaustion raises, never a
-    quiet lost update. Every touched bucket holds at least one incoming
-    row after the merge, so every touched bucket is repointed.
+    deletes its unreferenced generation dir and re-merges from the fresh
+    snapshot; retry exhaustion raises, never a quiet lost update. Every
+    touched bucket holds at least one incoming row after the merge, so
+    every touched bucket is repointed.
 
     ``skip_if(doc)``: an idempotence precondition evaluated against the
     manifest document at the start of EVERY attempt — if it returns True
@@ -277,8 +281,10 @@ def _commit_generation_cas(
         try:
             if int(_read_manifest_doc(path).get("version", 0)) != version:
                 # another writer committed since our merge read the
-                # manifest: our merged view may be stale — lose,
-                # release, re-merge from the fresh snapshot.
+                # manifest: our merged view may be stale — lose, drop
+                # the generation no manifest names, release, re-merge
+                # from the fresh snapshot.
+                shutil.rmtree(os.path.join(path, gen_dir))
                 continue
             manifest.update(dict.fromkeys(touched, gen_dir))
             doc = {

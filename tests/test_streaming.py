@@ -212,74 +212,85 @@ def test_stream_pay_detail_suc(spark):
 def test_late_rows_dropped_by_watermark(spark):
     """W1/W12: rows arriving after the watermark passed their window are
     DISCARDED (the reference has no allowed-lateness or late side-output;
-    default watermark semantics). Replay the page log, then a trailing
-    file that re-sends the EARLIEST search events after the watermark has
-    advanced past end-of-stream: the window counts must match the batch
-    result computed WITHOUT the late duplicates."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from flink_realtime_datawarehouse_v3_spark.functions.tokenize import tokenize
-    from flink_realtime_datawarehouse_v3_spark.operators.windows import rt_from_ms
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-        run_to_memory,
-    )
-    from flink_realtime_datawarehouse_v3_spark.streaming.pipelines import (
-        SENTINEL_WORD,
-        _page_log,
-        _page_sentinel,
-        _write_replay,
-    )
-
-    page = _page_log(spark, SF_SMOKE)
-    late = (
-        page.orderBy("ts", "event_id")
-        .limit(50)
-        .withColumn("mid", F.concat(F.lit("late_"), F.col("mid")))
-    )
+    default watermark semantics). The late twin replays the page log,
+    then a trailing file that re-sends the EARLIEST search events after
+    the first flush wave advanced the watermark past end-of-stream: its
+    windows must equal the batch result computed WITHOUT the late
+    duplicates, row for row."""
+    page = sp._page_log(spark, SF_SMOKE)
+    late = sp._late_page(page)
     n_late_search = late.filter(
         (F.col("page_id") == "search") & F.col("item").isNotNull()
     ).count()
     assert n_late_search > 0, "vacuous: late file carries no keyword events"
-    with TempStreamDir() as d:
-        # sentinels advance the watermark hours past end-of-data; the late
-        # file replays old events AFTER them (zz-prefix orders it last,
-        # before the zzz sentinels' flush batches complete).
-        _write_replay(
-            page,
-            d.sub("in"),
-            order_by=["ts"],
-            sentinels=lambda mx: [
-                _page_sentinel(page, mx, hours=1),
-                late,
-                _page_sentinel(page, mx, hours=2),
-            ],
-            max_col="ts",
-        )
-        s = read_stream(spark, d.sub("in"))
-        s = s.withColumn("rt", rt_from_ms(F.col("ts"))).withWatermark(
-            "rt", "2 seconds"
-        )
-        words = s.filter(
-            (F.col("page_id") == "search")
-            & (F.col("item_type") == "keyword")
-            & F.col("item").isNotNull()
-        ).select(F.explode(tokenize(F.col("item"))).alias("word"), "rt")
-        agg = words.groupBy(
-            F.window("rt", "10 seconds").alias("w"), "word"
-        ).agg(F.count(F.lit(1)).alias("keyword_count"))
-        out = run_to_memory(agg, output_mode="append").filter(
-            F.col("word") != SENTINEL_WORD
-        )
-        batch = api.QUERIES["dws_traffic_source_keyword_page_view_window"](
-            spark, SF_SMOKE
-        )
-        assert out.agg(F.sum("keyword_count")).collect()[0][0] == (
-            batch.agg(F.sum("keyword_count")).collect()[0][0]
-        ), "late duplicates leaked into closed windows"
+    stream = sp.stream_keyword_window_late(spark, SF_SMOKE)
+    batch = api.QUERIES["dws_traffic_source_keyword_page_view_window"](
+        spark, SF_SMOKE
+    )
+    _same(stream, batch, "keyword_window_late")
+
+
+def test_replay_directory_contract(spark, tmp_path):
+    """The replay directory format the writer and read_stream share: part
+    files stamped in name order, each trailing wave one file followed by
+    ``fpb - 1`` zero-row pads (``fpb`` = files per trigger chunk, recorded
+    in ``_replay_meta.json``), and an availableNow read of the directory
+    making one micro-batch per range group plus one per wave."""
+    import glob
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from flink_realtime_datawarehouse_v3_spark.streaming.core import read_stream
+
+    n_files = 2
+    path = str(tmp_path / "in")
+    df = spark.range(40).select(F.col("id").alias("ts"), (F.col("id") * 2).alias("v"))
+    waves = [
+        spark.createDataFrame([(1000 + k, -1)], "ts long, v long") for k in range(2)
+    ]
+    sp._write_replay(df, path, order_by=["ts"], sentinels=waves, n_files=n_files)
+
+    with open(os.path.join(path, "_replay_meta.json")) as f:
+        fpb = json.load(f)["files_per_trigger"]
+    par = spark.sparkContext.defaultParallelism
+    assert fpb == max(1, min(8, par // n_files))
+
+    parts = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
+    assert len(parts) == n_files * fpb
+    part_mtimes = [os.path.getmtime(f) for f in parts]
+    assert part_mtimes == sorted(set(part_mtimes)), "part mtimes not in name order"
+
+    tail = sorted(
+        (f for f in glob.glob(os.path.join(path, "*.parquet")) if f not in parts),
+        key=os.path.getmtime,
+    )
+    assert min(os.path.getmtime(f) for f in tail) > part_mtimes[-1]
+    assert len(tail) == 2 * fpb
+    for k in range(2):
+        chunk = tail[k * fpb:(k + 1) * fpb]
+        rows = [pq.ParquetFile(f).metadata.num_rows for f in chunk]
+        assert rows == [1] + [0] * (fpb - 1), (k, rows)
+        assert pq.read_table(chunk[0]).column("ts").to_pylist() == [1000 + k]
+
+    q = (
+        read_stream(spark, path)
+        .writeStream.format("memory")
+        .queryName("replay_contract")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(180)
+        progress = q.recentProgress
+    finally:
+        q.stop()
+        spark.catalog.dropTempView("replay_contract")
+    batches = {p["batchId"]: p["numInputRows"] for p in progress}
+    assert len(batches) == n_files + 2, batches
+    assert sum(batches.values()) == 42
+    assert [batches[i] for i in sorted(batches)][-2:] == [1, 1]
 
 
 def _split_invariant_emissions(spark, df, sentinels, op, n_files):
@@ -353,8 +364,7 @@ def test_jump_emissions_split_invariant(spark):
     )
 
     page = sp._page_log(spark, SF_SMOKE)
-    mx = page.agg(F.max("ts")).collect()[0][0]
-    sents = [sp._page_sentinel(page, mx, hours=h) for h in (1, 2)]
+    sents = sp._page_sentinels(page)
 
     def op(s):
         return jump_detect_stream(s.withColumn("rt", rt_from_ms(F.col("ts")))).filter(
@@ -1126,9 +1136,9 @@ def test_upsert_snapshot_two_writer_race(spark, tmp_path, monkeypatch):
     bump inside the O_EXCL commit section, lose, and re-merge from the
     fresh snapshot, so the final table contains BOTH writers' updates
     (B's disjoint-bucket row survives A's commit; the key both touched
-    resolves by order_col). Also pins: the loser's abandoned generation
-    dir is unreferenced by the manifest, the commit lock is released, and
-    the manifest version counts every commit."""
+    resolves by order_col). Also pins: the loser deletes its abandoned
+    generation dir, the commit lock is released, and the manifest version
+    counts every commit."""
     import os
 
     from flink_realtime_datawarehouse_v3_spark.streaming import upsert_table
@@ -1180,11 +1190,12 @@ def test_upsert_snapshot_two_writer_race(spark, tmp_path, monkeypatch):
     version = upsert_table._read_manifest_doc(path)["version"]
     assert version == 3  # base + B + A's retried commit
     assert not os.path.exists(os.path.join(path, upsert_table.COMMIT_LOCK_NAME))
-    # A's first (conflicted) attempt left gen-2 orphaned on disk: the
-    # manifest references A's retry (gen-2-r1) instead, never gen-2.
+    # A's first (conflicted) attempt wrote gen-2, which no manifest ever
+    # named: the loser deletes it, and the manifest references A's retry
+    # (gen-2-r1).
     live = set(_manifest(path).values())
-    assert os.path.isdir(os.path.join(path, "gen-2"))
-    assert "gen-2" not in live and "gen-2-r1" in live, live
+    assert not os.path.exists(os.path.join(path, "gen-2"))
+    assert "gen-2-r1" in live, live
 
 
 def test_stateful_restart_under_rescaled_shuffle_partitions(spark):
