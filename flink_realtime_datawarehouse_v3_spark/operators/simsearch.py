@@ -937,18 +937,6 @@ def _uvq(col: Column) -> Column:
     )
 
 
-def _subvec(col: Column, s: int, dsub: int) -> Column:
-    return F.slice(col, s * dsub + 1, dsub)
-
-
-def _l2sq(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _il2(a: Column, b: Column) -> Column:
     """Exact int64 squared L2 distance of two bigint vectors (micro-unit
     subvectors: |diff| <= ~2e6, squares <= 4e12, dsub-sums <= 3.2e13 —

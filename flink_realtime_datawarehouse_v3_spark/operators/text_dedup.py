@@ -821,16 +821,28 @@ def dedup_incremental(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
     so an incoming batch of any size dedups against a 100 TB base at
     batch-size x lookup cost — the standard new-crawl-vs-corpus pass.
     """
-    is_base = F.col("doc_id") < INCREMENTAL_BASE_MAX
-    base_h = (
-        corpus.filter(is_base)
+    return incremental_flags(
+        corpus.filter(F.col("doc_id") >= INCREMENTAL_BASE_MAX),
+        incremental_base_hashes(corpus),
+        incremental_near_pairs(pairs),
+    )
+
+
+def incremental_base_hashes(corpus: DataFrame) -> DataFrame:
+    """The base side of :func:`dedup_incremental`: one (h, exact_dup_of)
+    row per md5 of the base corpus, exact_dup_of its smallest doc id."""
+    return (
+        corpus.filter(F.col("doc_id") < INCREMENTAL_BASE_MAX)
         .select(F.md5("text").alias("h"), "doc_id")
         .groupBy("h")
         .agg(F.min("doc_id").alias("exact_dup_of"))
     )
-    inc = corpus.filter(~is_base).select("doc_id", F.md5("text").alias("h"))
-    exact = inc.join(base_h, "h", "left").select("doc_id", "exact_dup_of")
-    near = (
+
+
+def incremental_near_pairs(pairs: DataFrame) -> DataFrame:
+    """Each incoming doc's smallest near-duplicate base doc (near_dup_of)
+    from the pair set, ignoring pairs inside the incoming batch."""
+    return (
         pairs.filter(
             (F.col("a") < INCREMENTAL_BASE_MAX)
             & (F.col("b") >= INCREMENTAL_BASE_MAX)
@@ -838,16 +850,26 @@ def dedup_incremental(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
         .groupBy(F.col("b").alias("doc_id"))
         .agg(F.min("a").alias("near_dup_of"))
     )
-    return (
-        exact.join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("exact_dup_of", "near_dup_of").alias("dup_of"),
-            F.when(F.col("exact_dup_of").isNotNull(), F.lit("exact"))
-            .when(F.col("near_dup_of").isNotNull(), F.lit("near"))
-            .otherwise(F.lit("new"))
-            .alias("match_type"),
-        )
+
+
+def incremental_flags(
+    docs: DataFrame, base_h: DataFrame, near: DataFrame
+) -> DataFrame:
+    """Flag incoming ``docs`` (doc_id, text) against the base hashes and
+    near pairs: (doc_id, dup_of, match_type). Stateless per row, so the
+    streaming twin runs it per micro-batch (stream-static joins)."""
+    exact = (
+        docs.select("doc_id", F.md5("text").alias("h"))
+        .join(base_h, "h", "left")
+        .select("doc_id", "exact_dup_of")
+    )
+    return exact.join(near, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("exact_dup_of", "near_dup_of").alias("dup_of"),
+        F.when(F.col("exact_dup_of").isNotNull(), F.lit("exact"))
+        .when(F.col("near_dup_of").isNotNull(), F.lit("near"))
+        .otherwise(F.lit("new"))
+        .alias("match_type"),
     )
 
 

@@ -499,11 +499,6 @@ PAGE_COLS = (
 # --- DWS window helpers ------------------------------------------------------
 # Tumbling 10 s windows, epoch-aligned (== Spark window() == Flink TUMBLE).
 
-def ws_from_ms(ts_ms_expr: str) -> str:
-    """Window-start epoch seconds from an epoch-ms column."""
-    return f"((({ts_ms_expr}) // 1000) // 10) * 10"
-
-
 def ws_from_string(ts_str_expr: str) -> str:
     return f"(CAST(epoch(CAST({ts_str_expr} AS TIMESTAMP)) AS BIGINT) // 10) * 10"
 

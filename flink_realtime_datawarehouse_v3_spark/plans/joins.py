@@ -119,30 +119,40 @@ def asof_join_events(events: DataFrame) -> DataFrame:
     )
 
 
+def activity_coupon_branches(
+    topic_db: DataFrame, event_time: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """J8/J9's two sides from one topic_db stream or batch: the
+    order_detail_activity rows keyed ``a_detail_id`` and the
+    order_detail_coupon rows keyed ``c_detail_id``. ``event_time`` adds a
+    ``<key>_et`` timestamp (the CDC ts) to each side, for the watermarked
+    streaming twin's join band."""
+    d = F.col("data")
+
+    def side(table: str, key: str, cols: list[str]) -> DataFrame:
+        et = [F.timestamp_seconds(F.col("ts").cast("long")).alias(f"{key}_et")]
+        return topic_db.filter(F.col("table") == table).select(
+            d.getItem("order_detail_id").alias(key),
+            *[d.getItem(c).alias(c) for c in cols],
+            *(et if event_time else []),
+        )
+
+    return (
+        side("order_detail_activity", "a_detail_id", ["activity_id", "activity_rule_id"]),
+        side("order_detail_coupon", "c_detail_id", ["coupon_id", "coupon_use_id"]),
+    )
+
+
+J8_COLS = ["activity_id", "activity_rule_id", "coupon_id", "coupon_use_id"]
+
+
 def activity_coupon_full_outer(topic_db: DataFrame) -> DataFrame:
     """J8: order_detail_activity FULL OUTER order_detail_coupon on the
     order_detail key — the changelog row set an upsert-kafka sink would
     carry (nulls on either side where only one table has the detail)."""
-    d = F.col("data")
-    oa = topic_db.filter(F.col("table") == "order_detail_activity").select(
-        d.getItem("order_detail_id").alias("a_detail_id"),
-        d.getItem("activity_id").alias("activity_id"),
-        d.getItem("activity_rule_id").alias("activity_rule_id"),
-    )
-    oc = topic_db.filter(F.col("table") == "order_detail_coupon").select(
-        d.getItem("order_detail_id").alias("c_detail_id"),
-        d.getItem("coupon_id").alias("coupon_id"),
-        d.getItem("coupon_use_id").alias("coupon_use_id"),
-    )
-    return (
-        oa.join(oc, oa.a_detail_id == oc.c_detail_id, "full_outer")
-        .select(
-            F.coalesce("a_detail_id", "c_detail_id").alias("order_detail_id"),
-            "activity_id",
-            "activity_rule_id",
-            "coupon_id",
-            "coupon_use_id",
-        )
+    oa, oc = activity_coupon_branches(topic_db)
+    return oa.join(oc, oa.a_detail_id == oc.c_detail_id, "full_outer").select(
+        F.coalesce("a_detail_id", "c_detail_id").alias("order_detail_id"), *J8_COLS
     )
 
 
@@ -153,23 +163,9 @@ def activity_coupon_right_outer(topic_db: DataFrame) -> DataFrame:
     the mirror of the left-retention shape used throughout the DWD joins.
     Same machinery (hash join on the order_detail key); the retained side
     merely flips."""
-    d = F.col("data")
-    oa = topic_db.filter(F.col("table") == "order_detail_activity").select(
-        d.getItem("order_detail_id").alias("a_detail_id"),
-        d.getItem("activity_id").alias("activity_id"),
-        d.getItem("activity_rule_id").alias("activity_rule_id"),
-    )
-    oc = topic_db.filter(F.col("table") == "order_detail_coupon").select(
-        d.getItem("order_detail_id").alias("c_detail_id"),
-        d.getItem("coupon_id").alias("coupon_id"),
-        d.getItem("coupon_use_id").alias("coupon_use_id"),
-    )
+    oa, oc = activity_coupon_branches(topic_db)
     return oa.join(oc, oa.a_detail_id == oc.c_detail_id, "right_outer").select(
-        F.col("c_detail_id").alias("order_detail_id"),
-        "activity_id",
-        "activity_rule_id",
-        "coupon_id",
-        "coupon_use_id",
+        F.col("c_detail_id").alias("order_detail_id"), *J8_COLS
     )
 
 

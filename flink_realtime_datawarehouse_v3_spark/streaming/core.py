@@ -22,10 +22,18 @@ same on bounded input). Twins drop the sentinels' own output by its
 window time (anything at or after :data:`FLUSH_EPOCH_S`) or by their
 sentinel key.
 
+:func:`flush_waves` builds those two waves for any replay frame: one
+row each, in the frame's schema, at the flush times.
+
 Runners execute a streaming DataFrame to a memory sink or through
 ``foreachBatch`` and block until completion. The memory sink's temp view
 is dropped as soon as its result is resolved, so no sink outlives the
-DataFrame that reads it.
+DataFrame that reads it. :func:`replay` is the one memory-sink runner the
+twins call: it writes the replay into a temp directory, reads it back as
+a stream, runs the twin's query over it through :func:`run_to_memory` and
+returns the sink's rows. A twin whose output lives in a ``foreachBatch``
+sink directory manages that directory itself, since the sink has to
+outlive the query until it is read back.
 """
 
 from __future__ import annotations
@@ -50,6 +58,26 @@ REPLAY_META = "_replay_meta.json"
 # real window/timer and wave 2's batch emits them.
 FLUSH_EPOCH_S = 4_102_444_800
 FLUSH_TIMES_S = (FLUSH_EPOCH_S + 3600, FLUSH_EPOCH_S + 7200)
+
+
+def flush_waves(like: DataFrame, time_col: str, at=F.lit, **fixed) -> list[DataFrame]:
+    """The two flush waves for a replay of ``like``: one single-row frame
+    per :data:`FLUSH_TIMES_S`, in ``like``'s schema. ``time_col`` holds
+    ``at(t)`` for flush time ``t`` (epoch seconds), each ``fixed`` column
+    its given literal, and every other column null."""
+
+    def value(name: str, t: int):
+        if name == time_col:
+            return at(t)
+        return F.lit(fixed[name]) if name in fixed else F.lit(None)
+
+    spark = like.sparkSession
+    return [
+        spark.range(1).select(
+            *[value(f.name, t).cast(f.dataType).alias(f.name) for f in like.schema.fields]
+        )
+        for t in FLUSH_TIMES_S
+    ]
 
 
 def stamp_file_order(path: str, extra_files: list[str] | None = None) -> None:
@@ -228,6 +256,28 @@ def run_foreach_batch(
             .start()
         )
     _await_or_raise(q, timeout_s)
+
+
+def replay(
+    df: DataFrame,
+    order_by: list[str] | None,
+    query: Callable[[DataFrame], DataFrame],
+    output_mode: str = "append",
+    sentinels: list[DataFrame] | None = None,
+    n_files: int = N_FILES,
+) -> DataFrame:
+    """Replay ``df`` as a file stream (:func:`_write_replay` with
+    ``order_by``, ``sentinels`` and ``n_files``), run ``query`` over the
+    stream to the memory sink in ``output_mode``, and return the sink's
+    rows. The replay directory is deleted once the query has finished;
+    the returned frame reads the sink, not the directory."""
+    # The three steps are looked up as module globals at call time, so a
+    # tracer that rebinds them (perfbench's layer spans) sees every replay.
+    with TempStreamDir() as d:
+        path = d.sub("in")
+        _write_replay(df, path, order_by, sentinels=sentinels, n_files=n_files)
+        stream = read_stream(df.sparkSession, path)
+        return run_to_memory(query(stream), output_mode=output_mode)
 
 
 class TempStreamDir:

@@ -1,11 +1,26 @@
 """End-to-end streaming twins of the batch pipelines (stream==batch).
 
-Each runner replays the synthesized topic through the file-stream harness
+Each twin replays the synthesized topic through the file-stream harness
 (:mod:`.core`), applies the pipeline under ``trigger(availableNow=True)``,
 and returns the streamed result as a batch DataFrame for comparison against
 the batch pipeline (tests/test_streaming.py). Where the batch entry is
 split into stages, the twin calls the same stages and puts its watermark
 between them, so both run one query body.
+
+Most twins are one :func:`.core.replay` call: the replayed frame, its
+event-time order, the query over the stream and the output mode; flush
+waves come from :func:`.core.flush_waves`. These twins stay explicit,
+because their shape is not "one replay into the memory sink":
+
+- :func:`stream_pay_detail_suc` joins two replays; the second runs
+  through ``replay`` while the first one's directory is held open;
+- :func:`stream_checkpoint_recovery` stops and restarts a checkpointed
+  file-sink query;
+- the ``foreachBatch`` twins (:func:`stream_order_info_upsert`,
+  :func:`stream_dim_app`, :func:`stream_dim_coupon_scd2`,
+  :func:`stream_dim_user_info_evolve`, :func:`stream_heavy_hitters_cms`,
+  :func:`stream_ivf_search`) write a sink directory that has to live
+  until it is read back, so each keeps its own ``TempStreamDir``.
 
 :mod:`..registry.m11_streaming` lists every twin under its registry name,
 paired with the batch entry whose oracle it shares.
@@ -21,16 +36,19 @@ from pyspark.sql import functions as F
 
 from ..operators import timeseries
 from ..operators.windows import rt_from_ms
-from ..plans import dwd_simple, dws
+from ..plans import dwd_simple, dws, joins
 from ..sources import cdc, logs, tables
 from . import stateful, upsert_table
-from .core import (
+# run_to_memory stays bound here: perfbench wraps pipelines.run_to_memory.
+from .core import (  # noqa: F401
     FLUSH_EPOCH_S,
     FLUSH_TIMES_S,
     N_FILES,
     TempStreamDir,
     _write_replay,
+    flush_waves,
     read_stream,
+    replay,
     run_foreach_batch,
     run_to_memory,
 )
@@ -44,12 +62,10 @@ _FLUSH_STT = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(FLUSH_EPOCH_S))
 def stream_favor_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateless DWD pipeline under streaming: raw JSON -> P1 parse ->
     favor-add filter/projection."""
-    with TempStreamDir() as d:
-        raw = cdc.topic_db_json(spark, sf_dir, only=["favor_info"])
-        _write_replay(raw, d.sub("in"), order_by=None)
-        stream = cdc.parse_topic_db(read_stream(spark, d.sub("in")))
-        out = dwd_simple.dwd_interaction_favor_add(stream)
-        return run_to_memory(out)
+    raw = cdc.topic_db_json(spark, sf_dir, only=["favor_info"])
+    return replay(
+        raw, None, lambda s: dwd_simple.dwd_interaction_favor_add(cdc.parse_topic_db(s))
+    )
 
 
 def _page_log(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -74,22 +90,15 @@ def _page_sentinels(page: DataFrame) -> list[DataFrame]:
     the watermark. Consumers drop the sentinel's output by window time or
     by its ``__sentinel__`` mid.
     """
-    row = (
-        page.limit(1)
-        .select(
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                if f.name not in ("ts", "mid", "event_id", "page_id")
-                else F.col(f.name)
-                for f in page.schema.fields
-            ]
-        )
-        .withColumn("mid", F.lit("__sentinel__"))
-        .withColumn("page_id", F.lit("search"))
-        .withColumn("item_type", F.lit("keyword"))
-        .withColumn("item", F.lit(SENTINEL_WORD))
+    return flush_waves(
+        page,
+        "ts",
+        at=lambda t: F.lit(t * 1000),
+        mid="__sentinel__",
+        page_id="search",
+        item_type="keyword",
+        item=SENTINEL_WORD,
     )
-    return [row.withColumn("ts", F.lit(t * 1000).cast("long")) for t in FLUSH_TIMES_S]
 
 
 def _late_page(page: DataFrame) -> DataFrame:
@@ -113,13 +122,13 @@ def _keyword_twin(
     page = _page_log(spark, sf_dir)
     first, second = _page_sentinels(page)
     waves = [first, _late_page(page), second] if late else [first, second]
-    with TempStreamDir() as d:
-        _write_replay(page, d.sub("in"), order_by=["ts"], sentinels=waves)
-        words = words_of(read_stream(spark, d.sub("in"))).withWatermark(
-            "rt", "2 seconds"
-        )
-        out = run_to_memory(dws.keyword_window_counts(words), output_mode="append")
-        return out.filter(F.col("stt") < _FLUSH_STT)
+
+    def counts(s: DataFrame) -> DataFrame:
+        words = words_of(s).withWatermark("rt", "2 seconds")
+        return dws.keyword_window_counts(words)
+
+    out = replay(page, ["ts"], counts, sentinels=waves)
+    return out.filter(F.col("stt") < _FLUSH_STT)
 
 
 def stream_keyword_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,36 +158,31 @@ def stream_keyword_window_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_unique_visitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 UV dedup with per-mid date state."""
-    page = _page_log(spark, sf_dir)
-    with TempStreamDir() as d:
-        _write_replay(page, d.sub("in"), order_by=["ts"])
-        s = (
-            read_stream(spark, d.sub("in"))
-            .filter(F.col("last_page_id").isNull())
-            .withColumn(
-                "dt", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
-            )
+
+    def first_visits(s: DataFrame) -> DataFrame:
+        s = s.filter(F.col("last_page_id").isNull()).withColumn(
+            "dt", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
         )
-        out = stateful.first_per_day_stream(s, key="mid", dt_col="dt")
-        # The 8-partition replay default: the bucketed operator's
-        # per-batch cost is the stateful-stage floor (store open/commit x
-        # partitions), so fewer partitions win; an A/B of wide against 8
-        # at sf0.1 read 5.9 -> 4.2 s min-of-3 (8 won all three pairs).
-        return run_to_memory(out, output_mode="append").drop("dt")
+        return stateful.first_per_day_stream(s, key="mid", dt_col="dt")
+
+    # The 8-partition replay default: the bucketed operator's
+    # per-batch cost is the stateful-stage floor (store open/commit x
+    # partitions), so fewer partitions win; an A/B of wide against 8
+    # at sf0.1 read 5.9 -> 4.2 s min-of-3 (8 won all three pairs).
+    return replay(_page_log(spark, sf_dir), ["ts"], first_visits).drop("dt")
 
 
 def stream_jump_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5 bounce detection with event-time timeout."""
     page = _page_log(spark, sf_dir)
-    with TempStreamDir() as d:
-        _write_replay(
-            page, d.sub("in"), order_by=["ts"], sentinels=_page_sentinels(page)
-        )
-        s = read_stream(spark, d.sub("in")).withColumn("rt", rt_from_ms(F.col("ts")))
-        out = stateful.jump_detect_stream(s).filter(F.col("mid") != "__sentinel__")
-        # The 8-partition replay default, as in stream_unique_visitor: an
-        # A/B of wide against 8 at sf0.1 read 11.8 -> 9.2 s min-of-3.
-        return run_to_memory(out, output_mode="append")
+
+    def bounces(s: DataFrame) -> DataFrame:
+        s = s.withColumn("rt", rt_from_ms(F.col("ts")))
+        return stateful.jump_detect_stream(s).filter(F.col("mid") != "__sentinel__")
+
+    # The 8-partition replay default, as in stream_unique_visitor: an
+    # A/B of wide against 8 at sf0.1 read 11.8 -> 9.2 s min-of-3.
+    return replay(page, ["ts"], bounces, sentinels=_page_sentinels(page))
 
 
 def stream_traffic_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,11 +205,8 @@ def stream_traffic_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     run as ONE keyed operator (stateful.uv_jump_contrib_stream).
     """
     page = _page_log(spark, sf_dir)
-    with TempStreamDir() as d:
-        _write_replay(
-            page, d.sub("in"), order_by=["ts"], sentinels=_page_sentinels(page)
-        )
-        s = read_stream(spark, d.sub("in"))
+
+    def window_sums(s: DataFrame) -> DataFrame:
         contrib = stateful.uv_jump_contrib_stream(
             s.withColumn("rt", rt_from_ms(F.col("ts"))).withColumn(
                 "dt", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
@@ -216,50 +217,55 @@ def stream_traffic_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(contrib.withColumn("rt", rt_from_ms(F.col("ts"))).drop("ts"))
             .withWatermark("rt", "14 seconds")
         )
-        # Spark's static checker rejects ANY stateful op above another
-        # stateful op that can emit watermark-old rows. Here the pattern
-        # is provably safe: a bounce at event time T is flushed when the
-        # watermark passes T + 10 s (the CEP timeout), while its target
-        # window only closes at window_end + 14 s >= T + 14 s — every
-        # timeout emission lands 4+ s before its window's cutoff. Disable
-        # the check for this query only (documented Spark escape hatch).
-        chk = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-        saved = spark.conf.get(chk)
-        spark.conf.set(chk, "false")
-        # With the check disabled Spark still WARN-logs the full analyzed
-        # plan + AnalysisException text from UnsupportedOperationChecker
-        # at every query start — noise once the safety argument above
-        # holds. Quiet exactly that logger for the run.
-        _uoc = "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker"
-        _jvm = spark._jvm
-        _saved_lvl = _jvm.org.apache.logging.log4j.LogManager.getLogger(
-            _uoc
-        ).getLevel()
+        return dws.vc_window_sums(unioned)
+
+    # Spark's static checker rejects ANY stateful op above another
+    # stateful op that can emit watermark-old rows. Here the pattern
+    # is provably safe: a bounce at event time T is flushed when the
+    # watermark passes T + 10 s (the CEP timeout), while its target
+    # window only closes at window_end + 14 s >= T + 14 s — every
+    # timeout emission lands 4+ s before its window's cutoff. Disable
+    # the check for this query only (documented Spark escape hatch).
+    chk = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    saved = spark.conf.get(chk)
+    spark.conf.set(chk, "false")
+    # With the check disabled Spark still WARN-logs the full analyzed
+    # plan + AnalysisException text from UnsupportedOperationChecker
+    # at every query start — noise once the safety argument above
+    # holds. Quiet exactly that logger for the run.
+    _uoc = "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker"
+    _jvm = spark._jvm
+    _saved_lvl = _jvm.org.apache.logging.log4j.LogManager.getLogger(_uoc).getLevel()
+    _jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        _uoc, _jvm.org.apache.logging.log4j.Level.ERROR
+    )
+    try:
+        out = replay(page, ["ts"], window_sums, sentinels=_page_sentinels(page))
+    finally:
+        spark.conf.set(chk, saved)
         _jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            _uoc, _jvm.org.apache.logging.log4j.Level.ERROR
+            _uoc, _saved_lvl
         )
-        try:
-            out = run_to_memory(dws.vc_window_sums(unioned), output_mode="append")
-        finally:
-            spark.conf.set(chk, saved)
-            _jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-                _uoc, _saved_lvl
-            )
-        return out.filter(F.col("stt") < _FLUSH_STT)
+    return out.filter(F.col("stt") < _FLUSH_STT)
+
+
+def _order_info_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The order_info changelog as flat (id, order_status, operate_time,
+    ts) rows, ts in epoch seconds: the K3 upsert and D4 keep-latest
+    replays' input."""
+    return cdc.topic_db_parsed(spark, sf_dir, ["order_info"]).select(
+        F.col("data").getItem("id").alias("id"),
+        F.col("data").getItem("order_status").alias("order_status"),
+        F.col("data").getItem("operate_time").alias("operate_time"),
+        F.col("ts").cast("long").alias("ts"),
+    )
 
 
 def stream_order_info_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3 keyed upsert sink: order_info changelog MERGEd to one row per id
     (last writer wins)."""
     with TempStreamDir() as d:
-        structured = cdc.topic_db_parsed(spark, sf_dir, ["order_info"])
-        flat = structured.select(
-            F.col("data").getItem("id").alias("id"),
-            F.col("data").getItem("order_status").alias("order_status"),
-            F.col("data").getItem("operate_time").alias("operate_time"),
-            F.col("ts").cast("long").alias("ts"),
-        )
-        _write_replay(flat, d.sub("in"), order_by=["ts"])
+        _write_replay(_order_info_changes(spark, sf_dir), d.sub("in"), order_by=["ts"])
         s = read_stream(spark, d.sub("in"))
         out_path = d.sub("sink")
         run_foreach_batch(s, upsert_table.upsert_sink(["id"], "ts", out_path))
@@ -328,25 +334,23 @@ def stream_order_pre_process(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans import dwd_trade
     from ..sources import dic
 
-    with TempStreamDir() as d:
-        structured = cdc.topic_db_parsed(spark, sf_dir, _PRE_TABLES).withColumn(
-            "__order", F.col("ts").cast("long")
-        )
-        # n_files=2: fewer real-data micro-batches for the heaviest
-        # replay. Measured effect is modest (input write + join-state work
-        # dominate, ~37 s either way at sf0.01) but semantics are
-        # unaffected — flush order is driven by the trailing sentinels,
-        # not by how many files carry the real rows.
-        _write_replay(
-            structured,
-            d.sub("in"),
-            order_by=["__order"],
-            sentinels=[_pre_sentinel(spark, t) for t in FLUSH_TIMES_S],
-            n_files=2,
-        )
-        s = read_stream(spark, d.sub("in")).drop("__order")
-        out = dwd_trade.order_pre_process(s, dic.base_dic(spark), event_time=True)
-        return run_to_memory(out, output_mode="append")
+    structured = cdc.topic_db_parsed(spark, sf_dir, _PRE_TABLES).withColumn(
+        "__order", F.col("ts").cast("long")
+    )
+    # n_files=2: fewer real-data micro-batches for the heaviest
+    # replay. Measured effect is modest (input write + join-state work
+    # dominate, ~37 s either way at sf0.01) but semantics are
+    # unaffected — flush order is driven by the trailing sentinels,
+    # not by how many files carry the real rows.
+    return replay(
+        structured,
+        ["__order"],
+        lambda s: dwd_trade.order_pre_process(
+            s.drop("__order"), dic.base_dic(spark), event_time=True
+        ),
+        sentinels=[_pre_sentinel(spark, t) for t in FLUSH_TIMES_S],
+        n_files=2,
+    )
 
 
 _PAGE_FIELDS = ["page_id", "last_page_id", "item", "item_type", "during_time"]
@@ -366,17 +370,15 @@ def stream_base_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..plans.dwd_traffic import _COMMON
 
-    with TempStreamDir() as d:
-        raw = logs.topic_log_json_cached(spark, sf_dir).select(
-            "value",
-            F.coalesce(
-                F.get_json_object("value", "$.ts").cast("long"), F.lit(0)
-            ).alias("__order"),
-        )
-        _write_replay(raw, d.sub("in"), order_by=["__order"])
-        parsed = logs.parse_topic_log(
-            read_stream(spark, d.sub("in")).select("value")
-        )
+    raw = logs.topic_log_json_cached(spark, sf_dir).select(
+        "value",
+        F.coalesce(
+            F.get_json_object("value", "$.ts").cast("long"), F.lit(0)
+        ).alias("__order"),
+    )
+
+    def page_branch(s: DataFrame) -> DataFrame:
+        parsed = logs.parse_topic_log(s.select("value"))
         flat = parsed.select(
             "event_id",
             "ts",
@@ -386,10 +388,11 @@ def stream_base_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.col(f"page.{p}").alias(p) for p in _PAGE_FIELDS],
         )
         repaired = stateful.is_new_repair_stream(flat, key="mid", dt_col="dt")
-        page = repaired.filter(~F.col("is_start")).select(
+        return repaired.filter(~F.col("is_start")).select(
             *_COMMON, "event_id", "ts", *_PAGE_FIELDS
         )
-        return run_to_memory(page, output_mode="append")
+
+    return replay(raw, ["__order"], page_branch)
 
 
 def stream_pay_detail_suc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,16 +420,19 @@ def stream_pay_detail_suc(spark: SparkSession, sf_dir: str) -> DataFrame:
     with TempStreamDir() as d:
         od_batch = QUERIES["dwd_trade_order_detail"](spark, sf_dir)
         _write_replay(od_batch, d.sub("od"), order_by=["create_time"])
+        od_stream = read_stream(spark, d.sub("od"))
         pi_raw = cdc.topic_db_parsed(spark, sf_dir, ["payment_info"]).select(
             F.to_json(
                 F.struct("database", "table", "type", "data", "old", "ts")
             ).alias("value")
         )
-        _write_replay(pi_raw, d.sub("pi"), order_by=None)
-        od_stream = read_stream(spark, d.sub("od"))
-        pi_stream = cdc.parse_topic_db(read_stream(spark, d.sub("pi")))
-        out = dwd_trade.pay_detail_suc(pi_stream, od_stream, dic.base_dic(spark))
-        return run_to_memory(out, output_mode="append")
+        return replay(
+            pi_raw,
+            None,
+            lambda pi: dwd_trade.pay_detail_suc(
+                cdc.parse_topic_db(pi), od_stream, dic.base_dic(spark)
+            ),
+        )
 
 
 def stream_order_info_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,34 +448,21 @@ def stream_order_info_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     every open timer fires before availableNow terminates; their key is
     filtered here.
     """
-    with TempStreamDir() as d:
-        flat = cdc.topic_db_parsed(spark, sf_dir, ["order_info"]).select(
-            F.col("data").getItem("id").alias("id"),
-            F.col("data").getItem("order_status").alias("order_status"),
-            F.col("data").getItem("operate_time").alias("operate_time"),
-            F.col("ts").cast("long").alias("ts"),
-        )
-        sents = [
-            spark.createDataFrame(
-                [("__sentinel__", None, None, t)],
-                "id string, order_status string, operate_time string, ts long",
-            )
-            for t in FLUSH_TIMES_S
-        ]
-        # n_files=2 (see stream_order_pre_process; same modest effect):
-        # emission grouping per batch varies by design and the parity
-        # collapses it; the timer flush rides the sentinels.
-        _write_replay(flat, d.sub("in"), order_by=["ts"], sentinels=sents, n_files=2)
-        s = read_stream(spark, d.sub("in")).withColumn(
-            "rt", F.to_timestamp(F.from_unixtime("ts"))
-        )
-        out = stateful.keep_latest_stream(s, keys=["id"], order_col="ts").filter(
+    flat = _order_info_changes(spark, sf_dir)
+
+    def latest(s: DataFrame) -> DataFrame:
+        s = s.withColumn("rt", F.to_timestamp(F.from_unixtime("ts")))
+        return stateful.keep_latest_stream(s, keys=["id"], order_col="ts").filter(
             F.col("id") != "__sentinel__"
         )
-        # The 8-partition replay default is enough: the bucketed
-        # operator makes Python cheap (a widened replay read 10.2 vs
-        # 9.7 s min-of-3, a wash).
-        return run_to_memory(out, output_mode="append")
+
+    # n_files=2 (see stream_order_pre_process; same modest effect):
+    # emission grouping per batch varies by design and the parity
+    # collapses it; the timer flush rides the sentinels. The 8-partition
+    # replay default is enough: the bucketed operator makes Python cheap
+    # (a widened replay read 10.2 vs 9.7 s min-of-3, a wash).
+    waves = flush_waves(flat, "ts", id="__sentinel__")
+    return replay(flat, ["ts"], latest, sentinels=waves, n_files=2)
 
 
 def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -543,27 +536,16 @@ def stream_dim_app(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         }
 
 
-def _events_twin(spark: SparkSession, e: DataFrame, agg, start_col: str) -> DataFrame:
+def _events_twin(e: DataFrame, agg, start_col: str) -> DataFrame:
     """Replay event rows ``e`` (``ts`` a timestamp) with the two flush
     waves, run ``agg`` over the stream watermarked 2 s on ``ts`` in append
     mode, and drop the waves' output by its window start ``start_col``
     (epoch ms). The wave rows are null but for ``ts``."""
-    waves = [
-        spark.range(1).select(
-            *[
-                F.timestamp_seconds(F.lit(t)).alias("ts")
-                if f.name == "ts"
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in e.schema.fields
-            ]
-        )
-        for t in FLUSH_TIMES_S
-    ]
-    with TempStreamDir() as d:
-        _write_replay(e, d.sub("in"), order_by=["ts"], sentinels=waves)
-        s = read_stream(spark, d.sub("in")).withWatermark("ts", "2 seconds")
-        out = run_to_memory(agg(s), output_mode="append")
-        return out.filter(F.col(start_col) < _FLUSH_MS)
+    waves = flush_waves(e, "ts", at=lambda t: F.timestamp_seconds(F.lit(t)))
+    out = replay(
+        e, ["ts"], lambda s: agg(s.withWatermark("ts", "2 seconds")), sentinels=waves
+    )
+    return out.filter(F.col(start_col) < _FLUSH_MS)
 
 
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,7 +562,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sessionize import session_agg, shape_events
 
     e = shape_events(tables.load(spark, sf_dir, "events"))
-    return _events_twin(spark, e, session_agg, "session_start_ms")
+    return _events_twin(e, session_agg, "session_start_ms")
 
 
 def stream_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -622,7 +604,7 @@ def stream_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _events_twin(spark, e, rollup, "bucket_ms")
+    return _events_twin(e, rollup, "bucket_ms")
 
 
 def stream_hop_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -633,7 +615,7 @@ def stream_hop_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     every event lands in window/slide = 2 panes. Shares the batch oracle
     of ``events_hop_window``."""
     e = tables.load(spark, sf_dir, "events").select("event_type", "ts", "value")
-    return _events_twin(spark, e, timeseries.hop_window_counts, "ws_ms")
+    return _events_twin(e, timeseries.hop_window_counts, "ws_ms")
 
 
 def stream_dim_coupon_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -708,10 +690,7 @@ def stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = tables.load(spark, sf_dir, "events").select(
         "event_type", F.unix_millis(F.col("ts")).alias("ts_ms"), "value"
     )
-    with TempStreamDir() as d:
-        _write_replay(e, d.sub("in"), order_by=["ts_ms"])
-        s = read_stream(spark, d.sub("in"))
-        return run_to_memory(value_histogram(s), output_mode="complete")
+    return replay(e, ["ts_ms"], value_histogram, output_mode="complete")
 
 
 def stream_activity_coupon_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -733,8 +712,9 @@ def stream_activity_coupon_full_outer(spark: SparkSession, sf_dir: str) -> DataF
     advance; the per-wave activity and coupon sentinels share an
     order_detail_id and ts, so they match EACH OTHER in the join — the
     coalesced id keeps its __sent_ prefix and the output-side prefix
-    filter drops the joined row."""
-    d_col = F.col("data")
+    filter drops the joined row. The branches are the batch J8's
+    (:func:`..plans.joins.activity_coupon_branches`) with their event-time
+    columns."""
     tables_ = ["order_detail_activity", "order_detail_coupon"]
 
     def _sent(h: int, ts: int) -> DataFrame:
@@ -745,48 +725,32 @@ def stream_activity_coupon_full_outer(spark: SparkSession, sf_dir: str) -> DataF
             "data map<string,string>, old map<string,string>, ts string",
         )
 
-    with TempStreamDir() as dirs:
-        raw = cdc.topic_db_parsed(spark, sf_dir, tables_).withColumn(
-            "__order", F.col("ts").cast("long")
-        )
-        _write_replay(
-            raw, dirs.sub("in"), order_by=["__order"],
-            sentinels=[_sent(h, t) for h, t in enumerate(FLUSH_TIMES_S, 1)],
-        )
-        s = read_stream(spark, dirs.sub("in")).drop("__order")
-
-        def branch(table: str, id_alias: str, cols: dict[str, str]) -> DataFrame:
-            b = s.filter(F.col("table") == table).select(
-                d_col.getItem("order_detail_id").alias(id_alias),
-                *[d_col.getItem(src_).alias(dst) for src_, dst in cols.items()],
-                F.timestamp_seconds(F.col("ts").cast("long")).alias(f"{id_alias}_et"),
-            )
-            return b.withWatermark(f"{id_alias}_et", "5 seconds")
-
-        oa = branch(
-            "order_detail_activity", "a_detail_id",
-            {"activity_id": "activity_id", "activity_rule_id": "activity_rule_id"},
-        )
-        oc = branch(
-            "order_detail_coupon", "c_detail_id",
-            {"coupon_id": "coupon_id", "coupon_use_id": "coupon_use_id"},
-        )
-        joined = oa.join(
+    def band_join(s: DataFrame) -> DataFrame:
+        oa, oc = joins.activity_coupon_branches(s, event_time=True)
+        oa = oa.withWatermark("a_detail_id_et", "5 seconds")
+        oc = oc.withWatermark("c_detail_id_et", "5 seconds")
+        band = F.expr("INTERVAL 5 SECONDS")
+        return oa.join(
             oc,
             (F.col("a_detail_id") == F.col("c_detail_id"))
-            & (F.col("c_detail_id_et") >= F.col("a_detail_id_et") - F.expr("INTERVAL 5 SECONDS"))
-            & (F.col("c_detail_id_et") <= F.col("a_detail_id_et") + F.expr("INTERVAL 5 SECONDS")),
+            & (F.col("c_detail_id_et") >= F.col("a_detail_id_et") - band)
+            & (F.col("c_detail_id_et") <= F.col("a_detail_id_et") + band),
             "full_outer",
         ).select(
             F.coalesce("a_detail_id", "c_detail_id").alias("order_detail_id"),
-            "activity_id",
-            "activity_rule_id",
-            "coupon_id",
-            "coupon_use_id",
+            *joins.J8_COLS,
         )
-        return run_to_memory(joined, output_mode="append").filter(
-            ~F.col("order_detail_id").startswith("__sent_")
-        )
+
+    raw = cdc.topic_db_parsed(spark, sf_dir, tables_).withColumn(
+        "__order", F.col("ts").cast("long")
+    )
+    out = replay(
+        raw,
+        ["__order"],
+        band_join,
+        sentinels=[_sent(h, t) for h, t in enumerate(FLUSH_TIMES_S, 1)],
+    )
+    return out.filter(~F.col("order_detail_id").startswith("__sent_"))
 
 
 def stream_type_counts_top(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -800,10 +764,7 @@ def stream_type_counts_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = tables.load(spark, sf_dir, "events").select(
         "event_type", F.unix_millis(F.col("ts")).alias("ts_ms")
     )
-    with TempStreamDir() as d:
-        _write_replay(e, d.sub("in"), order_by=["ts_ms"])
-        s = read_stream(spark, d.sub("in"))
-        return run_to_memory(type_counts_top(s), output_mode="complete")
+    return replay(e, ["ts_ms"], type_counts_top, output_mode="complete")
 
 
 def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -857,6 +818,8 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolving base would reclassify later in-stream clones of earlier
     'new' docs). The evolving-base keyed-MERGE mechanics are separately
     proven by stream_order_info_upsert / stream_dim_coupon_scd2.
+    The base-hash, near-pair and flag stages are the batch entry's
+    (:func:`..operators.text_dedup.dedup_incremental`).
     """
     from ..operators import text_dedup as td
 
@@ -866,40 +829,14 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import api
 
     corpus = api._corpus(spark, sf_dir)
-    pairs = api._ngram_pairs(spark, sf_dir)
-    is_base = F.col("doc_id") < td.INCREMENTAL_BASE_MAX
-    base_h = (
-        corpus.filter(is_base)
-        .select(F.md5("text").alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("exact_dup_of"))
+    base_h = td.incremental_base_hashes(corpus)
+    near = td.incremental_near_pairs(api._ngram_pairs(spark, sf_dir))
+    inc = corpus.filter(F.col("doc_id") >= td.INCREMENTAL_BASE_MAX)
+    return replay(
+        inc.select("doc_id", "text"),
+        ["doc_id"],
+        lambda s: td.incremental_flags(s, base_h, near),
     )
-    near = (
-        pairs.filter(
-            (F.col("a") < td.INCREMENTAL_BASE_MAX)
-            & (F.col("b") >= td.INCREMENTAL_BASE_MAX)
-        )
-        .groupBy(F.col("b").alias("doc_id"))
-        .agg(F.min("a").alias("near_dup_of"))
-    )
-    with TempStreamDir() as d:
-        inc = corpus.filter(~is_base).select("doc_id", "text")
-        _write_replay(inc, d.sub("in"), order_by=["doc_id"])
-        s = read_stream(spark, d.sub("in"))
-        flagged = (
-            s.select("doc_id", F.md5("text").alias("h"))
-            .join(base_h, "h", "left")
-            .join(near, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("exact_dup_of", "near_dup_of").alias("dup_of"),
-                F.when(F.col("exact_dup_of").isNotNull(), F.lit("exact"))
-                .when(F.col("near_dup_of").isNotNull(), F.lit("near"))
-                .otherwise(F.lit("new"))
-                .alias("match_type"),
-            )
-        )
-        return run_to_memory(flagged, output_mode="append")
 
 
 def stream_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -919,13 +856,11 @@ def stream_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = spark.createDataFrame(
         ta.mixture_rates(docs).collect(), "lang string, sample_ppm bigint"
     )
-    with TempStreamDir() as d:
-        _write_replay(
-            docs.select("doc_id", "lang", "n_chars"), d.sub("in"),
-            order_by=["doc_id"],
-        )
-        s = read_stream(spark, d.sub("in"))
-        return run_to_memory(ta.apply_mixture(s, rates))
+    return replay(
+        docs.select("doc_id", "lang", "n_chars"),
+        ["doc_id"],
+        lambda s: ta.apply_mixture(s, rates),
+    )
 
 
 def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,14 +892,12 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect(),
         "shingle string",
     ).withColumn("hit", F.lit(1))
-    with TempStreamDir() as d:
-        cand = corpus.filter(~is_bench).select("doc_id", "text")
-        _write_replay(cand, d.sub("in"), order_by=["doc_id"])
-        s = read_stream(spark, d.sub("in"))
+
+    def overlap(s: DataFrame) -> DataFrame:
         marked = td.shingles_exploded(s, n=td.DECON_N).join(
             F.broadcast(bench), "shingle", "left"
         )
-        agg = (
+        return (
             marked.groupBy("doc_id")
             .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_overlap"))
             .select(
@@ -973,7 +906,9 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("n_overlap") > 0).cast("int").alias("contaminated"),
             )
         )
-        return run_to_memory(agg, output_mode="complete")
+
+    cand = corpus.filter(~is_bench).select("doc_id", "text")
+    return replay(cand, ["doc_id"], overlap, output_mode="complete")
 
 
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -987,13 +922,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text_analysis as ta
 
     docs = tables.load(spark, sf_dir, "documents")
-    with TempStreamDir() as d:
-        _write_replay(
-            docs.select("doc_id", "text", "lang"), d.sub("in"),
-            order_by=["doc_id"],
-        )
-        s = read_stream(spark, d.sub("in"))
-        return run_to_memory(ta.quality_gate(s))
+    return replay(docs.select("doc_id", "text", "lang"), ["doc_id"], ta.quality_gate)
 
 
 def stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1008,10 +937,7 @@ def stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import corpus as corpus_mod
 
     media = multimodal.with_binary_payload(corpus_mod.corpus(spark, sf_dir))
-    with TempStreamDir() as d:
-        _write_replay(media, d.sub("in"), order_by=["doc_id"])
-        s = read_stream(spark, d.sub("in"))
-        return run_to_memory(multimodal.decode_features(s))
+    return replay(media, ["doc_id"], multimodal.decode_features)
 
 
 def stream_value_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1030,22 +956,14 @@ def stream_value_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_millis(ts) DIV 1000").alias("ts_s"),
         F.round(F.col("value") * 1e6).cast("bigint").alias("v_micro"),
     )
-    with TempStreamDir() as d:
-        sents = [
-            spark.createDataFrame(
-                [(-1, -1, t, 0)],
-                "user_id long, event_id long, ts_s long, v_micro long",
-            )
-            for t in FLUSH_TIMES_S
-        ]
-        _write_replay(e, d.sub("in"), order_by=["ts_s"], sentinels=sents)
-        s = read_stream(spark, d.sub("in")).withColumn(
-            "rt", F.timestamp_seconds(F.col("ts_s"))
-        )
-        out = stateful.trailing_window_stream(
-            s, timeseries.TRAIL_WINDOW_SEC
-        )
-        return run_to_memory(out).filter(F.col("user_id") >= 0)
+
+    def trailing(s: DataFrame) -> DataFrame:
+        s = s.withColumn("rt", F.timestamp_seconds(F.col("ts_s")))
+        return stateful.trailing_window_stream(s, timeseries.TRAIL_WINDOW_SEC)
+
+    waves = flush_waves(e, "ts_s", user_id=-1, event_id=-1, v_micro=0)
+    out = replay(e, ["ts_s"], trailing, sentinels=waves)
+    return out.filter(F.col("user_id") >= 0)
 
 
 def stream_multimodal_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1062,10 +980,7 @@ def stream_multimodal_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import corpus as corpus_mod
 
     media = multimodal.with_binary_payload(corpus_mod.corpus(spark, sf_dir))
-    with TempStreamDir() as d:
-        _write_replay(media, d.sub("in"), order_by=["doc_id"])
-        s = read_stream(spark, d.sub("in"))
-        return run_to_memory(multimodal.dhash_fingerprints(s))
+    return replay(media, ["doc_id"], multimodal.dhash_fingerprints)
 
 
 def stream_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1123,13 +1038,11 @@ def stream_fasttext_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = tables.load(spark, sf_dir, "documents")
     model = ta.fit_model(docs)  # offline fit, bounded artifact
-    with TempStreamDir() as d:
-        _write_replay(
-            docs.select("doc_id", "text", "lang"), d.sub("in"),
-            order_by=["doc_id"],
-        )
-        s = read_stream(spark, d.sub("in"))
-        return run_to_memory(ta.fasttext_score_trained(s, model))
+    return replay(
+        docs.select("doc_id", "text", "lang"),
+        ["doc_id"],
+        lambda s: ta.fasttext_score_trained(s, model),
+    )
 
 
 def stream_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,11 +1055,12 @@ def stream_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import simsearch as ss
 
     emb = tables.load(spark, sf_dir, "embeddings")
-    with TempStreamDir() as d:
-        _write_replay(emb.select("vec_id", "embedding", "label"),
-                      d.sub("in"), order_by=["vec_id"])
-        s = read_stream(spark, d.sub("in"))
-        return run_to_memory(ss.norm_stats(s), output_mode="complete")
+    return replay(
+        emb.select("vec_id", "embedding", "label"),
+        ["vec_id"],
+        ss.norm_stats,
+        output_mode="complete",
+    )
 
 
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1169,19 +1083,19 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         "event_id", "ts", "event_type", "value"
     )
     feed = e.unionByName(e.filter(F.col("event_id") % 5 == 0))
-    with TempStreamDir() as d:
-        _write_replay(feed, d.sub("in"), order_by=["ts"])
-        s = read_stream(spark, d.sub("in"))
+
+    def dedup(s: DataFrame) -> DataFrame:
         deduped = s.withWatermark("ts", "10 seconds").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        out = deduped.select(
+        return deduped.select(
             "event_id",
             F.unix_millis("ts").alias("ts_ms"),
             "event_type",
             "value",
         )
-        return run_to_memory(out)
+
+    return replay(feed, ["ts"], dedup)
 
 
 def stream_order_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1194,14 +1108,13 @@ def stream_order_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason a retract aggregate survives 1e9 keys where keep-latest
     carries one state row per key. Snapshot equals the batch entry and
     shares its latest-state-per-id oracle."""
-    with TempStreamDir() as d:
-        raw = cdc.topic_db_json(spark, sf_dir, only=["order_info"])
-        _write_replay(raw, d.sub("in"), order_by=None)
-        ev = cdc.parse_topic_db(read_stream(spark, d.sub("in")))
-        out = dws.order_status_counts_from_deltas(
-            dws.order_status_count_deltas(ev)
-        )
-        return run_to_memory(out, output_mode="complete")
+    raw = cdc.topic_db_json(spark, sf_dir, only=["order_info"])
+
+    def counts(s: DataFrame) -> DataFrame:
+        deltas = dws.order_status_count_deltas(cdc.parse_topic_db(s))
+        return dws.order_status_counts_from_deltas(deltas)
+
+    return replay(raw, None, counts, output_mode="complete")
 
 
 def stream_er_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,13 +1131,13 @@ def stream_er_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     customer = tables.load(spark, sf_dir, "customer")
     variants = linkage.inject_noisy_customers(customer)
-    with TempStreamDir() as d:
-        _write_replay(variants, d.sub("in"), order_by=["variant_key"])
-        s = read_stream(spark, d.sub("in"))
-        snap = run_to_memory(
-            linkage.resolve_online(s, customer), output_mode="complete"
-        )
-        return linkage.finish_online(snap)
+    snap = replay(
+        variants,
+        ["variant_key"],
+        lambda s: linkage.resolve_online(s, customer),
+        output_mode="complete",
+    )
+    return linkage.finish_online(snap)
 
 
 def stream_expectation_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1243,8 +1156,5 @@ def stream_expectation_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = tables.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"
     )
-    with TempStreamDir() as d:
-        _write_replay(e, d.sub("in"), order_by=["ts"])
-        s = read_stream(spark, d.sub("in"))
-        snap = run_to_memory(expectation_agg(s), output_mode="complete")
-        return expectation_unpivot(snap)
+    snap = replay(e, ["ts"], expectation_agg, output_mode="complete")
+    return expectation_unpivot(snap)

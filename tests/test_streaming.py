@@ -242,14 +242,15 @@ def test_replay_directory_contract(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import read_stream
+    from flink_realtime_datawarehouse_v3_spark.streaming import core
 
     n_files = 2
     path = str(tmp_path / "in")
     df = spark.range(40).select(F.col("id").alias("ts"), (F.col("id") * 2).alias("v"))
-    waves = [
-        spark.createDataFrame([(1000 + k, -1)], "ts long, v long") for k in range(2)
-    ]
+    waves = core.flush_waves(df, "ts", v=-1)
+    for k, w in enumerate(waves):
+        assert w.schema == df.schema
+        assert w.collect() == [(core.FLUSH_TIMES_S[k], -1)]
     sp._write_replay(df, path, order_by=["ts"], sentinels=waves, n_files=n_files)
 
     with open(os.path.join(path, "_replay_meta.json")) as f:
@@ -272,10 +273,12 @@ def test_replay_directory_contract(spark, tmp_path):
         chunk = tail[k * fpb:(k + 1) * fpb]
         rows = [pq.ParquetFile(f).metadata.num_rows for f in chunk]
         assert rows == [1] + [0] * (fpb - 1), (k, rows)
-        assert pq.read_table(chunk[0]).column("ts").to_pylist() == [1000 + k]
+        assert pq.read_table(chunk[0]).column("ts").to_pylist() == [
+            core.FLUSH_TIMES_S[k]
+        ]
 
     q = (
-        read_stream(spark, path)
+        core.read_stream(spark, path)
         .writeStream.format("memory")
         .queryName("replay_contract")
         .trigger(availableNow=True)
