@@ -113,7 +113,7 @@ def main() -> None:
             # STREAMING LANE (r11, verdict #2): availableNow replay
             # wall-clock per entry — micro-batch scheduling + state
             # management end-to-end, timed like the batch lane (noop
-            # materialization of the drained memory-sink table) but
+            # materialization of the read-back sink output) but
             # reported in its own section with its own BASELINE.md band:
             # replay wall-clock is dominated by micro-batch count and
             # state-store churn, not scan/shuffle latency, so the two

@@ -647,7 +647,7 @@ def expectation_check(events: DataFrame) -> DataFrame:
     per-rule rows come from unpivoting the 1-row aggregate — constant
     work after the scan. Split as agg + unpivot so the STREAMING twin
     can run the agg in complete mode (state = one group) and unpivot
-    the memory-sink snapshot."""
+    the sink's snapshot."""
     return expectation_unpivot(expectation_agg(events))
 
 

@@ -69,22 +69,27 @@ def _memo_df(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
 
 def reset_session_caches() -> None:
     """Release and forget every session-scoped resource (see
-    :func:`..session.reset_session_tables`).
+    :func:`..session.reset_session_tables`), the scratch directories
+    included.
 
     The memos model topics/tables that pre-exist a job run, so within one
     driver sweep they are correct to keep; a LONG-LIVED session iterating
     over multiple SF dirs would otherwise accumulate persisted DataFrames
-    without bound. Call between sweeps (tools/check_all.py does, between
-    SF dirs)."""
+    and scratch output without bound. Call between sweeps
+    (tools/check_all.py does, between SF dirs): a frame returned before
+    the reset may read a scratch directory the reset deleted."""
     reset_session_tables()
 
 
 def unpersist_orphans() -> int:
     """Blanket-unpersist every RDD still cached in the active session —
-    the foreachBatch MERGE sinks localCheckpoint per micro-batch and the
-    asynchronous ContextCleaner can lag (r9: a two-SF sweep showed 7
-    stragglers right after gc). ONLY safe at a sweep boundary where the
-    caller holds no live DataFrame from a previous sweep: unpersisting a
+    the foreachBatch MERGE sinks and the iterative operators
+    localCheckpoint per micro-batch or round, and the asynchronous
+    ContextCleaner can lag (r9: a two-SF sweep showed 7 stragglers right
+    after gc). The streaming twins' results are parquet reads of scratch
+    directories, not locally-checkpointed RDDs, so this never drops a
+    twin's output. ONLY safe at a sweep boundary where the caller holds
+    no live DataFrame from a previous sweep: unpersisting a
     locally-checkpointed RDD someone still references drops its blocks
     with no lineage to recompute them. tools/check_all.py calls this
     between SF dirs, right after :func:`reset_session_caches`; mid-

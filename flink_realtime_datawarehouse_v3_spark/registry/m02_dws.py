@@ -346,18 +346,12 @@ _SINK_MONTH = "1995-03"
 
 
 def _sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..operators import sinks
+    from ..session import scratch_dir
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "dws_sink_rt_" + hashlib.md5(sf.encode()).hexdigest()[:8],
-    )
+    base = scratch_dir(spark, "dws_sink_rt")
     df = QUERIES["dws_trade_cart_add_uu_window"](spark, sf).filter(
         F.col("stt").startswith(_SINK_MONTH)
     )

@@ -16,6 +16,7 @@ from ..operators import bpe, multimodal, simsearch, text_analysis, text_dedup  #
 from ..operators import funnel as funnel_op  # noqa: E402
 from ..operators import retrieval as retrieval_op  # noqa: E402
 from ..operators import snapshot as snapshot_op  # noqa: E402
+from ..session import scratch_dir  # noqa: E402
 from ..sources import corpus as corpus_mod  # noqa: E402
 from ..sources import tables  # noqa: E402
 
@@ -635,21 +636,6 @@ FROM (SELECT doc_id, len(toks) AS n_words,
     ),
 )
 
-def _tmp_sink_path(prefix: str, sf: str) -> str:
-    """Deterministic per-SF scratch path for the sink roundtrip entries
-    (one tag scheme, five users). The uid component keeps two users on a
-    shared host (or two concurrent sweeps under different accounts) from
-    racing on the same world-shared /tmp directories — overwrite-while-
-    read, or permission failures on another user's leftover dirs."""
-    import hashlib
-    import os
-    import tempfile
-
-    uid = getattr(os, "getuid", lambda: 0)()
-    tag = hashlib.md5(sf.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}_u{uid}_{tag}")
-
-
 # JSONL corpus roundtrip: training corpora ship as lang-partitioned
 # JSONL; write-side repartition(lang) is the same small-file guard as the
 # DWS sink, read-side passes the schema explicitly (at 100 TB schema
@@ -657,7 +643,7 @@ def _tmp_sink_path(prefix: str, sf: str) -> str:
 def _sink_corpus_jsonl(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    base = _tmp_sink_path("corpus_jsonl_rt", sf)
+    base = scratch_dir(spark, "corpus_jsonl_rt")
     docs = tables.load(spark, sf, "documents")
     (
         docs.repartition(F.col("lang"))
@@ -684,7 +670,7 @@ register(
 def _sink_corpus_orc(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    base = _tmp_sink_path("corpus_orc_rt", sf)
+    base = scratch_dir(spark, "corpus_orc_rt")
     docs = tables.load(spark, sf, "documents")
     (
         docs.repartition(F.col("lang"))
@@ -711,7 +697,7 @@ register(
 # multiline-safe CSV) is exercised; explicit schema + mode FAILFAST so a
 # malformed row is an error, never a silent null row.
 def _sink_corpus_csv(spark: SparkSession, sf: str) -> DataFrame:
-    base = _tmp_sink_path("corpus_csv_rt", sf)
+    base = scratch_dir(spark, "corpus_csv_rt")
     docs = tables.load(spark, sf, "documents")
     (
         docs.coalesce(8)
@@ -745,8 +731,8 @@ register(
 def _sink_corpus_compact(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import sinks
 
-    src = _tmp_sink_path("corpus_frag", sf)
-    dst = _tmp_sink_path("corpus_compact", sf)
+    src = scratch_dir(spark, "corpus_frag")
+    dst = scratch_dir(spark, "corpus_compact")
     docs = tables.load(spark, sf, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(src)
     return sinks.compact_parquet(spark, src, dst, target_bytes=256 << 10).select(
@@ -769,7 +755,7 @@ def _sink_corpus_upsert(spark: SparkSession, sf: str) -> DataFrame:
 
     from ..operators import sinks
 
-    base = _tmp_sink_path("corpus_upsert", sf)
+    base = scratch_dir(spark, "corpus_upsert")
     docs = tables.load(spark, sf, "documents")
     (
         docs.repartition(F.col("source"))
@@ -806,7 +792,7 @@ def _sink_events_zorder(spark: SparkSession, sf: str) -> DataFrame:
 
     from ..operators import sinks
 
-    base = _tmp_sink_path("events_zorder", sf)
+    base = scratch_dir(spark, "events_zorder")
     e = tables.load(spark, sf, "events").select(
         "event_id",
         "user_id",

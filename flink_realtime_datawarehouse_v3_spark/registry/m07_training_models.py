@@ -20,7 +20,6 @@ from .m06_training_text import (  # noqa: F401
     _csql,
     _emb,
     _emb_corpus,
-    _tmp_sink_path,
     bpe,
     retrieval_op,
     simsearch,
@@ -28,6 +27,7 @@ from .m06_training_text import (  # noqa: F401
     text_analysis,
     text_dedup,
 )
+from ..session import scratch_dir  # noqa: E402
 
 # BPE tokenizer induction (Sennrich 2016): merge learning on the bounded
 # word-frequency table (hash-green since r13 — the full fit replays in
@@ -197,7 +197,7 @@ FROM (SELECT doc_id,
 def _sink_corpus_shards(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import sinks
 
-    base = _tmp_sink_path("corpus_shards", sf)
+    base = scratch_dir(spark, "corpus_shards")
     pack = text_analysis.shard_pack(_corpus(spark, sf))
     sinks.write_shards(_corpus(spark, sf).join(pack, "doc_id"), base)
     return spark.read.schema(

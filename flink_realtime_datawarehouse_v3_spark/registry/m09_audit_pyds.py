@@ -8,7 +8,7 @@ verify it.
 
 from __future__ import annotations
 
-from ..session import get_or_build, session_table
+from ..session import get_or_build, scratch_dir, session_table
 from ._core import (  # noqa: F401
     DataFrame,
     SparkSession,
@@ -17,7 +17,6 @@ from ._core import (  # noqa: F401
     register,
 )
 from .m03_joins import profiling_op  # noqa: F401
-from .m06_training_text import _tmp_sink_path  # noqa: F401
 
 # --- Referential-integrity audit (operators/profiling.py) --------------------
 # One row per star-schema FK edge: child rows, null FKs, LEFT-ANTI
@@ -80,12 +79,9 @@ def _pyds_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     (task-attempt staging + driver-side atomic publish — the
     FileCommitProtocol shape in miniature) and back via schema'd JSON
     read; the rows must survive the commit protocol byte-exactly."""
-    import shutil
-
     pyds_src.ensure_registered(spark)
     pyds_src.ensure_writer_registered(spark)
-    base = _tmp_sink_path("pyds_jsonl_commit", sf)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "pyds_jsonl_commit")
     df = spark.read.format(pyds_src.SOURCE_NAME).load()
     df.write.format("jsonl_commit").option("path", base).mode("append").save()
     # pathGlobFilter over the real dir, not a glob path: a glob path
@@ -120,17 +116,12 @@ def _mvcc_demo_table(spark: SparkSession, sf: str) -> str:
     batch split works because keep-latest orders on (ts, batch) and a
     given id's CDC events have distinct ts in this corpus). Returns the
     table path."""
-    import os as _os2
-    import shutil
-
     from pyspark.sql import functions as F
 
     from ..streaming import upsert_table
 
     def build() -> str:
-        base = _tmp_sink_path("mvcc_demo", sf)
-        shutil.rmtree(base, ignore_errors=True)
-        tbl = _os2.path.join(base, "tbl")
+        tbl = scratch_dir(spark, "mvcc_demo")
         # r13 optimization round (guide §1.2, same argument as the
         # streaming replays' ODS-served input): serve the order_info
         # envelope from the session's per-branch ODS parse cache instead
@@ -160,14 +151,10 @@ def _mvcc_export_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     no manifest resolver anywhere on the read path. Hash-gated against
     the same last-writer-wins oracle as the streaming upsert entries:
     the export must preserve the merged state byte-for-byte."""
-    import os as _os2
-    import shutil
-
     from ..streaming import upsert_table
 
     tbl = _mvcc_demo_table(spark, sf)
-    exp = _os2.path.join(_tmp_sink_path("mvcc_export", sf), "export")
-    shutil.rmtree(exp, ignore_errors=True)
+    exp = scratch_dir(spark, "mvcc_export")
     upsert_table.export_upsert_snapshot(spark, tbl, exp)
     return spark.read.parquet(exp)
 
@@ -183,14 +170,10 @@ def _mvcc_zonemap_scan(spark: SparkSession, sf: str) -> DataFrame:
     with the selected range, not the table. Hash-gated: the pruned scan
     must equal the oracle's latest-state + WHERE, value-for-value (a
     file wrongly skipped loses rows; one wrongly kept double-counts)."""
-    import os as _os2
-    import shutil
-
     from ..streaming import upsert_table
 
     tbl = _mvcc_demo_table(spark, sf)
-    exp = _os2.path.join(_tmp_sink_path("mvcc_zonemap", sf), "export")
-    shutil.rmtree(exp, ignore_errors=True)
+    exp = scratch_dir(spark, "mvcc_zonemap")
     man = upsert_table.export_upsert_snapshot(
         spark, tbl, exp, sort_by="ts", n_files=8
     )

@@ -16,12 +16,22 @@ RT/app/dws/DwsTradeUserSpuOrderWindow.java:69-71); we model those topics,
 and other per-session artifacts, as entries of tables declared with
 :func:`session_table` and filled through :func:`get_or_build`.
 :func:`reset_session_tables` releases and forgets all of them at once.
+
+Scratch output on disk is one of them. Every directory the engine writes
+and reads back (replay inputs, streaming sinks and checkpoints, sink
+round trips, bucketed tables) comes from :func:`scratch_dir`, which hands
+out fresh directories under one root per session. The root is an entry
+of a session table, so a reset deletes every scratch directory with it,
+and an exit hook deletes it when the process ends without a reset.
 """
 
 from __future__ import annotations
 
+import atexit
 import gc
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from typing import Any
 
@@ -68,6 +78,31 @@ def reset_session_tables() -> None:
                 release(value)
         table.clear()
     gc.collect()
+
+
+def _rmtree(path: str) -> None:
+    shutil.rmtree(path, ignore_errors=True)
+
+
+# (session,) -> the session's scratch root, under tempfile's directory
+_SCRATCH_ROOT: dict[tuple, str] = session_table(_rmtree)
+
+
+@atexit.register
+def _remove_scratch_roots() -> None:
+    for root in _SCRATCH_ROOT.values():
+        _rmtree(root)
+
+
+def scratch_dir(spark: SparkSession, name: str) -> str:
+    """A fresh, empty directory named after ``name`` under the session's
+    scratch root. It lives until :func:`reset_session_tables` or the end
+    of the process, so a DataFrame that reads it stays readable after the
+    call that wrote it returns."""
+    root = get_or_build(
+        _SCRATCH_ROOT, spark, (), lambda: tempfile.mkdtemp(prefix="spark_graft_")
+    )
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=root)
 
 
 def default_parallelism() -> int:

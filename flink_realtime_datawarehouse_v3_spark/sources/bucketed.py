@@ -11,33 +11,31 @@ topics the reference relies on (its ``keyBy`` parallelism == topic
 partition count, RT/app/dim/DimApp.java:34).
 
 Local stand-in: datasource tables with ``bucketBy(n, key).sortBy(key)``
-under a throwaway path; at cluster scale the identical API writes to the
+under a session scratch directory; at cluster scale the identical API writes to the
 metastore. ``tests/test_plans.py`` pins the no-Exchange plan shape.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import get_or_build, session_table
+from ..session import get_or_build, scratch_dir, session_table
 from . import tables
 
 N_BUCKETS = 8
 
 
 def _drop(ready: tuple[str, str, str]) -> None:
-    """Release hook: drop both tables and remove their directory."""
-    *names, base = ready
+    """Release hook: drop both tables. Their directory is a scratch
+    directory, deleted with the session's scratch root."""
+    *names, _ = ready
     spark = SparkSession.getActiveSession()
     if spark is not None:
         for name in names:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(base, ignore_errors=True)
 
 
 # (session, sf_dir) -> (detail table, info table, their directory)
@@ -58,7 +56,7 @@ def order_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 def _write_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     tag = _tag(sf_dir)
     od_name, oi_name = f"bkt_order_detail_{tag}", f"bkt_order_info_{tag}"
-    base = tempfile.mkdtemp(prefix=f"spark_bucketed_{tag}_")
+    base = scratch_dir(spark, f"bucketed_{tag}")
 
     od = tables.load(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("order_key"),

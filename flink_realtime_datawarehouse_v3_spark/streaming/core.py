@@ -25,15 +25,23 @@ sentinel key.
 :func:`flush_waves` builds those two waves for any replay frame: one
 row each, in the frame's schema, at the flush times.
 
-Runners execute a streaming DataFrame to a memory sink or through
-``foreachBatch`` and block until completion. The memory sink's temp view
-is dropped as soon as its result is resolved, so no sink outlives the
-DataFrame that reads it. :func:`replay` is the one memory-sink runner the
-twins call: it writes the replay into a temp directory, reads it back as
-a stream, runs the twin's query over it through :func:`run_to_memory` and
-returns the sink's rows. A twin whose output lives in a ``foreachBatch``
-sink directory manages that directory itself, since the sink has to
-outlive the query until it is read back.
+Runners execute a streaming DataFrame under ``availableNow`` and block
+until it completes. Nothing is collected into the driver: each runner's
+output goes to a directory from :func:`..session.scratch_dir`, which
+lives until the session's next reset.
+
+- :func:`run_to_memory` writes the query's output to parquet and returns
+  a lazy parquet read of it: append mode through the file sink, whose
+  ``_spark_metadata`` log makes the output exactly-once, complete mode
+  through a ``foreachBatch`` that overwrites the directory with each
+  full result (the file sink refuses complete mode).
+- :func:`replay` is the one runner most twins call: it writes the replay
+  into a scratch directory, reads it back as a stream, runs the twin's
+  query over it through :func:`run_to_memory`, deletes the replay input
+  once the query has stopped, and returns the output read.
+- :func:`run_foreach_batch` serves the twins whose sink is their own
+  (a MERGE table, per-dim tables); each writes it into a scratch
+  directory and reads it back after the run.
 """
 
 from __future__ import annotations
@@ -42,12 +50,12 @@ import glob
 import json
 import os
 import shutil
-import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import scratch_dir
 
 N_FILES = 4  # real-data micro-batches per replay
 REPLAY_META = "_replay_meta.json"
@@ -224,25 +232,26 @@ def _await_or_raise(q, timeout_s: int) -> None:
 def run_to_memory(
     sdf: DataFrame, output_mode: str = "append", timeout_s: int = 600
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion (availableNow) into a memory
-    sink; return the sink contents as a batch DataFrame.
+    """Run a streaming DataFrame to completion (availableNow) into a
+    parquet directory under :func:`..session.scratch_dir`; return a lazy
+    read of that directory in ``sdf``'s schema.
 
-    The sink's temp view is dropped once resolved: the returned frame
-    keeps the sink's plan and reads the same rows, and the sink's memory
-    goes with that frame instead of living for the whole session."""
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    with _StreamShufflePartitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+    Append mode runs the file sink, complete mode a ``foreachBatch`` that
+    overwrites the directory with each batch's full result table."""
+    spark = sdf.sparkSession
+    d = scratch_dir(spark, "sink")
+    out = os.path.join(d, "out")
+    w = sdf.writeStream.outputMode(output_mode).option(
+        "checkpointLocation", os.path.join(d, "checkpoint")
+    )
+    if output_mode == "complete":
+        w = w.foreachBatch(lambda batch, _: batch.write.mode("overwrite").parquet(out))
+    else:
+        w = w.format("parquet").option("path", out)
+    with _StreamShufflePartitions(spark):
+        q = w.trigger(availableNow=True).start()
     _await_or_raise(q, timeout_s)
-    result = sdf.sparkSession.table(name)
-    sdf.sparkSession.catalog.dropTempView(name)
-    return result
+    return spark.read.schema(sdf.schema).parquet(out)
 
 
 def run_foreach_batch(
@@ -268,29 +277,16 @@ def replay(
 ) -> DataFrame:
     """Replay ``df`` as a file stream (:func:`_write_replay` with
     ``order_by``, ``sentinels`` and ``n_files``), run ``query`` over the
-    stream to the memory sink in ``output_mode``, and return the sink's
-    rows. The replay directory is deleted once the query has finished;
-    the returned frame reads the sink, not the directory."""
+    stream through :func:`run_to_memory` in ``output_mode``, and return
+    its output read. The replay input is deleted once the query has
+    stopped; the returned frame reads the output directory only."""
     # The three steps are looked up as module globals at call time, so a
     # tracer that rebinds them (perfbench's layer spans) sees every replay.
-    with TempStreamDir() as d:
-        path = d.sub("in")
+    d = scratch_dir(df.sparkSession, "replay")
+    path = os.path.join(d, "in")
+    try:
         _write_replay(df, path, order_by, sentinels=sentinels, n_files=n_files)
         stream = read_stream(df.sparkSession, path)
         return run_to_memory(query(stream), output_mode=output_mode)
-
-
-class TempStreamDir:
-    """Context manager for a throwaway checkpoint/input directory."""
-
-    def __init__(self, prefix: str = "spark_stream_"):
-        self.path = tempfile.mkdtemp(prefix=prefix)
-
-    def sub(self, name: str) -> str:
-        return os.path.join(self.path, name)
-
-    def __enter__(self) -> "TempStreamDir":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        shutil.rmtree(self.path, ignore_errors=True)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

@@ -10,17 +10,22 @@ between them, so both run one query body.
 Most twins are one :func:`.core.replay` call: the replayed frame, its
 event-time order, the query over the stream and the output mode; flush
 waves come from :func:`.core.flush_waves`. These twins stay explicit,
-because their shape is not "one replay into the memory sink":
+because their shape is not "one replay into the parquet sink":
 
 - :func:`stream_pay_detail_suc` joins two replays; the second runs
-  through ``replay`` while the first one's directory is held open;
+  through ``replay`` while the first one's input is a stream read of its
+  own scratch directory;
 - :func:`stream_checkpoint_recovery` stops and restarts a checkpointed
   file-sink query;
 - the ``foreachBatch`` twins (:func:`stream_order_info_upsert`,
   :func:`stream_dim_app`, :func:`stream_dim_coupon_scd2`,
   :func:`stream_dim_user_info_evolve`, :func:`stream_heavy_hitters_cms`,
-  :func:`stream_ivf_search`) write a sink directory that has to live
-  until it is read back, so each keeps its own ``TempStreamDir``.
+  :func:`stream_ivf_search`) write their own sink table (a MERGE table,
+  per-dim tables, query results) instead of the runner's parquet output.
+
+Every directory a twin writes comes from :func:`..session.scratch_dir`,
+so the frame a twin returns reads its sink lazily until the session's
+next reset.
 
 :mod:`..registry.m11_streaming` lists every twin under its registry name,
 paired with the batch entry whose oracle it shares.
@@ -37,6 +42,7 @@ from pyspark.sql import functions as F
 from ..operators import timeseries
 from ..operators.windows import rt_from_ms
 from ..plans import dwd_simple, dws, joins
+from ..session import scratch_dir
 from ..sources import cdc, logs, tables
 from . import stateful, upsert_table
 # run_to_memory stays bound here: perfbench wraps pipelines.run_to_memory.
@@ -44,7 +50,6 @@ from .core import (  # noqa: F401
     FLUSH_EPOCH_S,
     FLUSH_TIMES_S,
     N_FILES,
-    TempStreamDir,
     _write_replay,
     flush_waves,
     read_stream,
@@ -264,12 +269,13 @@ def _order_info_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_order_info_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3 keyed upsert sink: order_info changelog MERGEd to one row per id
     (last writer wins)."""
-    with TempStreamDir() as d:
-        _write_replay(_order_info_changes(spark, sf_dir), d.sub("in"), order_by=["ts"])
-        s = read_stream(spark, d.sub("in"))
-        out_path = d.sub("sink")
-        run_foreach_batch(s, upsert_table.upsert_sink(["id"], "ts", out_path))
-        return upsert_table.read_upsert_table(spark, out_path).localCheckpoint()
+    d = scratch_dir(spark, "order_info_upsert")
+    path, out_path = os.path.join(d, "in"), os.path.join(d, "sink")
+    _write_replay(_order_info_changes(spark, sf_dir), path, order_by=["ts"])
+    run_foreach_batch(
+        read_stream(spark, path), upsert_table.upsert_sink(["id"], "ts", out_path)
+    )
+    return upsert_table.read_upsert_table(spark, out_path)
 
 
 _PRE_TABLES = [
@@ -417,22 +423,21 @@ def stream_pay_detail_suc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans import dwd_trade
     from ..sources import dic
 
-    with TempStreamDir() as d:
-        od_batch = QUERIES["dwd_trade_order_detail"](spark, sf_dir)
-        _write_replay(od_batch, d.sub("od"), order_by=["create_time"])
-        od_stream = read_stream(spark, d.sub("od"))
-        pi_raw = cdc.topic_db_parsed(spark, sf_dir, ["payment_info"]).select(
-            F.to_json(
-                F.struct("database", "table", "type", "data", "old", "ts")
-            ).alias("value")
-        )
-        return replay(
-            pi_raw,
-            None,
-            lambda pi: dwd_trade.pay_detail_suc(
-                cdc.parse_topic_db(pi), od_stream, dic.base_dic(spark)
-            ),
-        )
+    od = scratch_dir(spark, "order_detail")
+    _write_replay(
+        QUERIES["dwd_trade_order_detail"](spark, sf_dir), od, order_by=["create_time"]
+    )
+    od_stream = read_stream(spark, od)
+    pi_raw = cdc.topic_db_parsed(spark, sf_dir, ["payment_info"]).select(
+        F.to_json(F.struct("database", "table", "type", "data", "old", "ts")).alias("value")
+    )
+    return replay(
+        pi_raw,
+        None,
+        lambda pi: dwd_trade.pay_detail_suc(
+            cdc.parse_topic_db(pi), od_stream, dic.base_dic(spark)
+        ),
+    )
 
 
 def stream_order_info_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,35 +485,36 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged — the kill timing affects which code path proves the
     guarantee, never the output.
     """
-    with TempStreamDir() as d:
-        raw = cdc.topic_db_json(spark, sf_dir, only=["favor_info"])
-        _write_replay(raw, d.sub("in"), order_by=None)
-        ckpt, sink = d.sub("ckpt"), d.sub("sink")
+    d = scratch_dir(spark, "checkpoint_recovery")
+    path, ckpt, sink = (os.path.join(d, n) for n in ("in", "ckpt", "sink"))
+    _write_replay(cdc.topic_db_json(spark, sf_dir, only=["favor_info"]), path, order_by=None)
 
-        def start():
-            s = cdc.parse_topic_db(read_stream(spark, d.sub("in")))
-            out = dwd_simple.dwd_interaction_favor_add(s)
-            return (
-                out.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
+    def start():
+        s = cdc.parse_topic_db(read_stream(spark, path))
+        out = dwd_simple.dwd_interaction_favor_add(s)
+        return (
+            out.writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
 
-        q = start()
-        for _ in range(400):
-            time.sleep(0.25)
-            p = q.lastProgress
-            if p is not None and p["batchId"] >= 1:
-                break
-        q.stop()
-        q.awaitTermination(60)
-        q2 = start()
-        if not q2.awaitTermination(300):
-            q2.stop()
-            raise TimeoutError("checkpoint recovery run did not finish")
-        return spark.read.parquet(sink).localCheckpoint()
+    q = start()
+    for _ in range(400):
+        time.sleep(0.25)
+        p = q.lastProgress
+        if p is not None and p["batchId"] >= 1:
+            break
+    q.stop()
+    q.awaitTermination(60)
+    q2 = start()
+    if not q2.awaitTermination(300):
+        q2.stop()
+        raise TimeoutError("checkpoint recovery run did not finish")
+    # The entry is registered as sink_checkpoint_recovery, whose batch
+    # plan (a checkpointed scan) is pinned in PLAN_FP_BASELINE.json.
+    return spark.read.parquet(sink).localCheckpoint()
 
 
 def stream_dim_app(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -516,24 +522,19 @@ def stream_dim_app(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     MERGE into per-dim parquet tables; returns the final dim tables."""
     from ..plans.dim import DIM_CONFIG
 
-    with TempStreamDir() as d:
-        # Structured topic rows, time-range split so arrival order == CDC
-        # order across micro-batches (the JSON parse path is exercised by
-        # stream_favor_add; ts is a fixed-width epoch-seconds string, so
-        # string range-partitioning preserves numeric order).
-        structured = cdc.topic_db_parsed(
-            spark, sf_dir, [c.source_table for c in DIM_CONFIG]
-        )
-        _write_replay(structured, d.sub("in"), order_by=["ts"])
-        s = read_stream(spark, d.sub("in"))
-        out_dir = d.sub("dims")
-        run_foreach_batch(s, dim_router(out_dir))
-        return {
-            cfg.sink_table: read_dim_table(
-                spark, out_dir, cfg.sink_table
-            ).localCheckpoint()
-            for cfg in DIM_CONFIG
-        }
+    d = scratch_dir(spark, "dim_app")
+    path, out_dir = os.path.join(d, "in"), os.path.join(d, "dims")
+    # Structured topic rows, time-range split so arrival order == CDC
+    # order across micro-batches (the JSON parse path is exercised by
+    # stream_favor_add; ts is a fixed-width epoch-seconds string, so
+    # string range-partitioning preserves numeric order).
+    structured = cdc.topic_db_parsed(spark, sf_dir, [c.source_table for c in DIM_CONFIG])
+    _write_replay(structured, path, order_by=["ts"])
+    run_foreach_batch(read_stream(spark, path), dim_router(out_dir))
+    return {
+        cfg.sink_table: read_dim_table(spark, out_dir, cfg.sink_table)
+        for cfg in DIM_CONFIG
+    }
 
 
 def _events_twin(e: DataFrame, agg, start_col: str) -> DataFrame:
@@ -629,17 +630,14 @@ def stream_dim_coupon_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dim_app import scd2_sink
 
     cfg = DIM_CONFIG[1]
-    with TempStreamDir() as d:
-        structured = cdc.topic_db_parsed(spark, sf_dir, [cfg.source_table])
-        _write_replay(structured, d.sub("in"), order_by=["ts"])
-        s = read_stream(spark, d.sub("in"))
-        out_dir = d.sub("dims")
-        run_foreach_batch(s, scd2_sink(out_dir, cfg))
-        return (
-            spark.read.parquet(os.path.join(out_dir, cfg.sink_table + "_scd2"))
-            .drop("__bucket")
-            .localCheckpoint()
-        )
+    d = scratch_dir(spark, "dim_coupon_scd2")
+    path, out_dir = os.path.join(d, "in"), os.path.join(d, "dims")
+    structured = cdc.topic_db_parsed(spark, sf_dir, [cfg.source_table])
+    _write_replay(structured, path, order_by=["ts"])
+    run_foreach_batch(read_stream(spark, path), scd2_sink(out_dir, cfg))
+    return spark.read.parquet(os.path.join(out_dir, cfg.sink_table + "_scd2")).drop(
+        "__bucket"
+    )
 
 
 def stream_dim_user_info_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -656,32 +654,29 @@ def stream_dim_user_info_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v1, v2 = USER_INFO_EVOLUTION
     t_switch = v2.effective_ts
-    with TempStreamDir() as d:
-        structured = cdc.topic_db_parsed(spark, sf_dir, ["user_info"])
-        early = structured.filter(F.col("ts").cast("long") < t_switch)
-        late = structured.filter(F.col("ts").cast("long") >= t_switch)
-        # Early era as the N_FILES range files; the late era rides the
-        # trailing-file mechanism so the config flip lands exactly on the
-        # era boundary (batch ids 0..N_FILES-1 = v1, >= N_FILES = v2).
-        _write_replay(early, d.sub("in"), order_by=["ts"], sentinels=[late])
-        s = read_stream(spark, d.sub("in"))
-        out_dir = d.sub("dims")
-        provider = lambda batch_id: [  # noqa: E731
-            (v1 if batch_id < N_FILES else v2).cfg
-        ]
-        run_foreach_batch(s, dim_router(out_dir, provider))
-        return (
-            read_dim_table(spark, out_dir, "dim_user_info")
-            .select("id", "name", "phone_num", "create_time")
-            .localCheckpoint()
-        )
+    d = scratch_dir(spark, "dim_user_info_evolve")
+    path, out_dir = os.path.join(d, "in"), os.path.join(d, "dims")
+    structured = cdc.topic_db_parsed(spark, sf_dir, ["user_info"])
+    early = structured.filter(F.col("ts").cast("long") < t_switch)
+    late = structured.filter(F.col("ts").cast("long") >= t_switch)
+    # Early era as the N_FILES range files; the late era rides the
+    # trailing-file mechanism so the config flip lands exactly on the
+    # era boundary (batch ids 0..N_FILES-1 = v1, >= N_FILES = v2).
+    _write_replay(early, path, order_by=["ts"], sentinels=[late])
+    provider = lambda batch_id: [  # noqa: E731
+        (v1 if batch_id < N_FILES else v2).cfg
+    ]
+    run_foreach_batch(read_stream(spark, path), dim_router(out_dir, provider))
+    return read_dim_table(spark, out_dir, "dim_user_info").select(
+        "id", "name", "phone_num", "create_time"
+    )
 
 
 def stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPLETE output mode — the third Structured Streaming output form
     beside the append-mode windows and the foreachBatch/update-style
-    MERGEs: a running global histogram whose memory sink holds the latest
-    full snapshot each micro-batch, so after availableNow the table equals
+    MERGEs: a running global histogram whose sink directory holds the
+    latest full snapshot each micro-batch, so after availableNow the table equals
     the batch histogram exactly. No watermark: complete mode retains every
     group, bounded here by the bin space — the production contract for
     complete-mode aggregations (state = O(groups), never O(rows))."""
@@ -756,8 +751,8 @@ def stream_activity_coupon_full_outer(spark: SparkSession, sf_dir: str) -> DataF
 def stream_type_counts_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPLETE-mode global sort+limit: Structured Streaming allows ORDER
     BY (and LIMIT after it) only in complete mode, where every trigger
-    re-emits the full sorted snapshot; after availableNow the memory sink
-    holds exactly the batch top-k. State is O(groups) (6 event types),
+    re-emits the full sorted snapshot; after availableNow the sink
+    directory holds exactly the batch top-k. State is O(groups) (6 event types),
     never O(rows)."""
     from ..operators.analytics import type_counts_top
 
@@ -785,23 +780,18 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = tables.load(spark, sf_dir, "events").select(
         "user_id", F.unix_millis(F.col("ts")).alias("ts_ms")
     )
-    with TempStreamDir() as d:
-        _write_replay(e, d.sub("in"), order_by=["ts_ms"])
-        s = read_stream(spark, d.sub("in"))
-        inc = s.select(
-            F.explode(analytics.cms_slot_array()).alias("rb")
-        ).select(
-            F.col("rb.row_i"), F.col("rb.bucket"), F.lit(1).alias("counter")
-        )
-        sink = d.sub("cms")
-        run_foreach_batch(
-            inc, upsert_table.upsert_sink_agg(["row_i", "bucket"], ["counter"], sink)
-        )
-        counters = upsert_table.read_upsert_table(spark, sink)
-        counts = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-        return analytics.cms_estimate_topk(
-            counts, counters, analytics.CMS_TOP_K
-        ).localCheckpoint()
+    d = scratch_dir(spark, "heavy_hitters_cms")
+    path, sink = os.path.join(d, "in"), os.path.join(d, "cms")
+    _write_replay(e, path, order_by=["ts_ms"])
+    inc = read_stream(spark, path).select(
+        F.explode(analytics.cms_slot_array()).alias("rb")
+    ).select(F.col("rb.row_i"), F.col("rb.bucket"), F.lit(1).alias("counter"))
+    run_foreach_batch(
+        inc, upsert_table.upsert_sink_agg(["row_i", "bucket"], ["counter"], sink)
+    )
+    counters = upsert_table.read_upsert_table(spark, sink)
+    counts = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
+    return analytics.cms_estimate_topk(counts, counters, analytics.CMS_TOP_K)
 
 
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1001,27 +991,25 @@ def stream_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cen, assigned = simsearch.ivf_index(emb)
     assigned = assigned.persist()  # the served index, materialized once
     try:
-        queries = simsearch._queries(emb, 100)
-        with TempStreamDir() as d:
-            _write_replay(queries, d.sub("in"), order_by=["q_id"])
-            s = read_stream(spark, d.sub("in"))
-            out = d.sub("results")
+        d = scratch_dir(spark, "ivf_search")
+        path, out = os.path.join(d, "in"), os.path.join(d, "results")
+        _write_replay(simsearch._queries(emb, 100), path, order_by=["q_id"])
 
-            def serve(batch: DataFrame, batch_id: int) -> None:
-                scored = simsearch._ivf_candidates(batch, cen, assigned)
-                w = Window.partitionBy("q_id").orderBy(
-                    F.col("cosine_sim").desc(), F.col("neighbor_id")
-                )
-                (
-                    scored.withColumn("rank", F.row_number().over(w))
-                    .filter(F.col("rank") <= 10)
-                    .select("q_id", "neighbor_id", "rank", "cosine_sim")
-                    .write.mode("append")
-                    .parquet(out)
-                )
+        def serve(batch: DataFrame, batch_id: int) -> None:
+            scored = simsearch._ivf_candidates(batch, cen, assigned)
+            w = Window.partitionBy("q_id").orderBy(
+                F.col("cosine_sim").desc(), F.col("neighbor_id")
+            )
+            (
+                scored.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= 10)
+                .select("q_id", "neighbor_id", "rank", "cosine_sim")
+                .write.mode("append")
+                .parquet(out)
+            )
 
-            run_foreach_batch(s, serve)
-            return spark.read.parquet(out).localCheckpoint()
+        run_foreach_batch(read_stream(spark, path), serve)
+        return spark.read.parquet(out)
     finally:
         assigned.unpersist()
 
@@ -1145,7 +1133,7 @@ def stream_expectation_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-count rule aggregate runs as a streaming COMPLETE-mode
     aggregation (state = ONE group of counters whatever the stream
     volume — the cheapest stateful shape there is), so each micro-batch
-    the memory sink holds the suite's cumulative verdict; after
+    the sink directory holds the suite's cumulative verdict; after
     availableNow the unpivoted snapshot equals the batch
     events_expectation_check row-for-row and shares its SQL oracle. The
     unpivot runs on the 1-row SINK table, not inside the stream

@@ -153,8 +153,8 @@ def _plan(spark, name: str) -> str:
 
 @pytest.fixture(scope="module")
 def plans(spark):
-    # streaming_* entries execute a full replay and return a memory-sink
-    # scan — no batch plan to gate; their parity lives in test_streaming.
+    # streaming_* entries execute a full replay and return a read of its
+    # sink — no batch plan to gate; their parity lives in test_streaming.
     #
     # Reset session caches first: a MATERIALIZED shared memo carries
     # exact cached-size statistics, and the planner legitimately flips a

@@ -296,28 +296,25 @@ def test_replay_directory_contract(spark, tmp_path):
     assert [batches[i] for i in sorted(batches)][-2:] == [1, 1]
 
 
-def _split_invariant_emissions(spark, df, sentinels, op, n_files):
+def _split_invariant_emissions(spark, tmp_path, df, sentinels, op, n_files):
     """Sorted emissions of ``op`` over ``df`` replayed as ``n_files``
     micro-batches plus the trailing ``sentinels``; ``op`` derives its
     event-time column and drops the sentinel rows."""
     from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
         read_stream,
         run_to_memory,
     )
 
-    with TempStreamDir() as d:
-        sp._write_replay(
-            df, d.sub("in"), order_by=["ts"], sentinels=sentinels, n_files=n_files
-        )
-        out = op(read_stream(spark, d.sub("in")))
-        return sorted(
-            tuple("" if v is None else str(v) for v in r)
-            for r in run_to_memory(out, output_mode="append").collect()
-        )
+    path = str(tmp_path / f"in{n_files}")
+    sp._write_replay(df, path, order_by=["ts"], sentinels=sentinels, n_files=n_files)
+    out = op(read_stream(spark, path))
+    return sorted(
+        tuple("" if v is None else str(v) for v in r)
+        for r in run_to_memory(out, output_mode="append").collect()
+    )
 
 
-def test_debounce_emissions_split_invariant(spark):
+def test_debounce_emissions_split_invariant(spark, tmp_path):
     """The D4 debounce's oracle registration rests on determinism: the
     emission multiset must not depend on how the replay splits into
     micro-batches. Re-run the same input as 2 files and as 6 and compare."""
@@ -348,12 +345,12 @@ def test_debounce_emissions_split_invariant(spark):
             F.col("id") != "__sentinel__"
         )
 
-    assert _split_invariant_emissions(spark, flat, sents, op, 2) == (
-        _split_invariant_emissions(spark, flat, sents, op, 6)
+    assert _split_invariant_emissions(spark, tmp_path, flat, sents, op, 2) == (
+        _split_invariant_emissions(spark, tmp_path, flat, sents, op, 6)
     )
 
 
-def test_jump_emissions_split_invariant(spark):
+def test_jump_emissions_split_invariant(spark, tmp_path):
     """The D5 bounce detector's timer sweep must not depend on how the
     replay splits into micro-batches either: the same page log plus its
     flush sentinels, replayed as 2 files and as 6, emits the same
@@ -374,8 +371,8 @@ def test_jump_emissions_split_invariant(spark):
             F.col("mid") != "__sentinel__"
         )
 
-    two = _split_invariant_emissions(spark, page, sents, op, 2)
-    assert two and two == _split_invariant_emissions(spark, page, sents, op, 6)
+    two = _split_invariant_emissions(spark, tmp_path, page, sents, op, 2)
+    assert two and two == _split_invariant_emissions(spark, tmp_path, page, sents, op, 6)
 
 
 def test_debounce_anchor_semantics_typed_state(spark, tmp_path):
@@ -433,20 +430,24 @@ def test_debounce_anchor_semantics_typed_state(spark, tmp_path):
 
 
 def test_run_to_memory_leaves_no_sink_table(spark, tmp_path):
-    """run_to_memory drops its memory-sink view once the result is
-    resolved, in append and complete mode; the returned frames keep
-    reading the whole result after a collection."""
-    import gc
+    """run_to_memory keeps no sink in the session: its append and complete
+    results are parquet reads of scratch directories that read back in
+    full, no memory-sink table exists, and a reset deletes the
+    directories."""
+    import os
+    from urllib.parse import urlparse
 
+    from flink_realtime_datawarehouse_v3_spark import session
     from flink_realtime_datawarehouse_v3_spark.streaming import core
 
     path = str(tmp_path / "in")
-    spark.range(20).withColumn("k", F.col("id") % 3).write.parquet(path)
+    spark.range(20).withColumn("k", F.col("id") % 3).repartition(4).write.parquet(path)
     appended = core.run_to_memory(core.read_stream(spark, path))
+    # One input file per micro-batch: complete mode must keep only the
+    # last batch's full table, not every batch's.
     counted = core.run_to_memory(
         core.read_stream(spark, path).groupBy("k").count(), output_mode="complete"
     )
-    gc.collect()
     assert [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")] == []
     assert sorted((r.id, r.k) for r in appended.collect()) == [(i, i % 3) for i in range(20)]
     assert appended.filter(F.col("k") == 0).count() == 7
@@ -455,9 +456,15 @@ def test_run_to_memory_leaves_no_sink_table(spark, tmp_path):
         (1, 7),
         (2, 6),
     ]
+    dirs = {
+        os.path.dirname(urlparse(f).path) for df in (appended, counted) for f in df.inputFiles()
+    }
+    assert dirs and all(os.path.isdir(d) for d in dirs)
+    session.reset_session_tables()
+    assert not any(os.path.exists(d) for d in dirs)
 
 
-def test_checkpoint_recovery_exactly_once(spark):
+def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """K2/W11: kill a checkpointed query mid-stream, restart from the same
     checkpoint, and the parquet sink holds every input row exactly once —
     offset tracking + idempotent batch writes give end-to-end
@@ -470,58 +477,53 @@ def test_checkpoint_recovery_exactly_once(spark):
 
     from flink_realtime_datawarehouse_v3_spark.sources import cdc
     from flink_realtime_datawarehouse_v3_spark.streaming import pipelines as sp_mod
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-    )
+    from flink_realtime_datawarehouse_v3_spark.streaming.core import read_stream
 
-    with TempStreamDir() as d:
-        raw = cdc.topic_db_json(spark, SF_SMOKE, only=["favor_info"])
-        sp_mod._write_replay(raw, d.sub("in"), order_by=None)
-        ckpt, sink = d.sub("ckpt"), d.sub("sink")
+    raw = cdc.topic_db_json(spark, SF_SMOKE, only=["favor_info"])
+    sp_mod._write_replay(raw, str(tmp_path / "in"), order_by=None)
+    ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "sink")
 
-        def start():
-            s = cdc.parse_topic_db(read_stream(spark, d.sub("in")))
-            return (
-                s.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        q = start()
-        # Kill after the first committed batch (mid-stream crash).
-        for _ in range(200):
-            time.sleep(0.25)
-            p = q.lastProgress
-            if p is not None and p["batchId"] >= 1:
-                break
-        q.stop()
-        q.awaitTermination(60)
-        # Restart from the same checkpoint; availableNow drains the rest.
-        q2 = start()
-        assert q2.awaitTermination(300), "recovery run did not finish"
-
-        got = spark.read.parquet(sink)
-        want = cdc.topic_db(spark, SF_SMOKE, only=["favor_info"])
-        assert got.count() == want.count(), "duplicate or lost rows after recovery"
-        assert (
-            got.select(F.col("data").getItem("id").alias("id"))
-            .exceptAll(want.select(F.col("data").getItem("id").alias("id")))
-            .count()
-            == 0
+    def start():
+        s = cdc.parse_topic_db(read_stream(spark, str(tmp_path / "in")))
+        return (
+            s.writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
 
+    q = start()
+    # Kill after the first committed batch (mid-stream crash).
+    for _ in range(200):
+        time.sleep(0.25)
+        p = q.lastProgress
+        if p is not None and p["batchId"] >= 1:
+            break
+    q.stop()
+    q.awaitTermination(60)
+    # Restart from the same checkpoint; availableNow drains the rest.
+    q2 = start()
+    assert q2.awaitTermination(300), "recovery run did not finish"
 
-def test_dim_router_dynamic_column_add(spark):
+    got = spark.read.parquet(sink)
+    want = cdc.topic_db(spark, SF_SMOKE, only=["favor_info"])
+    assert got.count() == want.count(), "duplicate or lost rows after recovery"
+    assert (
+        got.select(F.col("data").getItem("id").alias("id"))
+        .exceptAll(want.select(F.col("data").getItem("id").alias("id")))
+        .count()
+        == 0
+    )
+
+
+def test_dim_router_dynamic_column_add(spark, tmp_path):
     """J10/K5 runtime-DDL parity (RT/app/func/TableProcessFunction.java:84-106):
     a config row that grows its sinkColumns mid-stream must schema-merge —
     rows upserted before the change read NULL in the new column; rows seen
     after carry the value; re-upserted keys adopt the new shape."""
     from flink_realtime_datawarehouse_v3_spark.plans.dim import TableProcess
     from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
         read_stream,
         run_foreach_batch,
         stamp_file_order,
@@ -549,32 +551,31 @@ def test_dim_router_dynamic_column_add(spark):
     v1 = [TableProcess("user_info", "dim_user_info", "id,name")]
     v2 = [TableProcess("user_info", "dim_user_info", "id,name,email")]
 
-    with TempStreamDir() as d:
-        import glob
-        import os
+    import glob
+    import os
 
-        # one file per micro-batch => deterministic config generations
-        in_dir = d.sub("in")
-        os.makedirs(in_dir, exist_ok=True)
-        files = []
-        for i, b in enumerate((batch0, batch1)):
-            b.coalesce(1).write.mode("overwrite").parquet(d.sub(f"tmp{i}"))
-            (src,) = glob.glob(os.path.join(d.sub(f"tmp{i}"), "part-*.parquet"))
-            dest = os.path.join(in_dir, f"b{i}.parquet")
-            os.replace(src, dest)
-            files.append(dest)
-        stamp_file_order(in_dir, files)
-        s = read_stream(spark, in_dir)
-        out_dir = d.sub("dims")
-        run_foreach_batch(
-            s, dim_router(out_dir, lambda batch_id: v1 if batch_id == 0 else v2)
-        )
-        got = {
-            r["id"]: (r["name"], r["email"])
-            for r in spark.read.parquet(
-                os.path.join(out_dir, "dim_user_info")
-            ).collect()
-        }
+    # one file per micro-batch => deterministic config generations
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir, exist_ok=True)
+    files = []
+    for i, b in enumerate((batch0, batch1)):
+        b.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / f"tmp{i}"))
+        (src,) = glob.glob(os.path.join(str(tmp_path / f"tmp{i}"), "part-*.parquet"))
+        dest = os.path.join(in_dir, f"b{i}.parquet")
+        os.replace(src, dest)
+        files.append(dest)
+    stamp_file_order(in_dir, files)
+    s = read_stream(spark, in_dir)
+    out_dir = str(tmp_path / "dims")
+    run_foreach_batch(
+        s, dim_router(out_dir, lambda batch_id: v1 if batch_id == 0 else v2)
+    )
+    got = {
+        r["id"]: (r["name"], r["email"])
+        for r in spark.read.parquet(
+            os.path.join(out_dir, "dim_user_info")
+        ).collect()
+    }
     assert got == {
         "1": ("u1", None),      # pre-change row: new column NULL
         "2": ("u2", "b2@x"),    # re-upserted after the change: value present
@@ -1201,7 +1202,7 @@ def test_upsert_snapshot_two_writer_race(spark, tmp_path, monkeypatch):
     assert "gen-2-r1" in live, live
 
 
-def test_stateful_restart_under_rescaled_shuffle_partitions(spark):
+def test_stateful_restart_under_rescaled_shuffle_partitions(spark, tmp_path):
     """State-rescale replay (r9 verdict stretch): kill a STATEFUL query
     (dropDuplicates keyed state) mid-stream, restart from the same
     checkpoint under a DIFFERENT spark.sql.shuffle.partitions — the
@@ -1225,65 +1226,63 @@ def test_stateful_restart_under_rescaled_shuffle_partitions(spark):
     from flink_realtime_datawarehouse_v3_spark.sources import tables
     from flink_realtime_datawarehouse_v3_spark.streaming import pipelines as sp_mod
     from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
         _StreamShufflePartitions,
         read_stream,
     )
 
-    with TempStreamDir() as d:
-        ev = tables.load(spark, SF_SMOKE, "events").select(
-            "user_id", "event_type", "ts"
-        )
-        sp_mod._write_replay(ev, d.sub("in"), order_by=["ts"])
-        ckpt, sink = d.sub("ckpt"), d.sub("sink")
+    ev = tables.load(spark, SF_SMOKE, "events").select(
+        "user_id", "event_type", "ts"
+    )
+    sp_mod._write_replay(ev, str(tmp_path / "in"), order_by=["ts"])
+    ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "sink")
 
-        def start():
-            s = read_stream(spark, d.sub("in")).dropDuplicates(["user_id"])
-            return (
-                s.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        with _StreamShufflePartitions(spark, 8):
-            q = start()
-            for _ in range(200):  # kill after the first committed batch
-                time.sleep(0.25)
-                p = q.lastProgress
-                if p is not None and p["batchId"] >= 1:
-                    break
-            q.stop()
-            q.awaitTermination(60)
-
-        with _StreamShufflePartitions(spark, 3):  # the rescaled restart
-            q2 = start()
-            assert q2.awaitTermination(300), "rescaled recovery did not finish"
-
-        got = spark.read.parquet(sink)
-        assert got.count() == ev.select("user_id").distinct().count(), (
-            "duplicate or lost first-per-key emission across the rescaled restart"
+    def start():
+        s = read_stream(spark, str(tmp_path / "in")).dropDuplicates(["user_id"])
+        return (
+            s.writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        # Mechanism: the checkpoint pinned the ORIGINAL partition count —
-        # the last offset written by the rescaled run still records 8,
-        # and the keyed-state store kept its 8-way directory layout.
-        last_off = max(
-            (f for f in glob.glob(os.path.join(ckpt, "offsets", "*"))
-             if os.path.basename(f).isdigit()),
-            key=lambda f: int(os.path.basename(f)),
-        )
-        meta = next(
-            json.loads(ln)
-            for ln in open(last_off)
-            if ln.startswith("{") and "conf" in ln
-        )
-        assert meta["conf"]["spark.sql.shuffle.partitions"] == "8", meta
-        state_parts = [
-            p for p in os.listdir(os.path.join(ckpt, "state", "0"))
-            if p.isdigit()
-        ]
-        assert len(state_parts) == 8, sorted(state_parts)
+
+    with _StreamShufflePartitions(spark, 8):
+        q = start()
+        for _ in range(200):  # kill after the first committed batch
+            time.sleep(0.25)
+            p = q.lastProgress
+            if p is not None and p["batchId"] >= 1:
+                break
+        q.stop()
+        q.awaitTermination(60)
+
+    with _StreamShufflePartitions(spark, 3):  # the rescaled restart
+        q2 = start()
+        assert q2.awaitTermination(300), "rescaled recovery did not finish"
+
+    got = spark.read.parquet(sink)
+    assert got.count() == ev.select("user_id").distinct().count(), (
+        "duplicate or lost first-per-key emission across the rescaled restart"
+    )
+    # Mechanism: the checkpoint pinned the ORIGINAL partition count —
+    # the last offset written by the rescaled run still records 8,
+    # and the keyed-state store kept its 8-way directory layout.
+    last_off = max(
+        (f for f in glob.glob(os.path.join(ckpt, "offsets", "*"))
+         if os.path.basename(f).isdigit()),
+        key=lambda f: int(os.path.basename(f)),
+    )
+    meta = next(
+        json.loads(ln)
+        for ln in open(last_off)
+        if ln.startswith("{") and "conf" in ln
+    )
+    assert meta["conf"]["spark.sql.shuffle.partitions"] == "8", meta
+    state_parts = [
+        p for p in os.listdir(os.path.join(ckpt, "state", "0"))
+        if p.isdigit()
+    ]
+    assert len(state_parts) == 8, sorted(state_parts)
 
 
 def test_stream_er_resolve(spark):
@@ -1355,7 +1354,7 @@ def test_stream_dedup_within_watermark(spark):
     assert out.select("event_id").distinct().count() == n
 
 
-def test_observed_metrics_ride_the_stream(spark):
+def test_observed_metrics_ride_the_stream(spark, tmp_path):
     """Data-quality counters as OBSERVED METRICS: ``df.observe`` rides
     the acceptance-gate counters on the stream itself — computed inside
     the running plan (no second scan, no extra sink) and surfaced per
@@ -1368,10 +1367,7 @@ def test_observed_metrics_ride_the_stream(spark):
     from pyspark.sql import functions as F
 
     from flink_realtime_datawarehouse_v3_spark.sources import tables
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-    )
+    from flink_realtime_datawarehouse_v3_spark.streaming.core import read_stream
     from flink_realtime_datawarehouse_v3_spark.streaming.pipelines import (
         _write_replay,
     )
@@ -1383,39 +1379,38 @@ def test_observed_metrics_ride_the_stream(spark):
     want_neg = e.filter(F.col("value") < 0).count()
     want_null_type = e.filter(F.col("event_type").isNull()).count()
 
-    with TempStreamDir() as d:
-        _write_replay(e, d.sub("in"), order_by=["ts"])
-        s = read_stream(spark, d.sub("in"))
-        obs = s.observe(
-            "gate",
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.when(F.col("value") < 0, 1).otherwise(0)).alias(
-                "neg_values"
-            ),
-            F.sum(
-                F.when(F.col("event_type").isNull(), 1).otherwise(0)
-            ).alias("null_types"),
-        )
-        q = (
-            obs.writeStream.format("noop")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-        # progress events land asynchronously after termination
-        deadline = _time.monotonic() + 30
+    _write_replay(e, str(tmp_path / "in"), order_by=["ts"])
+    s = read_stream(spark, str(tmp_path / "in"))
+    obs = s.observe(
+        "gate",
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.when(F.col("value") < 0, 1).otherwise(0)).alias(
+            "neg_values"
+        ),
+        F.sum(
+            F.when(F.col("event_type").isNull(), 1).otherwise(0)
+        ).alias("null_types"),
+    )
+    q = (
+        obs.writeStream.format("noop")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(600)
+    # progress events land asynchronously after termination
+    deadline = _time.monotonic() + 30
+    got = {"rows": 0, "neg_values": 0, "null_types": 0}
+    while _time.monotonic() < deadline:
         got = {"rows": 0, "neg_values": 0, "null_types": 0}
-        while _time.monotonic() < deadline:
-            got = {"rows": 0, "neg_values": 0, "null_types": 0}
-            for p in q.recentProgress:
-                m = (p.observedMetrics or {}).get("gate")
-                if m is not None:
-                    got["rows"] += m["rows"]
-                    got["neg_values"] += m["neg_values"]
-                    got["null_types"] += m["null_types"]
-            if got["rows"] == want_rows:
-                break
-            _time.sleep(0.5)
+        for p in q.recentProgress:
+            m = (p.observedMetrics or {}).get("gate")
+            if m is not None:
+                got["rows"] += m["rows"]
+                got["neg_values"] += m["neg_values"]
+                got["null_types"] += m["null_types"]
+        if got["rows"] == want_rows:
+            break
+        _time.sleep(0.5)
     assert got == {
         "rows": want_rows,
         "neg_values": want_neg,
@@ -1438,44 +1433,40 @@ def test_statestore_reader_inspects_checkpointed_state(spark, tmp_path):
 
     from flink_realtime_datawarehouse_v3_spark.plans import dws
     from flink_realtime_datawarehouse_v3_spark.sources import cdc, tables
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-    )
+    from flink_realtime_datawarehouse_v3_spark.streaming.core import read_stream
     from flink_realtime_datawarehouse_v3_spark.streaming.pipelines import (
         _write_replay,
     )
 
-    with TempStreamDir() as d:
-        raw = cdc.topic_db_json(spark, SF_SMOKE, only=["order_info"])
-        _write_replay(raw, d.sub("in"), order_by=None)
-        ev = cdc.parse_topic_db(read_stream(spark, d.sub("in")))
-        deltas = dws.order_status_count_deltas(ev)
-        agg = deltas.groupBy("province_id", "order_status").agg(
-            F.sum("delta").cast("bigint").alias("n_orders")
-        )
-        chk = str(tmp_path / "chk")
-        name = "statestore_probe"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-        out = {
-            (r.province_id, r.order_status): r.n_orders
-            for r in spark.table(name).collect()
-        }
-        st = spark.read.format("statestore").load(chk)
-        # state-row field names are the operator's internal buffer names;
-        # access positionally (key = the grouping tuple, value = the one
-        # sum buffer)
-        state = {
-            (r.key[0], r.key[1]): r.value[0] for r in st.collect()
-        }
+    raw = cdc.topic_db_json(spark, SF_SMOKE, only=["order_info"])
+    _write_replay(raw, str(tmp_path / "in"), order_by=None)
+    ev = cdc.parse_topic_db(read_stream(spark, str(tmp_path / "in")))
+    deltas = dws.order_status_count_deltas(ev)
+    agg = deltas.groupBy("province_id", "order_status").agg(
+        F.sum("delta").cast("bigint").alias("n_orders")
+    )
+    chk = str(tmp_path / "chk")
+    name = "statestore_probe"
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(600)
+    out = {
+        (r.province_id, r.order_status): r.n_orders
+        for r in spark.table(name).collect()
+    }
+    st = spark.read.format("statestore").load(chk)
+    # state-row field names are the operator's internal buffer names;
+    # access positionally (key = the grouping tuple, value = the one
+    # sum buffer)
+    state = {
+        (r.key[0], r.key[1]): r.value[0] for r in st.collect()
+    }
     assert state == out and len(state) > 0
     n_parts = st.select("partition_id").distinct().count()
     assert n_parts > 1, "keyed state should spread across partitions"

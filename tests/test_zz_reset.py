@@ -5,6 +5,7 @@ only add wall time)."""
 from __future__ import annotations
 
 import os
+import tempfile
 
 from flink_realtime_datawarehouse_v3_spark import api, session
 from flink_realtime_datawarehouse_v3_spark.operators import simsearch
@@ -61,3 +62,24 @@ def test_unpersist_orphans_boundary(spark):
     api.unpersist_orphans()
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
     assert api.QUERIES["dedup_exact"](spark, SF_SMOKE).count() > 0
+
+
+def test_scratch_dirs_removed_by_reset(spark, monkeypatch, tmp_path):
+    """Scratch output lives under one root in tempfile's directory, and a
+    reset deletes it: two scratch_dir calls give two distinct empty
+    directories under one root, and after a sink round trip and a reset
+    nothing new is left in the temp directory."""
+    session.reset_session_tables()
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    a, b = session.scratch_dir(spark, "t"), session.scratch_dir(spark, "t")
+    assert a != b and os.path.dirname(a) == os.path.dirname(b)
+    assert os.path.dirname(os.path.dirname(a)) == str(tmp)
+    assert os.listdir(a) == [] and os.listdir(b) == []
+    assert api.QUERIES["sink_corpus_csv_roundtrip"](spark, SF_SMOKE).count() > 0
+
+    session.reset_session_tables()
+    assert not os.path.exists(a) and not os.path.exists(b)
+    assert os.listdir(tmp) == []

@@ -137,8 +137,8 @@ def run_sweep(
         rec: dict = {}
         try:
             sdf = fn(spark, sf_dir)
-            # streaming_* entries return an already-executed memory-sink /
-            # checkpoint scan — no meaningful batch plan to fingerprint.
+            # streaming_* entries return a read of an already-executed
+            # query's sink — no meaningful batch plan to fingerprint.
             if not name.startswith("streaming_"):
                 rec["plan_fp"] = plan_fingerprint(sdf)
             spdf = sdf.toPandas()

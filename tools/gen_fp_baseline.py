@@ -40,7 +40,7 @@ def main() -> None:
     fps = {}
     for name in api.QUERIES:
         if name.startswith("streaming_"):
-            continue  # replay entries return a memory-sink scan: no plan
+            continue  # replay entries return a sink read: no plan
         fps[name] = planfp.fingerprint(api.QUERIES[name](spark, sf_dir))
     json.dump({"sf_dir": sf_dir, "fingerprints": fps}, open(OUT, "w"), indent=1)
     print(f"wrote {OUT}: {len(fps)} fingerprints at {sf_dir}")
